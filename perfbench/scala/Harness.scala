@@ -318,8 +318,8 @@ class EsAppendRestore(run: Run) extends Workload {
   import run._
   val Generations = 6
   val warmups = 1
-  val PerGen = 40000L
-  val Shards = 32
+  val PerGen = 20000L
+  val Shards = 16
   val Keep = 2
   val Wanted = 32
   private val out = "es_append_repo"

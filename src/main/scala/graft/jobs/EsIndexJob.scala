@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 import graft.core.ShardConfig
 import graft.sinks.EsSnapshot
+import graft.sinks.essnapshot.SnapshotLayout
 import graft.sources.Ingest
 
 /**
@@ -65,17 +66,19 @@ object EsIndexJob {
     // INDEXING_DOC_FAIL counter next to the sink's _SUMMARY.json — silent
     // drops become a visible number in the committed snapshot
     val m = ingestObs.get
-    val body = graft.sinks.essnapshot.SnapshotLayout.jsonObj(
+    val body = SnapshotLayout.jsonObj(
       "input_docs" -> m("input_docs").toString,
       "rejected_docs" -> m("rejected_docs").toString,
-      "mode" -> graft.sinks.essnapshot.SnapshotLayout.jsonStr(
+      "mode" -> SnapshotLayout.jsonStr(
         if (args.failFast) "failfast" else "permissive"))
     val p = new org.apache.hadoop.fs.Path(args.dest, "_INGEST.json")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(p, true)
     try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
-    EsSnapshot.readManifest(spark, args.dest).count()
+    // populated shards = manifest lines; a small driver-side read, no job
+    Ingest.readConfigFile(spark, s"${args.dest}/${SnapshotLayout.ManifestFile}")
+      .linesIterator.count(_.nonEmpty).toLong
   }
 
   def main(argv: Array[String]): Unit = {

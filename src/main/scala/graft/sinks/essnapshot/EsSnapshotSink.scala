@@ -20,6 +20,7 @@ import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
 import graft.core.ShardConfig
@@ -424,8 +425,9 @@ class EsSnapshotBatchWrite(schema: StructType, dest: String,
       SnapshotLayout.generationJson(mergedSnapshots, mergedIndices))
     write(new Path(destPath, SnapshotLayout.IndexLatest),
       SnapshotLayout.indexLatestBytes(newGen))
+    // one line per populated shard; no populated shard → an empty file
     writeStr(new Path(destPath, SnapshotLayout.ManifestFile),
-      manifest.sorted.mkString("", "\n", "\n"))
+      manifest.sorted.map(_ + "\n").mkString)
 
     // JOB_COUNTER-equivalent metrics (BaseESReducer.java:60-62).
     writeStr(new Path(destPath, SnapshotLayout.SummaryFile),
@@ -468,6 +470,13 @@ class ShardDocWriterFactory(schema: StructType, dest: String,
  * Mirrors the reducer's batching intent (BaseESReducer.java:255-266): the
  * buffered+gzip stream flushes by size; counters time the indexing (append)
  * and flushing (close) phases separately.
+ *
+ * Hot path: the 64 KB buffer sits IN FRONT of the deflater, so gzip sees
+ * whole blocks (one deflate + CRC call per 64 KB, not one per doc and one
+ * per newline); payloads go to that buffer through `UTF8String.writeTo`
+ * (no `getBytes` copy when the row sits in a byte array), and the
+ * shard-change test compares the row's `index` bytes without decoding a
+ * String.
  */
 class ShardDocWriter(schema: StructType, dest: String, conf: Configuration,
                      partitionId: Int, taskId: Long, batchBytes: Long,
@@ -486,26 +495,28 @@ class ShardDocWriter(schema: StructType, dest: String, conf: Configuration,
       extends GZIPOutputStream(o, 64 * 1024) { `def`.setLevel(level) }
 
   private final class ShardStream(val index: String, val shard: Int, seq: Int) {
+    val indexKey: UTF8String = UTF8String.fromString(index)
     // seq guards the (engine-violated-ordering) case where a group is
     // revisited after its stream closed: a fresh file, never an overwrite
     val fileName: String = SnapshotLayout.dataFile(s"$writerUuid-$seq", gzip)
     val path = new Path(SnapshotLayout.shardDir(dest, index, shard), fileName)
     private val fs = path.getFileSystem(conf)
     val out: OutputStream = {
-      val base = new BufferedOutputStream(fs.create(path, true), 64 * 1024)
-      if (gzip) new LeveledGzip(base, gzipLevel) else base
+      val file = fs.create(path, true)
+      new BufferedOutputStream(
+        if (gzip) new LeveledGzip(file, gzipLevel) else file, 64 * 1024)
     }
     var docCount = 0L
     var bytes = 0L
     var indexingNanos = 0L
     var flushNanos = 0L
 
-    def append(json: Array[Byte]): Unit = {
+    def append(json: UTF8String): Unit = {
       val t0 = System.nanoTime()
-      out.write(json)
+      json.writeTo(out)
       out.write('\n')
       docCount += 1
-      bytes += json.length + 1
+      bytes += json.numBytes + 1
       indexingNanos += System.nanoTime() - t0
     }
     def finish(): ShardFileCommit = {
@@ -549,16 +560,16 @@ class ShardDocWriter(schema: StructType, dest: String, conf: Configuration,
       (batchDocs > 0 && s.docCount >= batchDocs)
 
   override def write(record: InternalRow): Unit = {
-    val index = record.getUTF8String(iIndex).toString
+    val index = record.getUTF8String(iIndex)
     val shard = record.getInt(iShard)
     val stream =
-      if (current != null && current.shard == shard && current.index == index) {
+      if (current != null && current.shard == shard && current.indexKey == index) {
         // bounded data files: roll at the bytes/docs flush threshold (the
         // reference's bulk-size knobs); every rolled file is committed and
         // listed in the shard's snap manifest
-        if (thresholdHit(current)) roll(index, shard) else current
-      } else roll(index, shard)
-    stream.append(record.getUTF8String(iJson).getBytes)
+        if (thresholdHit(current)) roll(current.index, shard) else current
+      } else roll(index.toString, shard)
+    stream.append(record.getUTF8String(iJson))
   }
 
   override def commit(): WriterCommitMessage = {

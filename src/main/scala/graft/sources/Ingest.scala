@@ -15,7 +15,8 @@ import graft.functions.EsHash
  * string end-to-end, reference: src/main/java/com/simondata/example/
  * IndexingMapperImpl.java:48-58), [[ndjsonRaw]] preserves the raw line so
  * the sink writes byte-exact payloads; only the document id is ever parsed
- * out, via `get_json_object` which Catalyst pushes into one pass.
+ * out, by one `get_json_object` per row whose result every later column
+ * reads (see [[Ingest.toIndexable]]).
  */
 object Ingest {
 
@@ -69,28 +70,15 @@ object Ingest {
    *                    (reference: README.md:44-45)
    * @param failFast    true → any row without an extractable doc id kills
    *                    the job (the reference's behavior)
+   *
+   * Without [[toIndexableObserved]]'s metrics node, Catalyst may push the
+   * null filter below the parse and evaluate the id more than once per row;
+   * hot paths use the observed form.
    */
   def toIndexable(df: DataFrame, indexName: String, docIdField: String,
                   numShards: Int, jsonCol: String = "json",
-                  failFast: Boolean = false): Dataset[IndexableDoc] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val extracted = get_json_object(col(jsonCol), s"$$.$docIdField")
-    val docId =
-      if (failFast)
-        when(extracted.isNull, raise_error(concat(
-          lit(s"INDEXING_DOC_FAIL: no '$docIdField' in document: "),
-          coalesce(col(jsonCol), lit("<null>"))))).otherwise(extracted)
-      else extracted
-    df.select(
-        lit(indexName).as("index"),
-        docId.as("docId"),
-        EsHash.esRouting(docId, numShards).as("routing"),
-        EsHash.esShard(docId, numShards).as("shard"),
-        col(jsonCol).as("json"))
-      .filter(col("docId").isNotNull && col("json").isNotNull) // P4
-      .as[IndexableDoc]
-  }
+                  failFast: Boolean = false): Dataset[IndexableDoc] =
+    envelope(df, indexName, docIdField, numShards, jsonCol, failFast, None)
 
   /**
    * [[toIndexable]] plus the reference's job counters
@@ -106,12 +94,44 @@ object Ingest {
   : (Dataset[IndexableDoc], org.apache.spark.sql.Observation) = {
     val obs = org.apache.spark.sql.Observation(
       s"graft_ingest_${java.util.UUID.randomUUID()}")
-    val rejected = get_json_object(col(jsonCol), s"$$.$docIdField").isNull ||
-      col(jsonCol).isNull
-    val observed = df.observe(obs,
+    (envelope(df, indexName, docIdField, numShards, jsonCol, failFast, Some(obs)), obs)
+  }
+
+  /**
+   * The one body behind [[toIndexable]] and [[toIndexableObserved]]: the id
+   * is parsed once, in a projection of (`docId`, `json`), and the counters,
+   * the null filter and the routing columns all read that `docId` column.
+   * With an observation, its `CollectMetrics` node also keeps the filter
+   * above the parse: Catalyst cannot push a predicate through it, so it
+   * never re-inlines `get_json_object` into the filter.
+   */
+  private def envelope(df: DataFrame, indexName: String, docIdField: String,
+                       numShards: Int, jsonCol: String, failFast: Boolean,
+                       obs: Option[org.apache.spark.sql.Observation])
+  : Dataset[IndexableDoc] = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    val json = col(jsonCol)
+    val extracted = get_json_object(json, s"$$.$docIdField")
+    val docId =
+      if (failFast)
+        coalesce(extracted, raise_error(concat(
+          lit(s"INDEXING_DOC_FAIL: no '$docIdField' in document: "),
+          coalesce(json, lit("<null>")))))
+      else extracted
+    val parsed = df.select(docId.as("docId"), json.as("json"))
+    val valid = col("docId").isNotNull && col("json").isNotNull // P4
+    val observed = obs.fold(parsed)(o => parsed.observe(o,
       count(lit(1)).as("input_docs"),
-      sum(when(rejected, 1L).otherwise(0L)).as("rejected_docs"))
-    (toIndexable(observed, indexName, docIdField, numShards, jsonCol, failFast), obs)
+      count_if(!valid).as("rejected_docs")))
+    observed.filter(valid)
+      .select(
+        lit(indexName).as("index"),
+        col("docId"),
+        EsHash.esRouting(col("docId"), numShards).as("routing"),
+        EsHash.esShard(col("docId"), numShards).as("shard"),
+        col("json"))
+      .as[IndexableDoc]
   }
 
   /** Envelope for already-columnar data: any DataFrame + an id column

@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,6 +17,12 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  /** Runs `f` on a fresh temp dir and deletes the dir after, pass or fail. */
+  def withTempDir[T](prefix: String)(f: Path => T): T = {
+    val dir = Files.createTempDirectory(prefix)
+    try f(dir) finally FileUtils.deleteDirectory(dir.toFile)
+  }
 
   override protected def afterAll(): Unit = {
     // Session is shared across suites in one JVM; don't stop it here or a

@@ -57,4 +57,21 @@ class EsIndexJobSpec extends SparkSpec {
     assert(ingest.contains("\"rejected_docs\":0"))
     assert(ingest.contains("permissive"))
   }
+
+  test("no populated shard: run returns 0 and the manifest reads back empty") {
+    // every line lacks the id field (all rejected), or there is no line
+    val inputs = Seq((0 until 20).map(i => s"""{"v":$i}"""), Seq.empty[String])
+    for (lines <- inputs) withTempDir("graft-job-unpopulated") { dir =>
+      val src = Files.createDirectory(dir.resolve("src"))
+      Files.writeString(src.resolve("in.json"), lines.mkString("\n"))
+      val dest = dir.resolve("snap").toString
+      val args = EsIndexJob.parse(Array(src.toString, dest, "docs", "cid", "4"))
+      assert(EsIndexJob.run(spark, args) === 0L)
+      // an empty manifest, not one blank line that splits into one field
+      assert(EsSnapshot.readManifest(spark, dest).collect().isEmpty)
+      val ingest = Files.readString(java.nio.file.Paths.get(dest, "_INGEST.json"))
+      assert(ingest.contains(s""""input_docs":${lines.size}"""), ingest)
+      assert(ingest.contains(s""""rejected_docs":${lines.size}"""), ingest)
+    }
+  }
 }

@@ -1,6 +1,7 @@
 package graft.sinks
 
 import java.io.{BufferedReader, InputStreamReader}
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path => JPath, Paths}
 import java.util.zip.GZIPInputStream
 
@@ -167,6 +168,31 @@ class EsSnapshotSinkSpec extends SparkSpec {
       .map(_.getFileName.toString).filter(_.startsWith("docs-")).toList
     assert(gzFiles.nonEmpty && gzFiles.forall(_.endsWith(".ndjson.gz")))
     assert(EsSnapshot.readTable(spark, tight).count() === 200)
+  }
+
+  test("multi-byte UTF-8 payloads round-trip byte-exact; bytes_written counts UTF-8 bytes") {
+    import spark.implicits._
+    val numShards = 4
+    // 2-, 3- and 4-byte UTF-8 sequences in every payload
+    val payloads = (0 until 40).map(i =>
+      s"""{"id":"d$i","t":"café ${"日本語" * (i % 3)} 😀 $i"}""")
+    val expectedBytes = payloads.map(_.getBytes(UTF_8).length + 1L).sum
+    val docs = Ingest.toIndexable(
+      payloads.toDF("json"), "intl", "id", numShards)
+    for (codec <- Seq("gzip", "none")) withTempDir(s"graft-snap-utf8-$codec") { dir =>
+      val dest = dir.toString
+      // 2-doc rolls close many files through the writer's buffer
+      EsSnapshot.write(docs, dest, ShardConfig(numShards),
+        options = Map("compression" -> codec, "batch.docs" -> "2"))
+      val back = EsSnapshot.readTable(spark, dest).select("json")
+        .collect().map(_.getString(0))
+      assert(back.sorted.map(_.getBytes(UTF_8).toSeq) ===
+        payloads.sorted.map(_.getBytes(UTF_8).toSeq), s"$codec payloads differ")
+      val summary = Files.readString(Paths.get(dest, SnapshotLayout.SummaryFile))
+      assert(summary.contains(s""""bytes_written":$expectedBytes"""), summary)
+      val files = """"writer_files":(\d+)""".r.findFirstMatchIn(summary).get.group(1).toInt
+      assert(files >= payloads.size / 2, s"$codec: only $files files for 2-doc rolls")
+    }
   }
 
   test("many shards on tiny data: empty shards backfilled, none populated twice") {

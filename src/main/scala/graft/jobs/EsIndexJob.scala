@@ -1,5 +1,8 @@
 package graft.jobs
 
+import java.nio.charset.StandardCharsets
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 import graft.core.ShardConfig
@@ -71,13 +74,11 @@ object EsIndexJob {
       "rejected_docs" -> m("rejected_docs").toString,
       "mode" -> SnapshotLayout.jsonStr(
         if (args.failFast) "failfast" else "permissive"))
-    val p = new org.apache.hadoop.fs.Path(args.dest, "_INGEST.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    val fs = new Path(args.dest).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    SnapshotLayout.writeBytes(fs, new Path(args.dest, "_INGEST.json"),
+      body.getBytes(StandardCharsets.UTF_8))
     // populated shards = manifest lines; a small driver-side read, no job
-    Ingest.readConfigFile(spark, s"${args.dest}/${SnapshotLayout.ManifestFile}")
+    SnapshotLayout.readString(fs, new Path(args.dest, SnapshotLayout.ManifestFile))
       .linesIterator.count(_.nonEmpty).toLong
   }
 

@@ -1,9 +1,11 @@
 package graft.sinks
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 import graft.core.{IndexableDoc, ShardConfig}
-import graft.sinks.essnapshot.EsSnapshotSink
+import graft.sinks.essnapshot.{EsSnapshotSink, SnapshotLayout}
+import graft.sinks.essnapshot.SnapshotLayout.RepoState
 
 /** User-facing facade over the `es-snapshot` DSv2 sink. */
 object EsSnapshot {
@@ -47,22 +49,6 @@ object EsSnapshot {
     r.load(dest)
   }
 
-  /** Read a committed snapshot's documents back: one row per document with
-    * its shard provenance — the verification/restore path (a real ES
-    * restore would replay these into a live cluster; layout mode makes the
-    * payloads directly scannable instead). */
-  def readDocs(spark: SparkSession, dest: String, indexName: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val indexDir = s"$dest/indices/${graft.sinks.essnapshot.SnapshotLayout.indexId(indexName)}"
-    spark.read
-      .option("pathGlobFilter", "docs-*.ndjson*") // .ndjson or .ndjson.gz
-      .option("recursiveFileLookup", "true")
-      .text(indexDir)
-      .withColumn("shard",
-        regexp_extract(input_file_name(), "/(\\d+)/docs-", 1).cast("int"))
-      .select(col("value").as("json"), col("shard"))
-  }
-
   /**
    * Delete one snapshot from a repo (ES delete-snapshot semantics): the
    * snapshot disappears from a NEW generation, its metadata files go, and
@@ -72,137 +58,91 @@ object EsSnapshot {
    */
   def deleteSnapshot(spark: SparkSession, dest: String,
                      nameOrUuid: String): Boolean = {
-    import graft.sinks.essnapshot.SnapshotLayout
-    import org.apache.hadoop.fs.Path
-    val conf = spark.sparkContext.hadoopConfiguration
-    val destPath = new Path(dest)
-    val fs = destPath.getFileSystem(conf)
-    def readStr(p: Path): String = {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    }
-    def readBytes(p: Path): Array[Byte] = SnapshotLayout.readBytes(fs, p)
-    def writeStr(p: Path, body: String): Unit = {
-      val out = fs.create(p, true)
-      try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
-
-    val latestPath = new Path(destPath, SnapshotLayout.IndexLatest)
-    if (!fs.exists(latestPath)) return false
-    val gen = {
-      val in = fs.open(latestPath)
-      val buf = new Array[Byte](8)
-      try { in.readFully(buf); SnapshotLayout.parseIndexLatest(buf) }
-      finally in.close()
-    }
-    val genPath = new Path(destPath, SnapshotLayout.generationFile(gen))
-    if (!fs.exists(genPath)) return false
-    val body = readStr(genPath)
-    val snapshots = SnapshotLayout.parseGenerationSnapshots(body)
-    val victim = snapshots.reverse.find(_._1 == nameOrUuid)
-      .orElse(snapshots.find(_._2 == nameOrUuid))
-    victim match {
-      case None => false
-      case Some((_, uuid)) =>
-        val remaining = snapshots.filterNot(_._2 == uuid)
-        val indices = SnapshotLayout.parseGenerationIndices(body)
-        val newIndices = indices
-          .map { case (ix, uuids) => ix -> uuids.filterNot(_ == uuid) }
-          .filter(_._2.nonEmpty)
-        // publish the new generation FIRST (readers atomically stop seeing
-        // the victim), then garbage-collect its files
-        writeStr(new Path(destPath, SnapshotLayout.generationFile(gen + 1)),
-          SnapshotLayout.generationJson(remaining, newIndices))
-        val out = fs.create(latestPath, true)
-        try out.write(SnapshotLayout.indexLatestBytes(gen + 1))
-        finally out.close()
-
-        val survivingIds = newIndices.map { case (ix, _) =>
-          SnapshotLayout.indexId(ix) }.toSet
-        for ((ix, uuids) <- indices if uuids.contains(uuid)) {
-          val ixDir = new Path(SnapshotLayout.indicesDir(dest, ix))
-          if (fs.exists(ixDir)) {
-            if (!survivingIds.contains(SnapshotLayout.indexId(ix))) {
-              fs.delete(ixDir, true) // no snapshot carries this index now
-            } else {
-              fs.delete(new Path(ixDir, SnapshotLayout.metaDat(uuid)), false)
-              for (shardDir <- fs.listStatus(ixDir) if shardDir.isDirectory) {
-                val sd = shardDir.getPath
-                val snapDat = new Path(sd, SnapshotLayout.snapDat(uuid))
-                if (fs.exists(snapDat)) {
-                  // FAIL CLOSED: the ref-count sweep deletes a data file
-                  // only when it can PROVE no surviving snapshot references
-                  // it. A parse failure on any manifest — the victim's or a
-                  // survivor's — means that proof is unavailable, so data
-                  // files in this shard dir are left in place (an orphan
-                  // leak, recoverable) rather than garbage-collected (data
-                  // loss for every snapshot the corrupt manifest covers).
-                  val proof = try {
-                    val mine = SnapshotLayout.parseShardSnapFiles(readBytes(snapDat))
-                    val referenced = fs.listStatus(sd).map(_.getPath)
-                      .filter(p => p.getName.startsWith("snap-") &&
-                        p.getName != SnapshotLayout.snapDat(uuid))
-                      .flatMap(p => SnapshotLayout.parseShardSnapFiles(readBytes(p)))
-                      .toSet
-                    Some((mine, referenced))
-                  } catch { case _: Exception => None }
-                  proof.foreach { case (mine, referenced) =>
-                    mine.filterNot(referenced.contains)
-                      .foreach(f => fs.delete(new Path(sd, f), false))
-                  }
-                  fs.delete(snapDat, false)
-                }
-              }
-            }
-          }
-        }
-        fs.delete(new Path(destPath, SnapshotLayout.snapDat(uuid)), false)
-        fs.delete(new Path(destPath, SnapshotLayout.metaDat(uuid)), false)
-        true
-    }
+    val fs = repoFs(spark, dest)
+    val found = SnapshotLayout.readRepo(fs, dest)
+      .flatMap(state => state.resolve(nameOrUuid).map(state -> _))
+    found.foreach { case (state, uuid) => dropSnapshots(fs, dest, state, Set(uuid)) }
+    found.isDefined
   }
 
   /**
    * Compact a snapshot repo to its `keep` most recent snapshots: older
-   * snapshots go through [[deleteSnapshot]]'s reference-counted GC (data
-   * files shared with a surviving snapshot are kept), then the metadata
-   * chain is collapsed — superseded `index-N` generation files are pruned
-   * so the repo's metadata footprint is O(keep), not O(total writes).
+   * snapshots are dropped together, with [[deleteSnapshot]]'s
+   * reference-counted GC (data files shared with a surviving snapshot are
+   * kept) and one new generation, then the metadata chain is collapsed —
+   * superseded `index-N` generation files are pruned so the repo's
+   * metadata footprint is O(keep), not O(total writes).
    * The retention policy every long-lived repo needs (a streaming
    * `streamToSnapshots` repo grows one snapshot per micro-batch).
    * Returns the number of snapshots removed.
    */
   def compactRepo(spark: SparkSession, dest: String, keep: Int = 1): Int = {
     require(keep >= 1, "keep must be >= 1")
-    import graft.sinks.essnapshot.SnapshotLayout
-    import org.apache.hadoop.fs.Path
-    val conf = spark.sparkContext.hadoopConfiguration
-    val destPath = new Path(dest)
-    val fs = destPath.getFileSystem(conf)
-    val latestPath = new Path(destPath, SnapshotLayout.IndexLatest)
-    if (!fs.exists(latestPath)) return 0
-    def currentGen(): Long = {
-      val in = fs.open(latestPath)
-      val buf = new Array[Byte](8)
-      try { in.readFully(buf); SnapshotLayout.parseIndexLatest(buf) }
-      finally in.close()
+    val fs = repoFs(spark, dest)
+    SnapshotLayout.readRepo(fs, dest).fold(0) { state =>
+      // generation order is append order: oldest first
+      val victims = state.snapshots.dropRight(keep).map(_._2).toSet
+      val live = if (victims.isEmpty) state else dropSnapshots(fs, dest, state, victims)
+      fs.listStatus(new Path(dest)).map(_.getPath)
+        .filter(p => live.supersedes(p.getName))
+        .foreach(fs.delete(_, false))
+      victims.size
     }
-    val genPath = new Path(destPath, SnapshotLayout.generationFile(currentGen()))
-    if (!fs.exists(genPath)) return 0
-    val body = {
-      val in = fs.open(genPath)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+  }
+
+  private def repoFs(spark: SparkSession, dest: String): FileSystem =
+    new Path(dest).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Publishes `state` without the `victims` snapshots (readers atomically
+    * stop seeing them), then garbage-collects their files: one
+    * reference-counted pass per shard dir. Returns the published state. */
+  private def dropSnapshots(fs: FileSystem, dest: String, state: RepoState,
+                            victims: Set[String]): RepoState = {
+    val next = state.minus(victims)
+    SnapshotLayout.publishRepo(fs, dest, next)
+    val surviving = next.indices.map(_._1).toSet
+    for ((ix, uuids) <- state.indices if uuids.exists(victims)) {
+      val ixDir = new Path(SnapshotLayout.indicesDir(dest, ix))
+      if (!surviving(ix)) fs.delete(ixDir, true) // no snapshot carries this index now
+      else {
+        uuids.filter(victims)
+          .foreach(u => fs.delete(new Path(ixDir, SnapshotLayout.metaDat(u)), false))
+        for (shardDir <- fs.listStatus(ixDir) if shardDir.isDirectory)
+          collectShard(fs, shardDir.getPath, victims.map(SnapshotLayout.snapDat))
+      }
     }
-    // generation order is append order: oldest first
-    val victims = SnapshotLayout.parseGenerationSnapshots(body).dropRight(keep)
-    victims.foreach { case (_, uuid) => deleteSnapshot(spark, dest, uuid) }
-    // each delete published a new generation; sweep every superseded one
-    val live = SnapshotLayout.generationFile(currentGen())
-    fs.listStatus(destPath).map(_.getPath)
-      .filter { p => p.getName.startsWith("index-") && p.getName != live }
-      .foreach(p => fs.delete(p, false))
-    victims.size
+    victims.foreach { u =>
+      fs.delete(new Path(dest, SnapshotLayout.snapDat(u)), false)
+      fs.delete(new Path(dest, SnapshotLayout.metaDat(u)), false)
+    }
+    next
+  }
+
+  /** Deletes the victims' manifests in one shard dir, and each data file
+    * they list that no other manifest there lists. Reads each manifest
+    * once. */
+  private def collectShard(fs: FileSystem, dir: Path, victimDats: Set[String]): Unit = {
+    val (mine, others) = fs.listStatus(dir).map(_.getPath)
+      .filter(_.getName.startsWith("snap-"))
+      .partition(p => victimDats(p.getName))
+    if (mine.nonEmpty) {
+      def files(p: Path): Option[Seq[String]] =
+        try Some(SnapshotLayout.parseShardSnapFiles(SnapshotLayout.readBytes(fs, p)))
+        catch { case _: Exception => None }
+      // FAIL CLOSED: a data file goes only when it is PROVEN that no
+      // surviving snapshot references it. A surviving manifest that fails
+      // to parse leaves that proof unavailable, so this shard dir keeps
+      // every data file (an orphan leak, recoverable) rather than losing
+      // one the corrupt manifest covers (data loss). A victim manifest
+      // that fails to parse names no files, so none of its files go.
+      val referenced = others.map(files)
+      if (referenced.forall(_.isDefined)) {
+        val keep = referenced.flatMap(_.get).toSet
+        mine.flatMap(files(_).getOrElse(Seq.empty)).distinct.filterNot(keep)
+          .foreach(f => fs.delete(new Path(dir, f), false))
+      }
+      mine.foreach(fs.delete(_, false))
+    }
   }
 
   /** The committed manifest, one row per populated shard:

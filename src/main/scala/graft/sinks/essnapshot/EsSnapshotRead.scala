@@ -3,8 +3,6 @@ package graft.sinks.essnapshot
 import java.io.{BufferedReader, InputStreamReader}
 import java.util.zip.GZIPInputStream
 
-import scala.collection.mutable
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read._
@@ -76,34 +74,20 @@ class EsSnapshotScan(dest: String, conf: SerializableConfiguration,
     case _ => true
   }
 
-  private def indexAdmitted(indexId: String): Boolean = true // resolved below
-
+  /** One partition per populated shard of the wanted snapshot: the
+    * repo's live generation names the snapshot and the indexes it
+    * contains, and each shard's `snap-<uuid>.dat` lists exactly the data
+    * files to read. A repo with no generation, or no snapshot in it,
+    * reads as empty; a selector that names no snapshot fails. */
   override def planInputPartitions(): Array[InputPartition] = {
     val fs = new Path(dest).getFileSystem(conf.value)
-    val indicesDir = new Path(dest, "indices")
-    if (!fs.exists(indicesDir)) return Array.empty
-    def readStr(p: Path): String = {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    }
-    def readBytes(p: Path): Array[Byte] = SnapshotLayout.readBytes(fs, p)
-    // live generation via index.latest (BaseTransport.java:169-179), like
-    // a restore does; fall back to index-0 for hand-built layouts
-    val latest = new Path(dest, SnapshotLayout.IndexLatest)
-    val genN: Long =
-      if (fs.exists(latest)) {
-        val in = fs.open(latest)
-        val buf = new Array[Byte](8)
-        try { in.readFully(buf); SnapshotLayout.parseIndexLatest(buf) }
-        catch { case _: Exception => 0L } finally in.close()
-      } else 0L
-    val gen = new Path(dest, SnapshotLayout.generationFile(genN))
-    val genBody = if (fs.exists(gen)) readStr(gen) else ""
-    // snapshot selection: by name (latest with that name) or uuid;
-    // default = the repo's most recent snapshot
-    val known = SnapshotLayout.parseGenerationSnapshots(genBody)
+    val repo = SnapshotLayout.readRepo(fs, dest)
+    val known = repo.fold(Seq.empty[(String, String)])(_.snapshots)
+    // by name (the newest with that name) or uuid; default = the newest
     val wantedUuid: Option[String] = snapshot match {
-      case Some(sel) => known.reverse.find(_._1 == sel).map(_._2).orElse(Some(sel))
+      case Some(sel) => Some(repo.flatMap(_.resolve(sel)).getOrElse(
+        throw new IllegalArgumentException(s"no snapshot '$sel' in $dest; " +
+          s"known: ${known.map(_._1).mkString("[", ", ", "]")}")))
       case None => known.lastOption.map(_._2)
     }
     val nameFilterAdmits: String => Boolean = {
@@ -113,35 +97,21 @@ class EsSnapshotScan(dest: String, conf: SerializableConfiguration,
       }.reduceOption(_ intersect _)
       name => wanted.forall(_.contains(name))
     }
-    val parts = mutable.ArrayBuffer.empty[InputPartition]
-    for (ixDir <- fs.listStatus(indicesDir) if ixDir.isDirectory) {
-      val indexId = ixDir.getPath.getName
-      // recover the index name from the generation JSON (id appears once)
-      val name = ("\"([^\"]+)\":\\{\"id\":\"" + java.util.regex.Pattern.quote(indexId) + "\"").r
-        .findFirstMatchIn(genBody).map(_.group(1)).getOrElse(indexId)
-      if (nameFilterAdmits(name)) {
-        for (shardDir <- fs.listStatus(ixDir.getPath) if shardDir.isDirectory) {
-          val shard = shardDir.getPath.getName.toIntOption.getOrElse(-1)
-          if (shard >= 0 && shardAdmitted(shard)) {
-            // snapshot-scoped file set from the shard's snap manifest (the
-            // restore unit); fall back to all data files when no manifest
-            // exists (hand-built layouts)
-            val manifested: Option[Set[String]] = wantedUuid.flatMap { uuid =>
-              val snapDat = new Path(shardDir.getPath, SnapshotLayout.snapDat(uuid))
-              if (fs.exists(snapDat))
-                Some(SnapshotLayout.parseShardSnapFiles(readBytes(snapDat)).toSet)
-              else None
-            }
-            val files = fs.listStatus(shardDir.getPath)
-              .filter(_.getPath.getName.startsWith("docs-"))
-              .filter(f => manifested.forall(_.contains(f.getPath.getName)))
-              .map(_.getPath.toString).toSeq
-            if (files.nonEmpty) parts += ShardInputPartition(name, shard, files)
-          }
-        }
-      }
-    }
-    parts.toArray
+    (for {
+      state <- repo.toSeq
+      uuid <- wantedUuid.toSeq
+      name <- state.indexesOf(uuid) if nameFilterAdmits(name)
+      shardDir <- fs.listStatus(new Path(SnapshotLayout.indicesDir(dest, name)))
+      shard = shardDir.getPath.getName.toIntOption.getOrElse(-1)
+      if shardDir.isDirectory && shard >= 0 && shardAdmitted(shard)
+      // a shard dir without this snapshot's manifest is beyond the
+      // snapshot's shard count for the index: it holds none of its data
+      snapDat = new Path(shardDir.getPath, SnapshotLayout.snapDat(uuid))
+      if fs.exists(snapDat)
+      files = SnapshotLayout.parseShardSnapFiles(SnapshotLayout.readBytes(fs, snapDat))
+      if files.nonEmpty
+    } yield ShardInputPartition(name, shard,
+      files.map(f => new Path(shardDir.getPath, f).toString))).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

@@ -266,40 +266,17 @@ class EsSnapshotBatchWrite(schema: StructType, dest: String,
     val byIndex = commits.groupBy(_.index)
     val indexes = byIndex.keys.toSeq.sorted
 
-    def write(path: Path, body: Array[Byte]): Unit = {
-      val out = fs.create(path, true)
-      try out.write(body) finally out.close()
-    }
-    def writeStr(path: Path, body: String): Unit = write(path, body.getBytes(UTF_8))
-    def readStr(path: Path): String = {
-      val in = fs.open(path)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    }
-    def readBytes(path: Path): Array[Byte] = SnapshotLayout.readBytes(fs, path)
-
     // Snapshot repos accumulate: read the live generation (if any), append
     // this snapshot, and publish generation N+1 — the reference's repo
     // shape, where index.latest names the authoritative index-N
     // (BaseTransport.java:169-179) and every snapshot stays restorable.
-    // Truncate mode (SaveMode.Overwrite) instead forgets history: prior
-    // generations' metadata is ignored here and their files swept below.
-    val latestPath = new Path(destPath, SnapshotLayout.IndexLatest)
-    val prevGen: Option[Long] =
-      if (!truncateRepo && fs.exists(latestPath)) {
-        val in = fs.open(latestPath)
-        val buf = new Array[Byte](8)
-        try { in.readFully(buf); Some(SnapshotLayout.parseIndexLatest(buf)) }
-        catch { case _: Exception => None } finally in.close()
-      } else None
-    val prevBody = prevGen
-      .map(g => new Path(destPath, SnapshotLayout.generationFile(g)))
-      .filter(fs.exists)
-      .map(readStr)
-    val prevSnapshots = prevBody.map(SnapshotLayout.parseGenerationSnapshots)
-      .getOrElse(Seq.empty)
-    val prevIndices = prevBody.map(SnapshotLayout.parseGenerationIndices)
-      .getOrElse(Seq.empty)
-    val newGen = prevGen.fold(0L)(_ + 1)
+    // An unreadable live generation fails the commit before it writes
+    // anything. Truncate mode (SaveMode.Overwrite) instead forgets
+    // history: prior generations are not read, and their files are swept
+    // below.
+    val next = (if (truncateRepo) None else SnapshotLayout.readRepo(fs, dest))
+      .getOrElse(SnapshotLayout.RepoState.Empty)
+      .plus(snapshotName, snapshotUuid, indexes)
 
     val manifest = new mutable.ArrayBuffer[String]
     var totalDocs = 0L
@@ -336,7 +313,8 @@ class EsSnapshotBatchWrite(schema: StructType, dest: String,
           if (truncateRepo) Some(Set.empty)
           else try Some(entries.map(_.getPath)
             .filter(_.getName.startsWith("snap-"))
-            .flatMap(p => SnapshotLayout.parseShardSnapFiles(readBytes(p)))
+            .flatMap(p =>
+              SnapshotLayout.parseShardSnapFiles(SnapshotLayout.readBytes(fs, p)))
             .toSet)
           catch { case _: Exception => None }
         priorManifested.foreach { prior =>
@@ -364,7 +342,8 @@ class EsSnapshotBatchWrite(schema: StructType, dest: String,
         // the reference achieves this by renaming every reducer's
         // snap-<reducerUUID>.dat to the base snapshot's uuid
         // (IndexingPostProcessor.java:195-216); here shards are born stitched.
-        write(new Path(dir, SnapshotLayout.snapDat(snapshotUuid)),
+        SnapshotLayout.writeBytes(fs,
+          new Path(dir, SnapshotLayout.snapDat(snapshotUuid)),
           SnapshotLayout.shardSnapDat(snapshotName, docs, bytes, fileLens))
         if (files.nonEmpty)
           manifest += SnapshotLayout.manifestLine(index, snapshotUuid, id)
@@ -373,8 +352,8 @@ class EsSnapshotBatchWrite(schema: StructType, dest: String,
       }
 
       totalShards += numShards
-      write(new Path(SnapshotLayout.indicesDir(dest, index),
-          SnapshotLayout.metaDat(snapshotUuid)),
+      SnapshotLayout.writeBytes(fs,
+        new Path(SnapshotLayout.indicesDir(dest, index), SnapshotLayout.metaDat(snapshotUuid)),
         SnapshotLayout.indexMetaDat(index, id, numShards,
           options.getOrElse(EsSnapshotSink.MappingsOption, "{}")))
     }
@@ -382,10 +361,12 @@ class EsSnapshotBatchWrite(schema: StructType, dest: String,
     // Root metadata (IndexingPostProcessor.java:144-193). The template —
     // cluster-level state in ES — lands in the root MetaData blob under
     // its name, as a real repo stores it.
-    write(new Path(destPath, SnapshotLayout.snapDat(snapshotUuid)),
+    SnapshotLayout.writeBytes(fs,
+      new Path(destPath, SnapshotLayout.snapDat(snapshotUuid)),
       SnapshotLayout.rootSnapDat(snapshotName, snapshotUuid, indexes,
         totalDocs, totalShards))
-    write(new Path(destPath, SnapshotLayout.metaDat(snapshotUuid)),
+    SnapshotLayout.writeBytes(fs,
+      new Path(destPath, SnapshotLayout.metaDat(snapshotUuid)),
       SnapshotLayout.rootMetaDat("graft",
         options.getOrElse(EsSnapshotSink.TemplateNameOption, "template_1"),
         options.getOrElse(EsSnapshotSink.TemplateOption, "{}")))
@@ -393,9 +374,8 @@ class EsSnapshotBatchWrite(schema: StructType, dest: String,
       // forget prior generations at the root: stale index-N pointers and
       // other snapshots' root/index metadata
       fs.listStatus(destPath).map(_.getPath.getName).foreach { n =>
-        val stale =
-          (n.startsWith("index-") && n != SnapshotLayout.generationFile(newGen)) ||
-            ((n.startsWith("snap-") || n.startsWith("meta-")) && !n.contains(snapshotUuid))
+        val stale = next.supersedes(n) ||
+          ((n.startsWith("snap-") || n.startsWith("meta-")) && !n.contains(snapshotUuid))
         if (stale) fs.delete(new Path(destPath, n), false)
       }
       for (index <- indexes) {
@@ -414,30 +394,21 @@ class EsSnapshotBatchWrite(schema: StructType, dest: String,
           .filterNot(d => keepIds.contains(d.getPath.getName))
           .foreach(d => fs.delete(d.getPath, true))
     }
-    val mergedSnapshots = prevSnapshots :+ (snapshotName, snapshotUuid)
-    val prevIndexMap = prevIndices.toMap
-    val mergedIndices = (prevIndexMap.keySet ++ indexes).toSeq.sorted.map { ix =>
-      val uuids = prevIndexMap.getOrElse(ix, Seq.empty) ++
-        (if (indexes.contains(ix)) Seq(snapshotUuid) else Seq.empty)
-      ix -> uuids
-    }
-    writeStr(new Path(destPath, SnapshotLayout.generationFile(newGen)),
-      SnapshotLayout.generationJson(mergedSnapshots, mergedIndices))
-    write(new Path(destPath, SnapshotLayout.IndexLatest),
-      SnapshotLayout.indexLatestBytes(newGen))
+    SnapshotLayout.publishRepo(fs, dest, next)
     // one line per populated shard; no populated shard → an empty file
-    writeStr(new Path(destPath, SnapshotLayout.ManifestFile),
-      manifest.sorted.map(_ + "\n").mkString)
+    SnapshotLayout.writeBytes(fs, new Path(destPath, SnapshotLayout.ManifestFile),
+      manifest.sorted.map(_ + "\n").mkString.getBytes(UTF_8))
 
     // JOB_COUNTER-equivalent metrics (BaseESReducer.java:60-62).
-    writeStr(new Path(destPath, SnapshotLayout.SummaryFile),
+    SnapshotLayout.writeBytes(fs,
+      new Path(destPath, SnapshotLayout.SummaryFile),
       SnapshotLayout.jsonObj(
         "snapshot_uuid" -> SnapshotLayout.jsonStr(snapshotUuid),
         "index_doc_created" -> totalDocs.toString,
         "bytes_written" -> commits.map(_.bytes).sum.toString,
         "time_spent_indexing_ms" -> commits.map(_.indexingMs).sum.toString,
         "time_spent_flushing_ms" -> commits.map(_.flushMs).sum.toString,
-        "writer_files" -> commits.length.toString))
+        "writer_files" -> commits.length.toString).getBytes(UTF_8))
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {

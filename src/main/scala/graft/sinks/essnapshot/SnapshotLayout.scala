@@ -1,11 +1,16 @@
 package graft.sinks.essnapshot
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.util.UUID
 
+import com.fasterxml.jackson.databind.JsonNode
+import org.apache.hadoop.fs.{FileSystem, Path}
+
 /**
- * Pure path/name builders and tiny JSON codecs for the emulated ES snapshot
- * repository layout (reference: src/main/java/com/simondata/elasticfreight/
- * transport/BaseTransport.java:69-115, 144-201, 329-335 and
+ * Path/name builders, tiny JSON codecs and the one reader/publisher of the
+ * live generation for the emulated ES snapshot repository layout
+ * (reference: src/main/java/com/simondata/elasticfreight/transport/
+ * BaseTransport.java:69-115, 144-201, 329-335 and
  * IndexingPostProcessor.java:144-246).
  *
  * Layout written by the sink:
@@ -29,6 +34,17 @@ import java.util.UUID
  * hard part #1); every orchestration step the reference performs (per-shard
  * snapshot, base-UUID stitching, missing-shard backfill, manifest merge) is
  * real.
+ *
+ * Repo state: [[readRepo]] is the one reader of the live generation
+ * (`index.latest` → `index-N`) and [[publishRepo]] its one writer; the
+ * commit, the scan, `deleteSnapshot` and `compactRepo` all go through
+ * them. A repo without `index.latest` reads as `None` (empty). An
+ * `index.latest` or `index-N` that cannot be read or parsed throws an
+ * `IllegalStateException` naming the file, so an append, a read or a GC
+ * stops before it acts on a guessed generation; only an `overwrite`
+ * write, which ignores prior state, still succeeds on such a repo.
+ * Publishing writes `index-N` first and `index.latest` last, so a failure
+ * between the two leaves readers on the previous generation.
  */
 object SnapshotLayout {
 
@@ -62,11 +78,90 @@ object SnapshotLayout {
 
   /** 8-byte big-endian generation, as the reference parses it
     * (BaseTransport.java:169-179). */
-  def indexLatestBytes(gen: Long): Array[Byte] =
+  private def indexLatestBytes(gen: Long): Array[Byte] =
     java.nio.ByteBuffer.allocate(8).putLong(gen).array()
 
   def parseIndexLatest(bytes: Array[Byte]): Long =
     java.nio.ByteBuffer.wrap(bytes).getLong
+
+  /** A repo's live generation: the number `gen` of its `index-<gen>` file,
+    * the (name, uuid) of each snapshot in commit order, and each index
+    * name with the uuids of the snapshots that contain it. */
+  final case class RepoState(gen: Long, snapshots: Seq[(String, String)],
+                             indices: Seq[(String, Seq[String])]) {
+
+    /** The uuid a selector names: the newest snapshot of that name, else
+      * the snapshot with that uuid. */
+    def resolve(nameOrUuid: String): Option[String] =
+      snapshots.reverse.find(_._1 == nameOrUuid)
+        .orElse(snapshots.find(_._2 == nameOrUuid)).map(_._2)
+
+    /** Names of the indexes snapshot `uuid` contains. */
+    def indexesOf(uuid: String): Seq[String] =
+      indices.collect { case (ix, uuids) if uuids.contains(uuid) => ix }
+
+    /** The next generation: this one plus snapshot (name, uuid) over `indexes`. */
+    def plus(name: String, uuid: String, indexes: Seq[String]): RepoState = {
+      val prior = indices.toMap
+      RepoState(gen + 1, snapshots :+ (name -> uuid),
+        (prior.keySet ++ indexes).toSeq.sorted.map { ix =>
+          ix -> (prior.getOrElse(ix, Seq.empty) ++
+            (if (indexes.contains(ix)) Seq(uuid) else Seq.empty))
+        })
+    }
+
+    /** The next generation: this one without the `victims` snapshots; an
+      * index no remaining snapshot contains drops out. */
+    def minus(victims: Set[String]): RepoState =
+      RepoState(gen + 1, snapshots.filterNot(s => victims(s._2)),
+        indices.map { case (ix, uuids) => ix -> uuids.filterNot(victims) }
+          .filter(_._2.nonEmpty))
+
+    /** True for an `index-N` file that is not this generation's. */
+    def supersedes(fileName: String): Boolean =
+      fileName.startsWith("index-") && fileName != generationFile(gen)
+  }
+
+  object RepoState {
+    /** A repo before its first commit: its first publish is generation 0. */
+    val Empty: RepoState = RepoState(-1L, Seq.empty, Seq.empty)
+  }
+
+  /** The live generation of the repo at `dest`, or `None` when it has no
+    * `index.latest`. An unreadable or unparseable `index.latest` or
+    * `index-N` throws an `IllegalStateException` that names the file. */
+  def readRepo(fs: FileSystem, dest: String): Option[RepoState] = {
+    val latest = new Path(dest, IndexLatest)
+    if (!fs.exists(latest)) None
+    else {
+      val gen = failNaming(latest) {
+        val bytes = readBytes(fs, latest)
+        require(bytes.length == 8, s"${bytes.length} bytes, not an 8-byte generation")
+        parseIndexLatest(bytes)
+      }
+      val genPath = new Path(dest, generationFile(gen))
+      Some(failNaming(genPath) {
+        val tree = mapper.readTree(readString(fs, genPath))
+        require(tree != null && tree.isObject, "not a JSON object")
+        RepoState(gen, snapshotsOf(tree), indicesOf(tree))
+      })
+    }
+  }
+
+  /** Publishes `state` as the repo's live generation: `index-N` first,
+    * then `index.latest`, so readers never see a pointer to a missing
+    * generation. */
+  def publishRepo(fs: FileSystem, dest: String, state: RepoState): Unit = {
+    writeBytes(fs, new Path(dest, generationFile(state.gen)),
+      generationJson(state.snapshots, state.indices).getBytes(UTF_8))
+    writeBytes(fs, new Path(dest, IndexLatest), indexLatestBytes(state.gen))
+  }
+
+  private def failNaming[T](file: Path)(body: => T): T =
+    try body catch {
+      case e: Exception => throw new IllegalStateException(
+        s"snapshot repo state file $file is unreadable: ${e.getMessage}", e)
+    }
 
   /** Manifest line per populated shard (reference: BaseESReducer.java:317-319). */
   def manifestLine(index: String, snapshotUuid: String, indexId: String): String =
@@ -94,8 +189,8 @@ object SnapshotLayout {
     * (id, containing-snapshot-uuids) map — the repo-level view a restore
     * reads (BaseTransport.java:186-201). Multi-snapshot: each commit
     * appends itself and rewrites the next generation. */
-  def generationJson(snapshots: Seq[(String, String)],
-                     indices: Seq[(String, Seq[String])]): String =
+  private def generationJson(snapshots: Seq[(String, String)],
+                             indices: Seq[(String, Seq[String])]): String =
     jsonObj(
       "snapshots" -> jsonArr(snapshots.map { case (name, uuid) =>
         jsonObj(
@@ -115,8 +210,14 @@ object SnapshotLayout {
   private def mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
   /** (name, uuid) per snapshot, in commit order. */
-  def parseGenerationSnapshots(body: String): Seq[(String, String)] = {
-    val t = mapper.readTree(body)
+  def parseGenerationSnapshots(body: String): Seq[(String, String)] =
+    snapshotsOf(mapper.readTree(body))
+
+  /** (indexName, snapshotUuids) per index. */
+  def parseGenerationIndices(body: String): Seq[(String, Seq[String])] =
+    indicesOf(mapper.readTree(body))
+
+  private def snapshotsOf(t: JsonNode): Seq[(String, String)] = {
     val arr = t.get("snapshots")
     if (arr == null || !arr.isArray) Seq.empty
     else (0 until arr.size()).map { i =>
@@ -124,9 +225,7 @@ object SnapshotLayout {
     }
   }
 
-  /** (indexName, snapshotUuids) per index. */
-  def parseGenerationIndices(body: String): Seq[(String, Seq[String])] = {
-    val t = mapper.readTree(body)
+  private def indicesOf(t: JsonNode): Seq[(String, Seq[String])] = {
     val ix = t.get("indices")
     if (ix == null || !ix.isObject) Seq.empty
     else {
@@ -160,8 +259,7 @@ object SnapshotLayout {
   /** JSON text → SMILE value tree, so user-supplied mappings/templates
     * land in the metadata blobs as real object trees (the shape ES
     * stores), not quoted JSON strings. */
-  private[graft] def jsonToSVal(
-      n: com.fasterxml.jackson.databind.JsonNode): SVal =
+  private[graft] def jsonToSVal(n: JsonNode): SVal =
     if (n == null || n.isNull) SNull
     else if (n.isTextual) SStr(n.asText())
     else if (n.isBoolean) SBool(n.asBoolean())
@@ -230,8 +328,7 @@ object SnapshotLayout {
 
   /** Chunked whole-file read — the shared helper for every `.dat`
     * consumer (binary-safe, unlike a UTF-8 string round-trip). */
-  def readBytes(fs: org.apache.hadoop.fs.FileSystem,
-                path: org.apache.hadoop.fs.Path): Array[Byte] = {
+  def readBytes(fs: FileSystem, path: Path): Array[Byte] = {
     val in = fs.open(path)
     try {
       val buf = new java.io.ByteArrayOutputStream()
@@ -240,6 +337,16 @@ object SnapshotLayout {
       while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
       buf.toByteArray
     } finally in.close()
+  }
+
+  /** A whole UTF-8 text file: generation JSON, manifests, summaries. */
+  def readString(fs: FileSystem, path: Path): String =
+    new String(readBytes(fs, path), UTF_8)
+
+  /** Creates (or replaces) `path` with exactly `body`. */
+  def writeBytes(fs: FileSystem, path: Path, body: Array[Byte]): Unit = {
+    val out = fs.create(path, true)
+    try out.write(body) finally out.close()
   }
 
   /** Per-shard snap-<uuid>.dat content: CodecUtil("snapshot")-framed SMILE

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.core.{EsMurmur3, ShardConfig}
-import graft.sinks.essnapshot.SnapshotLayout
+import graft.sinks.essnapshot.{Smile, SnapshotLayout}
 import graft.sources.Ingest
 
 class EsSnapshotSinkSpec extends SparkSpec {
@@ -24,126 +24,136 @@ class EsSnapshotSinkSpec extends SparkSpec {
   }
 
   test("end-to-end: envelope → clustered write → stitched snapshot layout") {
-    val dest = Files.createTempDirectory("graft-snap").toString
-    val numShards = 8
-    val src = spark.range(300).toDF("event_id")
-      .withColumn("payload", concat(lit("row-"), col("event_id")))
-    val docs = Ingest.fromColumns(src, "events", "event_id", numShards)
-    EsSnapshot.write(docs, dest, ShardConfig(numShards), Some("snap_test"),
-      mappings = Some("""{"properties":{"payload":{"type":"keyword"}}}"""))
+    withTempDir("graft-snap") { dir =>
+      val dest = dir.toString
+      val numShards = 8
+      val src = spark.range(300).toDF("event_id")
+        .withColumn("payload", concat(lit("row-"), col("event_id")))
+      val docs = Ingest.fromColumns(src, "events", "event_id", numShards)
+      EsSnapshot.write(docs, dest, ShardConfig(numShards), Some("snap_test"),
+        mappings = Some("""{"properties":{"payload":{"type":"keyword"}}}"""))
 
-    // root metadata
-    val root = Paths.get(dest)
-    assert(Files.exists(root.resolve(SnapshotLayout.IndexLatest)))
-    assert(SnapshotLayout.parseIndexLatest(
-      Files.readAllBytes(root.resolve(SnapshotLayout.IndexLatest))) === 0L)
-    assert(Files.exists(root.resolve("index-0")))
-    val gen = Files.readString(root.resolve("index-0"))
-    assert(gen.contains("\"snap_test\"") && gen.contains(SnapshotLayout.indexId("events")))
-    assert(Files.list(root).iterator().asScala.map(_.getFileName.toString)
-      .exists(_.matches("snap-[0-9a-f-]+\\.dat")))
+      // root metadata
+      val root = Paths.get(dest)
+      assert(Files.exists(root.resolve(SnapshotLayout.IndexLatest)))
+      assert(SnapshotLayout.parseIndexLatest(
+        Files.readAllBytes(root.resolve(SnapshotLayout.IndexLatest))) === 0L)
+      assert(Files.exists(root.resolve("index-0")))
+      val gen = Files.readString(root.resolve("index-0"))
+      assert(gen.contains("\"snap_test\"") && gen.contains(SnapshotLayout.indexId("events")))
+      assert(Files.list(root).iterator().asScala.map(_.getFileName.toString)
+        .exists(_.matches("snap-[0-9a-f-]+\\.dat")))
 
-    // every shard dir exists with a snap-*.dat, even if empty (A4 backfill)
-    val indexDir = root.resolve("indices").resolve(SnapshotLayout.indexId("events"))
-    (0 until numShards).foreach { s =>
-      val dir = indexDir.resolve(s.toString)
-      assert(Files.isDirectory(dir), s"missing shard dir $s")
-      assert(Files.list(dir).iterator().asScala
-        .exists(_.getFileName.toString.startsWith("snap-")), s"no snap dat in shard $s")
-    }
-
-    // data fidelity: every doc landed in its ES-murmur3 shard; nothing lost
-    var total = 0
-    (0 until numShards).foreach { s =>
-      val dir = indexDir.resolve(s.toString)
-      val dataFiles = Files.list(dir).iterator().asScala
-        .filter(_.getFileName.toString.startsWith("docs-")).toList
-      val lines = dataFiles.flatMap(readGzLines)
-      total += lines.size
-      lines.foreach { line =>
-        val id = line.replaceAll(""".*"event_id":(\d+).*""", "$1")
-        assert(EsMurmur3.shard(id, numShards) === s,
-          s"doc $id misplaced in shard $s")
+      // every shard dir exists with a snap-*.dat, even if empty (A4 backfill)
+      val indexDir = root.resolve("indices").resolve(SnapshotLayout.indexId("events"))
+      (0 until numShards).foreach { s =>
+        val dir = indexDir.resolve(s.toString)
+        assert(Files.isDirectory(dir), s"missing shard dir $s")
+        assert(Files.list(dir).iterator().asScala
+          .exists(_.getFileName.toString.startsWith("snap-")), s"no snap dat in shard $s")
       }
+
+      // data fidelity: every doc landed in its ES-murmur3 shard; nothing lost
+      var total = 0
+      (0 until numShards).foreach { s =>
+        val dir = indexDir.resolve(s.toString)
+        val dataFiles = Files.list(dir).iterator().asScala
+          .filter(_.getFileName.toString.startsWith("docs-")).toList
+        val lines = dataFiles.flatMap(readGzLines)
+        total += lines.size
+        lines.foreach { line =>
+          val id = line.replaceAll(""".*"event_id":(\d+).*""", "$1")
+          assert(EsMurmur3.shard(id, numShards) === s,
+            s"doc $id misplaced in shard $s")
+        }
+      }
+      assert(total === 300)
+
+      // manifest: one line per POPULATED shard, all with the same snapshot uuid
+      val manifest = EsSnapshot.readManifest(spark, dest).collect()
+      assert(manifest.length > 0 && manifest.length <= numShards)
+      assert(manifest.map(_.getString(1)).toSet.size === 1, "stitching broke: multiple uuids")
+      assert(manifest.map(_.getString(0)).toSet === Set("events"))
+      assert(manifest.map(_.getString(2)).toSet === Set(SnapshotLayout.indexId("events")))
+
+      // summary metrics
+      val summary = Files.readString(root.resolve(SnapshotLayout.SummaryFile))
+      assert(summary.contains("\"index_doc_created\":300"))
+
+      // restore path: read-back sees every doc in its ES-murmur3 shard
+      val back = EsSnapshot.readTable(spark, dest)
+      assert(back.count() === 300)
+      val misplaced = back.select(
+          org.apache.spark.sql.functions.get_json_object(
+            org.apache.spark.sql.functions.col("json"), "$.event_id").as("id"),
+          org.apache.spark.sql.functions.col("shard"))
+        .collect()
+        .count(r => EsMurmur3.shard(r.getString(0), numShards) != r.getInt(1))
+      assert(misplaced === 0)
     }
-    assert(total === 300)
-
-    // manifest: one line per POPULATED shard, all with the same snapshot uuid
-    val manifest = EsSnapshot.readManifest(spark, dest).collect()
-    assert(manifest.length > 0 && manifest.length <= numShards)
-    assert(manifest.map(_.getString(1)).toSet.size === 1, "stitching broke: multiple uuids")
-    assert(manifest.map(_.getString(0)).toSet === Set("events"))
-    assert(manifest.map(_.getString(2)).toSet === Set(SnapshotLayout.indexId("events")))
-
-    // summary metrics
-    val summary = Files.readString(root.resolve(SnapshotLayout.SummaryFile))
-    assert(summary.contains("\"index_doc_created\":300"))
-
-    // restore path: read-back sees every doc in its ES-murmur3 shard
-    val back = EsSnapshot.readDocs(spark, dest, "events")
-    assert(back.count() === 300)
-    val misplaced = back.select(
-        org.apache.spark.sql.functions.get_json_object(
-          org.apache.spark.sql.functions.col("json"), "$.event_id").as("id"),
-        org.apache.spark.sql.functions.col("shard"))
-      .collect()
-      .count(r => EsMurmur3.shard(r.getString(0), numShards) != r.getInt(1))
-    assert(misplaced === 0)
   }
 
   test("DSv2 read: one partition per shard, shard-filter pruning") {
-    val dest = Files.createTempDirectory("graft-snap-read").toString
-    val numShards = 8
-    val docs = Ingest.fromColumns(
-      spark.range(300).toDF("event_id"), "events", "event_id", numShards)
-    EsSnapshot.write(docs, dest, ShardConfig(numShards))
+    withTempDir("graft-snap-read") { dir =>
+      val dest = dir.toString
+      val numShards = 8
+      val docs = Ingest.fromColumns(
+        spark.range(300).toDF("event_id"), "events", "event_id", numShards)
+      EsSnapshot.write(docs, dest, ShardConfig(numShards))
 
-    val table = EsSnapshot.readTable(spark, dest)
-    assert(table.columns.toSeq === Seq("index", "shard", "json"))
-    assert(table.count() === 300)
-    val populated = table.select("shard").distinct().count()
-    assert(table.rdd.getNumPartitions === populated)
+      val table = EsSnapshot.readTable(spark, dest)
+      assert(table.columns.toSeq === Seq("index", "shard", "json"))
+      assert(table.count() === 300)
+      val populated = table.select("shard").distinct().count()
+      assert(table.rdd.getNumPartitions === populated)
 
-    // shard pruning: exactly one input partition scanned
-    val one = table.filter(col("shard") === 3)
-    assert(one.rdd.getNumPartitions === 1)
-    val expected = EsSnapshot.readDocs(spark, dest, "events")
-      .filter(col("shard") === 3).count()
-    assert(one.count() === expected)
+      // shard pruning: exactly one input partition scanned
+      val one = table.filter(col("shard") === 3)
+      assert(one.rdd.getNumPartitions === 1)
+      // ... and it reads exactly the doc count shard 3's manifest records
+      val shard3 = Paths.get(SnapshotLayout.shardDir(dest, "events", 3))
+      val Seq(snapDat) = Files.list(shard3).iterator().asScala
+        .filter(_.getFileName.toString.startsWith("snap-")).toSeq
+      val expected = Smile.long(Smile.read(
+        SnapshotLayout.datSmileBody(Files.readAllBytes(snapDat))), "doc_count").get
+      assert(expected > 0 && one.count() === expected)
 
-    // index-name pruning resolves ids through the generation file
-    assert(table.filter(col("index") === "events").count() === 300)
-    assert(table.filter(col("index") === "nope").rdd.getNumPartitions === 0)
+      // index-name pruning resolves ids through the generation file
+      assert(table.filter(col("index") === "events").count() === 300)
+      assert(table.filter(col("index") === "nope").rdd.getNumPartitions === 0)
+    }
   }
 
   test("batch.docs / batch.bytes roll data files; every roll is manifested") {
     val numShards = 4
-    val dest = Files.createTempDirectory("graft-snap-roll").toString
-    val docs = Ingest.fromColumns(
-      spark.range(400).toDF("event_id"), "events", "event_id", numShards)
-    EsSnapshot.write(docs, dest, ShardConfig(numShards),
-      options = Map("batch.docs" -> "25"))
+    withTempDir("graft-snap-roll") { dir =>
+      val dest = dir.resolve("docs").toString
+      val docs = Ingest.fromColumns(
+        spark.range(400).toDF("event_id"), "events", "event_id", numShards)
+      EsSnapshot.write(docs, dest, ShardConfig(numShards),
+        options = Map("batch.docs" -> "25"))
 
-    val indexDir = Paths.get(dest, "indices",
-      SnapshotLayout.indexId("events"))
-    var sawRoll = false
-    for (shard <- 0 until numShards) {
-      val files = Files.list(indexDir.resolve(shard.toString)).iterator().asScala
-        .map(_.getFileName.toString).filter(_.startsWith("docs-")).toList
-      // ~100 docs/shard at 25-doc rolls → several files
-      if (files.size > 1) sawRoll = true
-      files.foreach { f =>
-        // every rolled file carries a distinct writer seq, no overwrites
-        assert(files.count(_ == f) === 1)
+      val indexDir = Paths.get(dest, "indices",
+        SnapshotLayout.indexId("events"))
+      var sawRoll = false
+      for (shard <- 0 until numShards) {
+        val files = Files.list(indexDir.resolve(shard.toString)).iterator().asScala
+          .map(_.getFileName.toString).filter(_.startsWith("docs-")).toList
+        // ~100 docs/shard at 25-doc rolls → several files
+        if (files.size > 1) sawRoll = true
+        files.foreach { f =>
+          // every rolled file carries a distinct writer seq, no overwrites
+          assert(files.count(_ == f) === 1)
+        }
       }
+      assert(sawRoll, "roll threshold must produce multiple files per shard")
+      assert(EsSnapshot.readTable(spark, dest).count() === 400)
+      // a tiny byte threshold also rolls
+      val dest2 = dir.resolve("bytes").toString
+      EsSnapshot.write(docs, dest2, ShardConfig(numShards),
+        options = Map("batch.bytes" -> "512"))
+      assert(EsSnapshot.readTable(spark, dest2).count() === 400)
     }
-    assert(sawRoll, "roll threshold must produce multiple files per shard")
-    assert(EsSnapshot.readTable(spark, dest).count() === 400)
-    // a tiny byte threshold also rolls
-    val dest2 = Files.createTempDirectory("graft-snap-roll-b").toString
-    EsSnapshot.write(docs, dest2, ShardConfig(numShards),
-      options = Map("batch.bytes" -> "512"))
-    assert(EsSnapshot.readTable(spark, dest2).count() === 400)
   }
 
   test("compression=none and leveled gzip both round-trip through the read path") {
@@ -151,23 +161,27 @@ class EsSnapshotSinkSpec extends SparkSpec {
     val docs = Ingest.fromColumns(
       spark.range(200).toDF("event_id"), "events", "event_id", numShards)
 
-    val plain = Files.createTempDirectory("graft-snap-plain").toString
-    EsSnapshot.write(docs, plain, ShardConfig(numShards),
-      options = Map("compression" -> "none"))
-    // data files are bare .ndjson (no .gz), still discovered and readable
-    val plainFiles = Files.walk(Paths.get(plain)).iterator().asScala
-      .map(_.getFileName.toString).filter(_.startsWith("docs-")).toList
-    assert(plainFiles.nonEmpty && plainFiles.forall(_.endsWith(".ndjson")))
-    assert(EsSnapshot.readTable(spark, plain).count() === 200)
-    assert(EsSnapshot.readDocs(spark, plain, "events").count() === 200)
+    withTempDir("graft-snap-codec") { dir =>
+      val plain = dir.resolve("plain").toString
+      EsSnapshot.write(docs, plain, ShardConfig(numShards),
+        options = Map("compression" -> "none"))
+      // data files are bare .ndjson (no .gz) holding every doc as plain
+      // text, and the read path discovers and reads them
+      val plainFiles = Files.walk(Paths.get(plain)).iterator().asScala
+        .filter(_.getFileName.toString.startsWith("docs-")).toList
+      assert(plainFiles.nonEmpty &&
+        plainFiles.forall(_.getFileName.toString.endsWith(".ndjson")))
+      assert(plainFiles.map(Files.readAllLines(_).size).sum === 200)
+      assert(EsSnapshot.readTable(spark, plain).count() === 200)
 
-    val tight = Files.createTempDirectory("graft-snap-gz9").toString
-    EsSnapshot.write(docs, tight, ShardConfig(numShards),
-      options = Map("compression" -> "gzip", "compression.level" -> "9"))
-    val gzFiles = Files.walk(Paths.get(tight)).iterator().asScala
-      .map(_.getFileName.toString).filter(_.startsWith("docs-")).toList
-    assert(gzFiles.nonEmpty && gzFiles.forall(_.endsWith(".ndjson.gz")))
-    assert(EsSnapshot.readTable(spark, tight).count() === 200)
+      val tight = dir.resolve("gz9").toString
+      EsSnapshot.write(docs, tight, ShardConfig(numShards),
+        options = Map("compression" -> "gzip", "compression.level" -> "9"))
+      val gzFiles = Files.walk(Paths.get(tight)).iterator().asScala
+        .map(_.getFileName.toString).filter(_.startsWith("docs-")).toList
+      assert(gzFiles.nonEmpty && gzFiles.forall(_.endsWith(".ndjson.gz")))
+      assert(EsSnapshot.readTable(spark, tight).count() === 200)
+    }
   }
 
   test("multi-byte UTF-8 payloads round-trip byte-exact; bytes_written counts UTF-8 bytes") {
@@ -196,41 +210,45 @@ class EsSnapshotSinkSpec extends SparkSpec {
   }
 
   test("many shards on tiny data: empty shards backfilled, none populated twice") {
-    val dest = Files.createTempDirectory("graft-snap64").toString
-    val n = 64
-    val src = spark.range(20).toDF("event_id")
-    val docs = Ingest.fromColumns(src, "tiny", "event_id", n)
-    EsSnapshot.write(docs, dest, ShardConfig(n))
-    val indexDir = Paths.get(dest, "indices", SnapshotLayout.indexId("tiny"))
-    val populated = (0 until n).count { s =>
-      Files.list(indexDir.resolve(s.toString)).iterator().asScala
-        .exists(_.getFileName.toString.startsWith("docs-"))
+    withTempDir("graft-snap64") { dir =>
+      val dest = dir.toString
+      val n = 64
+      val src = spark.range(20).toDF("event_id")
+      val docs = Ingest.fromColumns(src, "tiny", "event_id", n)
+      EsSnapshot.write(docs, dest, ShardConfig(n))
+      val indexDir = Paths.get(dest, "indices", SnapshotLayout.indexId("tiny"))
+      val populated = (0 until n).count { s =>
+        Files.list(indexDir.resolve(s.toString)).iterator().asScala
+          .exists(_.getFileName.toString.startsWith("docs-"))
+      }
+      assert(populated <= 20)
+      assert((0 until n).forall(s => Files.isDirectory(indexDir.resolve(s.toString))))
+      // doc_count 0 recorded for at least one empty shard
+      val emptyShard = (0 until n).find { s =>
+        !Files.list(indexDir.resolve(s.toString)).iterator().asScala
+          .exists(_.getFileName.toString.startsWith("docs-"))
+      }.get
+      val snapDat = Files.list(indexDir.resolve(emptyShard.toString)).iterator().asScala
+        .find(_.getFileName.toString.startsWith("snap-")).get
+      assert(graft.sinks.essnapshot.Smile.long(
+        graft.sinks.essnapshot.Smile.read(graft.sinks.essnapshot.SnapshotLayout
+          .datSmileBody(Files.readAllBytes(snapDat))),
+        "doc_count").contains(0L))
     }
-    assert(populated <= 20)
-    assert((0 until n).forall(s => Files.isDirectory(indexDir.resolve(s.toString))))
-    // doc_count 0 recorded for at least one empty shard
-    val emptyShard = (0 until n).find { s =>
-      !Files.list(indexDir.resolve(s.toString)).iterator().asScala
-        .exists(_.getFileName.toString.startsWith("docs-"))
-    }.get
-    val snapDat = Files.list(indexDir.resolve(emptyShard.toString)).iterator().asScala
-      .find(_.getFileName.toString.startsWith("snap-")).get
-    assert(graft.sinks.essnapshot.Smile.long(
-      graft.sinks.essnapshot.Smile.read(graft.sinks.essnapshot.SnapshotLayout
-        .datSmileBody(Files.readAllBytes(snapDat))),
-      "doc_count").contains(0L))
   }
 
   test("multi-index write with per-index shard override") {
-    val dest = Files.createTempDirectory("graft-snap-multi").toString
-    val a = Ingest.fromColumns(spark.range(50).toDF("event_id"), "alpha", "event_id", 4)
-    val b = Ingest.fromColumns(spark.range(50).toDF("event_id"), "beta", "event_id", 2)
-    EsSnapshot.write(a.union(b), dest,
-      ShardConfig(defaultShards = 4, perIndex = Map("beta" -> 2)))
-    assert(Files.isDirectory(Paths.get(dest, "indices", SnapshotLayout.indexId("alpha"), "3")))
-    assert(Files.isDirectory(Paths.get(dest, "indices", SnapshotLayout.indexId("beta"), "1")))
-    assert(!Files.exists(Paths.get(dest, "indices", SnapshotLayout.indexId("beta"), "2")))
-    val manifest = EsSnapshot.readManifest(spark, dest).collect()
-    assert(manifest.map(_.getString(0)).toSet === Set("alpha", "beta"))
+    withTempDir("graft-snap-multi") { dir =>
+      val dest = dir.toString
+      val a = Ingest.fromColumns(spark.range(50).toDF("event_id"), "alpha", "event_id", 4)
+      val b = Ingest.fromColumns(spark.range(50).toDF("event_id"), "beta", "event_id", 2)
+      EsSnapshot.write(a.union(b), dest,
+        ShardConfig(defaultShards = 4, perIndex = Map("beta" -> 2)))
+      assert(Files.isDirectory(Paths.get(dest, "indices", SnapshotLayout.indexId("alpha"), "3")))
+      assert(Files.isDirectory(Paths.get(dest, "indices", SnapshotLayout.indexId("beta"), "1")))
+      assert(!Files.exists(Paths.get(dest, "indices", SnapshotLayout.indexId("beta"), "2")))
+      val manifest = EsSnapshot.readManifest(spark, dest).collect()
+      assert(manifest.map(_.getString(0)).toSet === Set("alpha", "beta"))
+    }
   }
 }

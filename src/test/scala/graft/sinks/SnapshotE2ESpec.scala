@@ -23,51 +23,58 @@ class SnapshotE2ESpec extends SparkSpec {
     "005a22cc-afbb-4bbe-97e9-6f1447293ed7")
 
   test("NDJSON with customer_id field → snapshot, fixture shard placement") {
-    val srcDir = Files.createTempDirectory("graft-e2e-src")
-    val lines = orgIds.zipWithIndex.map { case (id, i) =>
-      s"""{"customer_id": "$id", "name": "cust$i", "value": $i}"""
-    }
-    Files.writeString(srcDir.resolve("input.json"), lines.mkString("\n"))
-    val dest = Files.createTempDirectory("graft-e2e-snap").toString
+    withTempDir("graft-e2e") { dir =>
+      val srcDir = Files.createDirectory(dir.resolve("src"))
+      val lines = orgIds.zipWithIndex.map { case (id, i) =>
+        s"""{"customer_id": "$id", "name": "cust$i", "value": $i}"""
+      }
+      Files.writeString(srcDir.resolve("input.json"), lines.mkString("\n"))
+      val dest = dir.resolve("snap").toString
 
-    val raw = Ingest.ndjsonRaw(spark, Seq(srcDir.toString))
-    val docs = Ingest.toIndexable(raw, "customers", "customer_id", numShards = 5)
-    EsSnapshot.write(docs, dest, ShardConfig(5), Some("fixture_snap"))
+      val raw = Ingest.ndjsonRaw(spark, Seq(srcDir.toString))
+      val docs = Ingest.toIndexable(raw, "customers", "customer_id", numShards = 5)
+      EsSnapshot.write(docs, dest, ShardConfig(5), Some("fixture_snap"))
 
-    val back = EsSnapshot.readDocs(spark, dest, "customers").collect()
-    assert(back.length === orgIds.length)
-    back.foreach { r =>
-      val json = r.getString(0)
-      val id = orgIds.find(json.contains).get
-      assert(r.getInt(1) === EsMurmur3.shard(id, 5), s"misplaced $id")
-      assert(lines.contains(json), "payload not byte-exact")
+      val back = EsSnapshot.readTable(spark, dest).collect()
+      assert(back.length === orgIds.length)
+      back.foreach { r =>
+        val json = r.getAs[String]("json")
+        val id = orgIds.find(json.contains).get
+        assert(r.getAs[Int]("shard") === EsMurmur3.shard(id, 5), s"misplaced $id")
+        assert(lines.contains(json), "payload not byte-exact")
+      }
     }
   }
 
   test("re-running with overwrite is idempotent: history and stale files swept") {
-    val dest = Files.createTempDirectory("graft-rerun").toString
-    val src = spark.range(100).toDF("event_id")
-    val docs = Ingest.fromColumns(src, "rerun", "event_id", 4)
-    EsSnapshot.write(docs, dest, ShardConfig(4))
-    // full re-run in overwrite mode: the new snapshot becomes the repo's
-    // ONLY one (append mode would add a second generation instead —
-    // SnapshotGenerationsSpec)
-    EsSnapshot.write(docs, dest, ShardConfig(4), overwrite = true)
+    withTempDir("graft-rerun") { dir =>
+      val dest = dir.toString
+      val src = spark.range(100).toDF("event_id")
+      val docs = Ingest.fromColumns(src, "rerun", "event_id", 4)
+      EsSnapshot.write(docs, dest, ShardConfig(4))
+      // full re-run in overwrite mode: the new snapshot becomes the repo's
+      // ONLY one (append mode would add a second generation instead —
+      // SnapshotGenerationsSpec)
+      EsSnapshot.write(docs, dest, ShardConfig(4), overwrite = true)
 
-    // exactly one snapshot's data files survive → doc count unchanged,
-    // even through the raw all-files view
-    assert(EsSnapshot.readDocs(spark, dest, "rerun").count() === 100)
-    assert(EsSnapshot.readTable(spark, dest).count() === 100)
-    // repo restarts at generation 0 with a single snapshot entry
-    assert(SnapshotLayout.parseIndexLatest(
-      Files.readAllBytes(Paths.get(dest, "index.latest"))) === 0L)
-    assert(SnapshotLayout.parseGenerationSnapshots(
-      Files.readString(Paths.get(dest, "index-0"))).size === 1)
-    val indexDir = Paths.get(dest, "indices", SnapshotLayout.indexId("rerun"))
-    (0 until 4).foreach { s =>
-      val snapDats = Files.list(indexDir.resolve(s.toString)).iterator().asScala
-        .count(_.getFileName.toString.startsWith("snap-"))
-      assert(snapDats === 1) // run 1's snap manifest swept with its files
+      assert(EsSnapshot.readTable(spark, dest).count() === 100)
+      // repo restarts at generation 0 with a single snapshot entry
+      assert(SnapshotLayout.parseIndexLatest(
+        Files.readAllBytes(Paths.get(dest, "index.latest"))) === 0L)
+      assert(SnapshotLayout.parseGenerationSnapshots(
+        Files.readString(Paths.get(dest, "index-0"))).size === 1)
+      val indexDir = Paths.get(dest, "indices", SnapshotLayout.indexId("rerun"))
+      (0 until 4).foreach { s =>
+        val shardDir = indexDir.resolve(s.toString)
+        val names = Files.list(shardDir).iterator().asScala
+          .map(_.getFileName.toString).toList
+        val snapDats = names.filter(_.startsWith("snap-"))
+        assert(snapDats.size === 1) // run 1's snap manifest swept with its files
+        // exactly the one snapshot's data files survive: run 1's are gone
+        assert(names.filter(_.startsWith("docs-")).toSet ===
+          SnapshotLayout.parseShardSnapFiles(
+            Files.readAllBytes(shardDir.resolve(snapDats.head))).toSet)
+      }
     }
   }
 }

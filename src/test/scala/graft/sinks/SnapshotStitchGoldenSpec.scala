@@ -46,84 +46,86 @@ class SnapshotStitchGoldenSpec extends SparkSpec {
       .toSeq.sorted
 
   test("2-shard fixture: stitched tree matches the golden layout byte-for-byte") {
-    val dest = Files.createTempDirectory("graft-golden").toString
-    val numShards = 2
-    // fixed doc ids → fixed murmur3 placement → deterministic per-shard
-    // doc counts and a deterministic (normalized) tree
-    val src = spark.range(10).toDF("event_id")
-      .withColumn("payload", concat(lit("gold-"), col("event_id")))
-    val docs = Ingest.fromColumns(src, "idx_gold", "event_id", numShards)
-    EsSnapshot.write(docs, dest, ShardConfig(numShards), Some("gold_snap"))
+    withTempDir("graft-golden") { dir =>
+      val dest = dir.toString
+      val numShards = 2
+      // fixed doc ids → fixed murmur3 placement → deterministic per-shard
+      // doc counts and a deterministic (normalized) tree
+      val src = spark.range(10).toDF("event_id")
+        .withColumn("payload", concat(lit("gold-"), col("event_id")))
+      val docs = Ingest.fromColumns(src, "idx_gold", "event_id", numShards)
+      EsSnapshot.write(docs, dest, ShardConfig(numShards), Some("gold_snap"))
 
-    val root = Paths.get(dest)
-    val mapper = new ObjectMapper()
-    val gen = mapper.readTree(Files.readAllBytes(root.resolve("index-0")))
-    val baseUuid = gen.get("snapshots").get(0).get("uuid").asText()
-    val indexId = SnapshotLayout.indexId("idx_gold")
+      val root = Paths.get(dest)
+      val mapper = new ObjectMapper()
+      val gen = mapper.readTree(Files.readAllBytes(root.resolve("index-0")))
+      val baseUuid = gen.get("snapshots").get(0).get("uuid").asText()
+      val indexId = SnapshotLayout.indexId("idx_gold")
 
-    // (a) ONE uuid repo-wide: every snap-/meta- file name carries it
-    val uuidRe = "(snap|meta)-([0-9a-f-]{36})\\.dat".r
-    val allFiles = walk(root)
-    val uuidsSeen = allFiles.flatMap(f =>
-      uuidRe.findAllMatchIn(f).map(_.group(2))).toSet
-    assert(uuidsSeen === Set(baseUuid),
-      s"stitch contract broken: uuids $uuidsSeen, expected only $baseUuid")
+      // (a) ONE uuid repo-wide: every snap-/meta- file name carries it
+      val uuidRe = "(snap|meta)-([0-9a-f-]{36})\\.dat".r
+      val allFiles = walk(root)
+      val uuidsSeen = allFiles.flatMap(f =>
+        uuidRe.findAllMatchIn(f).map(_.group(2))).toSet
+      assert(uuidsSeen === Set(baseUuid),
+        s"stitch contract broken: uuids $uuidsSeen, expected only $baseUuid")
 
-    // (b) the rewrite's post-condition per shard; no foreign snap remains
-    for (s <- 0 until numShards) {
-      val shardDir = root.resolve("indices").resolve(indexId).resolve(s.toString)
-      val snaps = Files.list(shardDir).iterator().asScala
-        .map(_.getFileName.toString).filter(_.startsWith("snap-")).toSeq
-      assert(snaps === Seq(s"snap-$baseUuid.dat"),
-        s"shard $s must hold exactly the base-uuid snap file, got $snaps")
+      // (b) the rewrite's post-condition per shard; no foreign snap remains
+      for (s <- 0 until numShards) {
+        val shardDir = root.resolve("indices").resolve(indexId).resolve(s.toString)
+        val snaps = Files.list(shardDir).iterator().asScala
+          .map(_.getFileName.toString).filter(_.startsWith("snap-")).toSeq
+        assert(snaps === Seq(s"snap-$baseUuid.dat"),
+          s"shard $s must hold exactly the base-uuid snap file, got $snaps")
+      }
+
+      // (c) golden tree: normalize the two random components (snapshot uuid,
+      // per-task writer uuid in data file names) and compare EXACTLY
+      val normalized = allFiles.map(_
+        .replace(baseUuid, "UUID")
+        .replaceAll("docs-p\\d+-t\\d+-[0-9a-f-]{36}-\\d+", "DOCS"))
+        .map(_.replace(indexId, "INDEXID"))
+      val golden = Seq(
+        "_SUMMARY.json",
+        "index-0",
+        "index.latest",
+        s"indices/INDEXID/0/DOCS.ndjson.gz",
+        s"indices/INDEXID/0/snap-UUID.dat",
+        s"indices/INDEXID/1/DOCS.ndjson.gz",
+        s"indices/INDEXID/1/snap-UUID.dat",
+        s"indices/INDEXID/meta-UUID.dat",
+        "manifest.txt",
+        "meta-UUID.dat",
+        "snap-UUID.dat").sorted
+      assert(normalized.sorted === golden)
+
+      // byte-exact spot checks on the deterministic bytes themselves:
+      // index.latest is the 8-byte BE generation 0
+      assert(Files.readAllBytes(root.resolve("index.latest")).toSeq
+        === Seq[Byte](0, 0, 0, 0, 0, 0, 0, 0))
+      // shard snap bodies: CodecUtil("snapshot")-framed SMILE, field-exact,
+      // and byte-exact re-encodable — unwrap verifies both magics + the CRC32
+      // footer, and Smile.write(Smile.read(body)) == body proves the writer's
+      // canonical token choices (the deterministic field order the golden
+      // tree needs)
+      import graft.sinks.essnapshot.{LuceneFrame, Smile}
+      val blobs = Seq("0", "1").map { s =>
+        Files.readAllBytes(root.resolve("indices").resolve(indexId)
+          .resolve(s).resolve(s"snap-$baseUuid.dat"))
+      }
+      val bodies = blobs.map(LuceneFrame.unwrapExpecting(LuceneFrame.SnapshotCodec, _))
+      val trees = bodies.map(Smile.read)
+      assert(bodies.zip(trees).forall { case (b, t) =>
+        java.util.Arrays.equals(b, Smile.write(t)) },
+        "shard snap SMILE bodies must round-trip byte-exactly")
+      assert(trees.map(Smile.long(_, "doc_count").get).sum === 10L)
+      // ES 5.x BlobStoreIndexShardSnapshot: snapshot name under "name",
+      // FileInfo objects under "files" with __i virtual names
+      assert(trees.forall(Smile.str(_, "name").contains("gold_snap")))
+      assert(trees.forall(t => Smile.arr(t, "files").zipWithIndex.forall {
+        case (fi, i) => Smile.str(fi, "name").contains(s"__$i") &&
+          Smile.str(fi, "physical_name").exists(_.startsWith("docs-"))
+      }))
     }
-
-    // (c) golden tree: normalize the two random components (snapshot uuid,
-    // per-task writer uuid in data file names) and compare EXACTLY
-    val normalized = allFiles.map(_
-      .replace(baseUuid, "UUID")
-      .replaceAll("docs-p\\d+-t\\d+-[0-9a-f-]{36}-\\d+", "DOCS"))
-      .map(_.replace(indexId, "INDEXID"))
-    val golden = Seq(
-      "_SUMMARY.json",
-      "index-0",
-      "index.latest",
-      s"indices/INDEXID/0/DOCS.ndjson.gz",
-      s"indices/INDEXID/0/snap-UUID.dat",
-      s"indices/INDEXID/1/DOCS.ndjson.gz",
-      s"indices/INDEXID/1/snap-UUID.dat",
-      s"indices/INDEXID/meta-UUID.dat",
-      "manifest.txt",
-      "meta-UUID.dat",
-      "snap-UUID.dat").sorted
-    assert(normalized.sorted === golden)
-
-    // byte-exact spot checks on the deterministic bytes themselves:
-    // index.latest is the 8-byte BE generation 0
-    assert(Files.readAllBytes(root.resolve("index.latest")).toSeq
-      === Seq[Byte](0, 0, 0, 0, 0, 0, 0, 0))
-    // shard snap bodies: CodecUtil("snapshot")-framed SMILE, field-exact,
-    // and byte-exact re-encodable — unwrap verifies both magics + the CRC32
-    // footer, and Smile.write(Smile.read(body)) == body proves the writer's
-    // canonical token choices (the deterministic field order the golden
-    // tree needs)
-    import graft.sinks.essnapshot.{LuceneFrame, Smile}
-    val blobs = Seq("0", "1").map { s =>
-      Files.readAllBytes(root.resolve("indices").resolve(indexId)
-        .resolve(s).resolve(s"snap-$baseUuid.dat"))
-    }
-    val bodies = blobs.map(LuceneFrame.unwrapExpecting(LuceneFrame.SnapshotCodec, _))
-    val trees = bodies.map(Smile.read)
-    assert(bodies.zip(trees).forall { case (b, t) =>
-      java.util.Arrays.equals(b, Smile.write(t)) },
-      "shard snap SMILE bodies must round-trip byte-exactly")
-    assert(trees.map(Smile.long(_, "doc_count").get).sum === 10L)
-    // ES 5.x BlobStoreIndexShardSnapshot: snapshot name under "name",
-    // FileInfo objects under "files" with __i virtual names
-    assert(trees.forall(Smile.str(_, "name").contains("gold_snap")))
-    assert(trees.forall(t => Smile.arr(t, "files").zipWithIndex.forall {
-      case (fi, i) => Smile.str(fi, "name").contains(s"__$i") &&
-        Smile.str(fi, "physical_name").exists(_.startsWith("docs-"))
-    }))
   }
 }

@@ -1305,16 +1305,12 @@ object Similarity {
     // the two writes are independent once the codebook is trained —
     // overlap them (guide §2.6: concurrent jobs back-fill the tail;
     // the tiny one-file centroids write rides the big write's slack)
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val centW = scala.concurrent.Future {
-      cents.zipWithIndex.map { case (v, c) => (c, v) }.toSeq
+    graft.core.Concurrently.runAll("ivf-build", Seq(
+      () => cents.zipWithIndex.map { case (v, c) => (c, v) }.toSeq
         .toDF("cell", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dest/centroids")
-    }
-    assignCells(corpus, cents, idCol, vecCol)
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$dest/vectors")
-    scala.concurrent.Await.result(centW,
-      scala.concurrent.duration.Duration.Inf)
+        .coalesce(1).write.mode("overwrite").parquet(s"$dest/centroids"),
+      () => assignCells(corpus, cents, idCol, vecCol)
+        .write.mode("overwrite").partitionBy("cell").parquet(s"$dest/vectors")))
   }
 
   /**
@@ -1442,17 +1438,14 @@ object Similarity {
     val cents = trainKMeans(store, numCells, iters, seed, trainSample,
       "nn_id", "cvec")
     // independent writes once trained — overlap (guide §2.6), same as
-    // buildIvfIndex; both complete before the commit marker below
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val centW = scala.concurrent.Future {
-      cents.zipWithIndex.map { case (v, c) => (c, v) }.toSeq
+    // buildIvfIndex; both complete, even when one fails, before the
+    // commit marker below
+    graft.core.Concurrently.runAll("ivf-rebuild", Seq(
+      () => cents.zipWithIndex.map { case (v, c) => (c, v) }.toSeq
         .toDF("cell", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(s"$genDir/centroids")
-    }
-    assignCells(store, cents, "nn_id", "cvec")
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$genDir/vectors")
-    scala.concurrent.Await.result(centW,
-      scala.concurrent.duration.Duration.Inf)
+        .coalesce(1).write.mode("overwrite").parquet(s"$genDir/centroids"),
+      () => assignCells(store, cents, "nn_id", "cvec")
+        .write.mode("overwrite").partitionBy("cell").parquet(s"$genDir/vectors")))
     // ---- commit (marker, then pointer swing) + retention GC: keep
     // the newest `keepGenerations` committed gens, sweep the rest —
     // including uncommitted carcasses of died attempts

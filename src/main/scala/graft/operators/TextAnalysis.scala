@@ -1369,24 +1369,17 @@ object TextAnalysis {
     // the three writes are independent inside the UNCOMMITTED gen dir
     // (readers resolve only committed generations, so the append path's
     // postings-before-doclens ordering invariant does not apply here) —
-    // overlap them from driver threads (guide §2.6); all complete
-    // before the commit marker below
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val sideW = Seq(
-      scala.concurrent.Future {
-        lens.agg(count(lit(1)).as("n_docs"), sum("len").as("tok_total"))
-          .coalesce(1).write.mode("overwrite").parquet(s"$genDir/stats")
-      },
-      scala.concurrent.Future {
-        lens.write.mode("overwrite").parquet(s"$genDir/doclens")
-      })
-    base.select(col("doc_id"), explode(col("__toks")).as("term"))
-      .groupBy("term", "doc_id").agg(count(lit(1)).as("tf"))
-      .repartitionByRange(shards, col("term"))
-      .sortWithinPartitions("term", "doc_id")
-      .write.mode("overwrite").parquet(s"$genDir/postings")
-    sideW.foreach(f => scala.concurrent.Await.result(f,
-      scala.concurrent.duration.Duration.Inf))
+    // overlap them from driver threads (guide §2.6); all complete, even
+    // when one fails, before the commit marker below
+    graft.core.Concurrently.runAll("bm25-index-build", Seq(
+      () => lens.agg(count(lit(1)).as("n_docs"), sum("len").as("tok_total"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$genDir/stats"),
+      () => lens.write.mode("overwrite").parquet(s"$genDir/doclens"),
+      () => base.select(col("doc_id"), explode(col("__toks")).as("term"))
+        .groupBy("term", "doc_id").agg(count(lit(1)).as("tf"))
+        .repartitionByRange(shards, col("term"))
+        .sortWithinPartitions("term", "doc_id")
+        .write.mode("overwrite").parquet(s"$genDir/postings")))
     graft.core.Generations.commit(fs, root, gen)
   }
 

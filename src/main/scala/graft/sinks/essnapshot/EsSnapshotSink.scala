@@ -23,7 +23,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.core.ShardConfig
+import graft.core.{Concurrently, ShardConfig}
 
 /**
  * DataSource-V2 batch sink `es-snapshot` — the Spark-native re-expression of
@@ -255,7 +255,15 @@ class EsSnapshotBatchWrite(schema: StructType, dest: String,
   }
 
   /** The post-processor, as the DSv2 driver commit
-    * (reference: IndexingPostProcessor.java:144-246). */
+    * (reference: IndexingPostProcessor.java:144-246), in four phases:
+    * (1) plan from the commit messages alone, with no file-system call;
+    * (2) read the live generation (skipped in truncate mode); (3) write
+    * every shard dir's, index's and the root's metadata concurrently, as
+    * each depends on the plan alone; (4) serially, the truncate sweep,
+    * the publish (`index-N`, then `index.latest`), then `manifest.txt`
+    * and `_SUMMARY.json`.
+    * A failure before the publish leaves readers on the previous
+    * generation, and the DSv2 abort then deletes this write's data files. */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val commits = messages.toSeq
       .collect { case m: ShardCommitMessage => m.files }.flatten
@@ -265,6 +273,22 @@ class EsSnapshotBatchWrite(schema: StructType, dest: String,
 
     val byIndex = commits.groupBy(_.index)
     val indexes = byIndex.keys.toSeq.sorted
+    // A shard outside the configured range has a dir no manifest lists
+    // and no sweep visits: its rows would be silently lost.
+    for (index <- indexes) {
+      val numShards = shardCfg.shardsFor(index)
+      val outside = byIndex(index).map(_.shard)
+        .filter(s => s < 0 || s >= numShards).distinct.sorted
+      if (outside.nonEmpty) throw new IllegalArgumentException(
+        s"index $index has rows routed to shard ${outside.mkString(", ")}, " +
+          s"outside [0, $numShards) for its $numShards configured shards; " +
+          "route the envelope with the shard count configured for the sink")
+    }
+    val totalDocs = commits.map(_.docCount).sum
+    val totalShards = indexes.map(shardCfg.shardsFor(_).toLong).sum
+    // one line per populated shard; no populated shard → an empty file
+    val manifest = for (index <- indexes; _ <- byIndex(index).map(_.shard).distinct)
+      yield SnapshotLayout.manifestLine(index, snapshotUuid, SnapshotLayout.indexId(index))
 
     // Snapshot repos accumulate: read the live generation (if any), append
     // this snapshot, and publish generation N+1 — the reference's repo
@@ -278,98 +302,35 @@ class EsSnapshotBatchWrite(schema: StructType, dest: String,
       .getOrElse(SnapshotLayout.RepoState.Empty)
       .plus(snapshotName, snapshotUuid, indexes)
 
-    val manifest = new mutable.ArrayBuffer[String]
-    var totalDocs = 0L
-    var totalShards = 0L
-
-    for (index <- indexes) {
-      val numShards = shardCfg.shardsFor(index)
+    val shardWrites = indexes.flatMap { index =>
       val perShard = byIndex(index).groupBy(_.shard)
       val winners = byIndex(index).map(_.fileName).toSet
-      val id = SnapshotLayout.indexId(index)
-
-      for (shard <- 0 until numShards) {
-        val dir = new Path(SnapshotLayout.shardDir(dest, index, shard))
-        val files = perShard.getOrElse(shard, Seq.empty)
-        fs.mkdirs(dir)
-        // Sweep stray files from failed/zombie attempts: survivors are
-        // this commit's winners PLUS (append mode) every file manifested
-        // by an earlier snapshot's snap-*.dat — prior generations stay
-        // restorable. Truncate mode sweeps history too: old data files
-        // AND old snap manifests go. Replaces speculative-off reliance
-        // (IndexingJob.java:121) and empty-dir cleanup
-        // (BaseTransport.java:261-280).
-        // FAIL CLOSED like deleteSnapshot's GC: a prior manifest that
-        // fails to parse must not make its data files look unreferenced —
-        // skip the sweep for this shard dir (stray-attempt files leak,
-        // recoverable) instead of deleting files an earlier snapshot may
-        // still reference (data loss).
-        // ONE listStatus per shard dir serves the whole block: the sweep
-        // (names), the truncate sweep (names), and the FileInfo lengths
-        // (getLen) — deletions below only touch non-winners, so winners'
-        // recorded lengths stay exact.
-        val entries = fs.listStatus(dir)
-        val priorManifested: Option[Set[String]] =
-          if (truncateRepo) Some(Set.empty)
-          else try Some(entries.map(_.getPath)
-            .filter(_.getName.startsWith("snap-"))
-            .flatMap(p =>
-              SnapshotLayout.parseShardSnapFiles(SnapshotLayout.readBytes(fs, p)))
-            .toSet)
-          catch { case _: Exception => None }
-        priorManifested.foreach { prior =>
-          entries.map(_.getPath.getName)
-            .filter(_.startsWith("docs-"))
-            .filterNot(f => winners.contains(f) || prior.contains(f))
-            .foreach(f => fs.delete(new Path(dir, f), false))
-        }
-        if (truncateRepo)
-          entries.map(_.getPath.getName)
-            .filter(n => n.startsWith("snap-") &&
-              n != SnapshotLayout.snapDat(snapshotUuid))
-            .foreach(f => fs.delete(new Path(dir, f), false))
-
-        val docs = files.map(_.docCount).sum
-        // FileInfo lengths are ON-DISK blob sizes (what ES records and a
-        // restore pre-allocates), not payload bytes
-        val onDiskLen: Map[String, Long] =
-          entries.map(s => s.getPath.getName -> s.getLen).toMap
-        val fileLens = files.map(f =>
-          (f.fileName, onDiskLen.getOrElse(f.fileName, f.bytes))).sortBy(_._1)
-        val bytes = fileLens.map(_._2).sum
-        totalDocs += docs
-        // Per-shard snapshot metadata under the ONE canonical snapshot uuid —
-        // the reference achieves this by renaming every reducer's
-        // snap-<reducerUUID>.dat to the base snapshot's uuid
-        // (IndexingPostProcessor.java:195-216); here shards are born stitched.
-        SnapshotLayout.writeBytes(fs,
-          new Path(dir, SnapshotLayout.snapDat(snapshotUuid)),
-          SnapshotLayout.shardSnapDat(snapshotName, docs, bytes, fileLens))
-        if (files.nonEmpty)
-          manifest += SnapshotLayout.manifestLine(index, snapshotUuid, id)
-        // A4: shards with no rows still get a dir + snap file (empty-shard
-        // backfill, BaseTransport.java:144-167).
+      (0 until shardCfg.shardsFor(index)).map { shard => () =>
+        commitShardDir(fs, index, shard, perShard.getOrElse(shard, Seq.empty), winners)
       }
-
-      totalShards += numShards
+    }
+    val indexMetaWrites = indexes.map { index => () =>
       SnapshotLayout.writeBytes(fs,
         new Path(SnapshotLayout.indicesDir(dest, index), SnapshotLayout.metaDat(snapshotUuid)),
-        SnapshotLayout.indexMetaDat(index, id, numShards,
+        SnapshotLayout.indexMetaDat(index, SnapshotLayout.indexId(index),
+          shardCfg.shardsFor(index),
           options.getOrElse(EsSnapshotSink.MappingsOption, "{}")))
     }
-
     // Root metadata (IndexingPostProcessor.java:144-193). The template —
     // cluster-level state in ES — lands in the root MetaData blob under
     // its name, as a real repo stores it.
-    SnapshotLayout.writeBytes(fs,
-      new Path(destPath, SnapshotLayout.snapDat(snapshotUuid)),
-      SnapshotLayout.rootSnapDat(snapshotName, snapshotUuid, indexes,
-        totalDocs, totalShards))
-    SnapshotLayout.writeBytes(fs,
-      new Path(destPath, SnapshotLayout.metaDat(snapshotUuid)),
-      SnapshotLayout.rootMetaDat("graft",
-        options.getOrElse(EsSnapshotSink.TemplateNameOption, "template_1"),
-        options.getOrElse(EsSnapshotSink.TemplateOption, "{}")))
+    val rootWrites = Seq(
+      () => SnapshotLayout.writeBytes(fs,
+        new Path(destPath, SnapshotLayout.snapDat(snapshotUuid)),
+        SnapshotLayout.rootSnapDat(snapshotName, snapshotUuid, indexes,
+          totalDocs, totalShards)),
+      () => SnapshotLayout.writeBytes(fs,
+        new Path(destPath, SnapshotLayout.metaDat(snapshotUuid)),
+        SnapshotLayout.rootMetaDat("graft",
+          options.getOrElse(EsSnapshotSink.TemplateNameOption, "template_1"),
+          options.getOrElse(EsSnapshotSink.TemplateOption, "{}"))))
+    Concurrently.runAll("es-snapshot-commit", shardWrites ++ indexMetaWrites ++ rootWrites)
+
     if (truncateRepo) {
       // forget prior generations at the root: stale index-N pointers and
       // other snapshots' root/index metadata
@@ -395,7 +356,6 @@ class EsSnapshotBatchWrite(schema: StructType, dest: String,
           .foreach(d => fs.delete(d.getPath, true))
     }
     SnapshotLayout.publishRepo(fs, dest, next)
-    // one line per populated shard; no populated shard → an empty file
     SnapshotLayout.writeBytes(fs, new Path(destPath, SnapshotLayout.ManifestFile),
       manifest.sorted.map(_ + "\n").mkString.getBytes(UTF_8))
 
@@ -409,6 +369,68 @@ class EsSnapshotBatchWrite(schema: StructType, dest: String,
         "time_spent_indexing_ms" -> commits.map(_.indexingMs).sum.toString,
         "time_spent_flushing_ms" -> commits.map(_.flushMs).sum.toString,
         "writer_files" -> commits.length.toString).getBytes(UTF_8))
+  }
+
+  /** One shard dir's part of the commit: sweep, then its `snap-<uuid>.dat`.
+    * Touches only `dir`, so shard dirs commit concurrently. */
+  private def commitShardDir(fs: FileSystem, index: String, shard: Int,
+                             files: Seq[ShardFileCommit], winners: Set[String]): Unit = {
+    val dir = new Path(SnapshotLayout.shardDir(dest, index, shard))
+    fs.mkdirs(dir)
+    // Sweep stray files from failed/zombie attempts: survivors are
+    // this commit's winners PLUS (append mode) every file manifested
+    // by an earlier snapshot's snap-*.dat — prior generations stay
+    // restorable. Truncate mode sweeps history too: old data files
+    // AND old snap manifests go. Replaces speculative-off reliance
+    // (IndexingJob.java:121) and empty-dir cleanup
+    // (BaseTransport.java:261-280).
+    // FAIL CLOSED like deleteSnapshot's GC: a prior manifest that
+    // fails to parse must not make its data files look unreferenced —
+    // skip the sweep for this shard dir (stray-attempt files leak,
+    // recoverable) instead of deleting files an earlier snapshot may
+    // still reference (data loss).
+    // ONE listStatus per shard dir serves the whole block: the sweep
+    // (names), the truncate sweep (names), and the FileInfo lengths
+    // (getLen) — deletions below only touch non-winners, so winners'
+    // recorded lengths stay exact.
+    val entries = fs.listStatus(dir)
+    val priorManifested: Option[Set[String]] =
+      if (truncateRepo) Some(Set.empty)
+      else try Some(entries.map(_.getPath)
+        .filter(_.getName.startsWith("snap-"))
+        .flatMap(p =>
+          SnapshotLayout.parseShardSnapFiles(SnapshotLayout.readBytes(fs, p)))
+        .toSet)
+      catch { case _: Exception => None }
+    priorManifested.foreach { prior =>
+      entries.map(_.getPath.getName)
+        .filter(_.startsWith("docs-"))
+        .filterNot(f => winners.contains(f) || prior.contains(f))
+        .foreach(f => fs.delete(new Path(dir, f), false))
+    }
+    if (truncateRepo)
+      entries.map(_.getPath.getName)
+        .filter(n => n.startsWith("snap-") &&
+          n != SnapshotLayout.snapDat(snapshotUuid))
+        .foreach(f => fs.delete(new Path(dir, f), false))
+
+    val docs = files.map(_.docCount).sum
+    // FileInfo lengths are ON-DISK blob sizes (what ES records and a
+    // restore pre-allocates), not payload bytes
+    val onDiskLen: Map[String, Long] =
+      entries.map(s => s.getPath.getName -> s.getLen).toMap
+    val fileLens = files.map(f =>
+      (f.fileName, onDiskLen.getOrElse(f.fileName, f.bytes))).sortBy(_._1)
+    val bytes = fileLens.map(_._2).sum
+    // Per-shard snapshot metadata under the ONE canonical snapshot uuid —
+    // the reference achieves this by renaming every reducer's
+    // snap-<reducerUUID>.dat to the base snapshot's uuid
+    // (IndexingPostProcessor.java:195-216); here shards are born stitched.
+    // A4: shards with no rows still get a dir + snap file (empty-shard
+    // backfill, BaseTransport.java:144-167).
+    SnapshotLayout.writeBytes(fs,
+      new Path(dir, SnapshotLayout.snapDat(snapshotUuid)),
+      SnapshotLayout.shardSnapDat(snapshotName, docs, bytes, fileLens))
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {

@@ -16,7 +16,7 @@ import graft.sources.Ingest
  * published in one place, and every consumer fails loudly on a state it
  * cannot read instead of guessing a generation: appends, reads and GC
  * name the broken file, and a failed publish leaves readers on the
- * previous generation.
+ * previous generation, as does any failure earlier in the commit.
  */
 class SnapshotRepoStateSpec extends SparkSpec {
 
@@ -44,6 +44,29 @@ class SnapshotRepoStateSpec extends SparkSpec {
   private def latestGen(root: JPath): Long =
     SnapshotLayout.parseIndexLatest(
       Files.readAllBytes(root.resolve(SnapshotLayout.IndexLatest)))
+
+  private def ids(dest: String, sel: Option[String] = None): Set[Long] =
+    EsSnapshot.readTable(spark, dest, sel)
+      .select(get_json_object(col("json"), "$.event_id").cast("long"))
+      .collect().map(_.getLong(0)).toSet
+
+  /** Every `docs-*` file under `root`, relative to it. */
+  private def dataFiles(root: JPath): Set[JPath] =
+    Files.walk(root).iterator().asScala
+      .filter(_.getFileName.toString.startsWith("docs-"))
+      .map(root.relativize).toSet
+
+  /** The data files the shard manifests of the generation-0 snapshot list. */
+  private def firstSnapshotFiles(root: JPath): Set[JPath] = {
+    val uuid = SnapshotLayout.parseGenerationSnapshots(
+      Files.readString(root.resolve("index-0"))).head._2
+    Files.walk(root).iterator().asScala
+      .filter(p => p.getFileName.toString == SnapshotLayout.snapDat(uuid) &&
+        p.getParent != root)
+      .flatMap(p => SnapshotLayout.parseShardSnapFiles(Files.readAllBytes(p))
+        .map(f => root.relativize(p.getParent.resolve(f))))
+      .toSet
+  }
 
   test("a torn index.latest fails append, read and GC by name; overwrite resets") {
     withTempDir("graft-torn") { dir =>
@@ -152,6 +175,65 @@ class SnapshotRepoStateSpec extends SparkSpec {
         Files.readString(dir.resolve("index-1"))).map(_._1) === Seq("snap_a", "snap_c"))
       assert(EsSnapshot.readTable(spark, dest).count() === 10)
       assert(EsSnapshot.readTable(spark, dest, Some("snap_a")).count() === 40)
+    }
+  }
+
+  test("a shard manifest that fails in the concurrent phase publishes nothing") {
+    spark.sparkContext.hadoopConfiguration.set(
+      "fs.graftfail.impl", classOf[FailingLatestFileSystem].getName)
+    withTempDir("graft-commit-fail") { dir =>
+      val dest = s"graftfail://$dir"
+      append(dest, 0 until 40, "snap_a")
+      val before = stateFiles(dir)
+      // shard 1's snap-<uuid>.dat of the next append
+      FailingLatestFileSystem.failCreate = p =>
+        p.getName.startsWith("snap-") && p.getParent.getName == "1"
+      val e = try intercept[Exception](append(dest, 40 until 80, "snap_b"))
+        finally FailingLatestFileSystem.armed = false
+      assert(causes(e).exists(c => c.isInstanceOf[java.io.IOException] &&
+        c.getMessage.startsWith("injected failure")), s"unexpected failure: $e")
+
+      assert(stateFiles(dir) === before, "nothing may be published")
+      assert(dataFiles(dir) === firstSnapshotFiles(dir),
+        "the DSv2 abort must remove the failed write's data files")
+      assert(Thread.getAllStackTraces.keySet.asScala
+        .forall(t => !t.getName.startsWith("es-snapshot-commit-")))
+
+      append(dest, 80 until 90, "snap_c")
+      assert(latestGen(dir) === 1L)
+      assert(SnapshotLayout.parseGenerationSnapshots(
+        Files.readString(dir.resolve("index-1"))).map(_._1) === Seq("snap_a", "snap_c"))
+      assert(ids(dest) === (80L until 90L).toSet)
+      assert(ids(dest, Some("snap_a")) === (0L until 40L).toSet)
+    }
+  }
+
+  test("rows routed past the configured shard count fail before any metadata") {
+    withTempDir("graft-shard-range") { dir =>
+      val dest = dir.toString
+      val rows = spark.range(0, 1000).toDF("event_id")
+      EsSnapshot.write(Ingest.fromColumns(rows, "ev", "event_id", 4), dest,
+        ShardConfig(4), Some("snap_a"))
+      val before = stateFiles(dir)
+      def allFiles = Files.walk(dir).iterator().asScala
+        .filter(Files.isRegularFile(_)).map(dir.relativize).toSet
+      val filesBefore = allFiles
+      val wide = Ingest.fromColumns(rows, "ev", "event_id", 16)
+      val outside = wide.select("shard").distinct().collect()
+        .map(_.getInt(0)).filter(_ >= 4).sorted
+      assert(outside.nonEmpty)
+
+      val e = intercept[Exception](
+        EsSnapshot.write(wide, dest, ShardConfig(4), Some("snap_b")))
+      val bad = causes(e).collectFirst { case c: IllegalArgumentException => c }
+      assert(bad.exists(c => c.getMessage.contains("index ev") &&
+        c.getMessage.contains(s"shard ${outside.mkString(", ")}, outside [0, 4)")),
+        s"unexpected failure: $e")
+
+      assert(stateFiles(dir) === before)
+      assert(allFiles === filesBefore, "no metadata written, no data file left")
+      assert(EsSnapshot.readTable(spark, dest).count() === 1000)
+      assert(EsSnapshot.readTable(spark, dest, Some("snap_a")).count() === 1000)
     }
   }
 }

@@ -61,6 +61,13 @@ object SparkEntry {
     p.toString
   }
 
+  /** A fresh dir under [[scratchRoot]] for one call's side artifacts: never
+    * shared with an earlier call (append-mode queries must not pile up
+    * generations), and deleted with the root at JVM exit. */
+  private def freshScratch(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get(scratchRoot), prefix).toString
+
   /** PII-planted documents corpus shared by text_pii / text_pii_redact
     * (and their oracles, which replay the identical CASE plant): three
     * residue classes get an email+ip, ssn+two-phones, and card+ip
@@ -875,11 +882,11 @@ $fieldRows"""
 
     // S5-S12: the full offline-snapshot build — envelope → clustered DSv2
     // write → stitched layout; returns the committed manifest (one row per
-    // populated shard). Side-effects into a fresh temp dir per run.
+    // populated shard). Side-effects into a fresh scratch dir per call.
     "ef_snapshot_build" -> ((s, dir) => {
       import graft.core.ShardConfig
       import graft.sinks.EsSnapshot
-      val dest = java.nio.file.Files.createTempDirectory("graft-snap-q").toString
+      val dest = freshScratch("graft-snap-q")
       val docs = Ingest.fromColumns(t(s, dir, "events"), "events", "event_id", 8)
       EsSnapshot.write(docs, dest, ShardConfig(8), Some("bench_snapshot"))
       // round-trip through the DSv2 read path (one partition per shard)
@@ -895,7 +902,7 @@ $fieldRows"""
     "ef_snapshot_append" -> ((s, dir) => {
       import graft.core.ShardConfig
       import graft.sinks.EsSnapshot
-      val dest = java.nio.file.Files.createTempDirectory("graft-snap-gen").toString
+      val dest = freshScratch("graft-snap-gen")
       val evs = t(s, dir, "events")
       val a = Ingest.fromColumns(evs.filter(col("event_id") % 2 === 0),
         "events", "event_id", 4)
@@ -917,7 +924,7 @@ $fieldRows"""
     "ef_snapshot_retention" -> ((s, dir) => {
       import graft.core.ShardConfig
       import graft.sinks.EsSnapshot
-      val dest = java.nio.file.Files.createTempDirectory("graft-snap-ret").toString
+      val dest = freshScratch("graft-snap-ret")
       val evs = t(s, dir, "events")
       for (r <- 0 to 2)
         EsSnapshot.write(
@@ -942,7 +949,7 @@ $fieldRows"""
       import graft.core.{RoutingStrategyV5, ShardConfig}
       import graft.sinks.EsSnapshot
       val numShards = 8
-      val dest = java.nio.file.Files.createTempDirectory("graft-snap-tr").toString
+      val dest = freshScratch("graft-snap-tr")
       val docs = Ingest.fromColumns(t(s, dir, "events"), "events", "event_id", numShards)
       EsSnapshot.write(docs, dest, ShardConfig(numShards), Some("targeted"))
       val strat = RoutingStrategyV5(numShards)
@@ -2403,8 +2410,7 @@ $fieldRows"""
       import spark.implicits._
       val qs = Seq((1L, "hash join strategy"), (2L, "vector stream scan"))
         .toDF("query_id", "qtext")
-      val dest = java.nio.file.Files.createTempDirectory("graft-bm25-a")
-        .toString
+      val dest = freshScratch("graft-bm25-a")
       val docs = t(s, dir, "documents").select("doc_id", "text")
       graft.operators.TextAnalysis.buildBm25Index(
         docs.filter(col("doc_id") % 2 === 0), dest)
@@ -2901,8 +2907,7 @@ $fieldRows"""
       import spark.implicits._
       val qs = Seq((1L, "hash join strategy"), (2L, "slow scan filter"),
         (3L, "vector stream")).toDF("query_id", "qtext")
-      val dest = java.nio.file.Files.createTempDirectory("graft-rm3-q")
-        .toString
+      val dest = freshScratch("graft-rm3-q")
       graft.operators.TextAnalysis.buildBm25Index(
         t(s, dir, "documents").select("doc_id", "text"), dest)
       graft.operators.TextAnalysis.rm3ExpandQueriesFromIndex(s, dest, qs,
@@ -2920,8 +2925,7 @@ $fieldRows"""
       import spark.implicits._
       val qs = Seq((1L, "hash join strategy"), (2L, "vector stream scan"))
         .toDF("query_id", "qtext")
-      val dest = java.nio.file.Files.createTempDirectory("graft-bm25-q")
-        .toString
+      val dest = freshScratch("graft-bm25-q")
       graft.operators.TextAnalysis.buildBm25Index(
         t(s, dir, "documents").select("doc_id", "text"), dest)
       graft.operators.TextAnalysis.bm25ScoresFromIndex(s, dest, qs)
@@ -2949,8 +2953,7 @@ $fieldRows"""
       import spark.implicits._
       val qs = Seq((1L, "hash join strategy"), (2L, "slow scan filter"),
         (3L, "vector stream")).toDF("query_id", "qtext")
-      val dest = java.nio.file.Files.createTempDirectory("graft-lm-q")
-        .toString
+      val dest = freshScratch("graft-lm-q")
       graft.operators.TextAnalysis.buildBm25Index(
         t(s, dir, "documents").select("doc_id", "text"), dest)
       graft.operators.TextAnalysis.lmDirichletFromIndex(s, dest, qs)
@@ -3397,8 +3400,7 @@ $fieldRows"""
       val dupNovel = novel.filter((col("doc_id") - 2000000L) % 50 === 7)
         .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
       val delta = plants.unionAll(novel).unionAll(dupNovel)
-      val idx = java.nio.file.Files
-        .createTempDirectory("graft-winnow-q").toString
+      val idx = freshScratch("graft-winnow-q")
       Dedup.writeWinnowIndex(docs, idx, "doc_id", "text")
       Dedup.winnowAdmitDelta(docs, delta, idx, "doc_id", "text",
           maxDist = 0)
@@ -3905,7 +3907,7 @@ $fieldRows"""
       val corpus = t(s, dir, "embeddings")
       val queries = corpus.filter(col("vec_id") % 100 === 0)
         .select(col("vec_id").as("query_id"), col("embedding"))
-      val dest = java.nio.file.Files.createTempDirectory("graft-ivf-q").toString
+      val dest = freshScratch("graft-ivf-q")
       Similarity.buildIvfIndex(corpus, dest, numCells = 16)
       Similarity.ivfTopKFromIndex(s, dest, queries, 5, nProbe = 4)
         .filter(col("rank") === 1)
@@ -4069,7 +4071,7 @@ $fieldRows"""
       import graft.core.ShardConfig
       import graft.pipelines.{CorpusPipeline, CorpusPrepConfig}
       import graft.sinks.EsSnapshot
-      val dest = java.nio.file.Files.createTempDirectory("graft-corpus").toString
+      val dest = freshScratch("graft-corpus")
       // the prep stages run through the one-call pipeline facade — same
       // operators, gated here through the composed surface. The
       // blocklist stage (Bloom-gated anti-join, the C4 bad-URL cut)
@@ -4134,7 +4136,7 @@ $fieldRows"""
       import graft.streaming.Streams
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       import s.implicits._
-      val dest = java.nio.file.Files.createTempDirectory("graft-snap-sq").toString
+      val dest = freshScratch("graft-snap-sq")
       val cohort = t(s, dir, "events").filter(col("user_id") % 100 === 0)
         .select(col("event_id")).as[Long].collect().sorted
       val (b0, b1) = cohort.partition(_ % 2 == 0)

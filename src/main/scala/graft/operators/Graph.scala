@@ -53,6 +53,10 @@ object Graph {
    * Damped PageRank by `iters` power-iteration rounds. Returns one row
    * per node: (`node`, `pr`).
    *
+   * Edge rows with a null `src` or `dst` (after the cast to long) name
+   * no edge and are dropped: kept, they would add a null node to `N` and
+   * give their source an out-edge whose share of rank reaches no node.
+   *
    * Unweighted (`weightCol = None`): duplicate `(src, dst)` edges
    * collapse to one, contribution weight is `1/outdeg`. Weighted:
    * duplicate edges SUM their weights (so a link-count column expresses
@@ -113,6 +117,7 @@ object Graph {
     checkpointDir.foreach(sc.setCheckpointDir)
     def cut(df: DataFrame): DataFrame =
       LineageCut.cut(df, reliable = checkpointDir.isDefined)
+    val bothEnds = col("src").isNotNull && col("dst").isNotNull
     val e = cut(weightCol match {
       case Some(wc) => edges
         .select(col(srcCol).cast("long").as("src"),
@@ -122,10 +127,12 @@ object Graph {
           // dropping the edge's weight
           coalesce(col(wc).cast("double"), lit(Double.NegativeInfinity))
             .as("w0"))
+        .filter(bothEnds)
         .groupBy("src", "dst").agg(sum("w0").as("w0"))
       case None => edges
         .select(col(srcCol).cast("long").as("src"),
           col(dstCol).cast("long").as("dst"))
+        .filter(bothEnds)
         .distinct()
         .withColumn("w0", lit(1.0))
     })

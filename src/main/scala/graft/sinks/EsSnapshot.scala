@@ -12,8 +12,10 @@ object EsSnapshot {
 
   /**
    * Bulk-build an offline snapshot from an envelope stream.
-   * The engine inserts the one required shuffle (cluster by index+shard);
-   * commit stitches per-shard snapshots into a single restorable layout.
+   * The engine inserts the one required shuffle, on a writer key that
+   * deals every index's shards evenly over one writer task per core
+   * ([[EsSnapshotSink.writerSlots]]); commit stitches per-shard snapshots
+   * into a single restorable layout.
    * Repos accumulate: each write appends a snapshot + generation;
    * `overwrite = true` makes this snapshot the repo's only one.
    */
@@ -24,7 +26,8 @@ object EsSnapshot {
             template: Option[String] = None,
             options: Map[String, String] = Map.empty,
             overwrite: Boolean = false): Unit = {
-    var w = docs.toDF().write.format("es-snapshot")
+    val slots = EsSnapshotSink.writerSlots(docs.sparkSession, shards)
+    var w = EsSnapshotSink.withWriterKey(docs.toDF(), slots).write.format("es-snapshot")
       .option("path", dest)
       .option(EsSnapshotSink.ShardsDefaultOption, shards.defaultShards)
     shards.perIndex.foreach { case (ix, n) =>

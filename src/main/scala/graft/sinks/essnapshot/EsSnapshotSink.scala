@@ -11,6 +11,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
@@ -20,6 +21,7 @@ import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.hash.Murmur3_x86_32
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
@@ -30,11 +32,14 @@ import graft.core.{Concurrently, ShardConfig}
  * the reference's reducer+post-processor pipeline (SURVEY.md §2.1 S5-S12).
  *
  * Topology mapping:
- *  - reducer per shard (BaseESReducer.java:208-320)  → per-partition
- *    [[ShardDocWriter]] (handles any number of shards per partition; the
- *    engine clusters rows by (index, shard) via
+ *  - reducer per shard (BaseESReducer.java:208-320)  → one writer task per
+ *    core ([[EsSnapshotSink.writerSlots]]), each owning an even share of
+ *    the shards: [[graft.sinks.EsSnapshot.write]] gives every row a writer
+ *    key that depends only on (index, shard), the engine clusters on it
+ *    into exactly that many partitions via
  *    [[RequiresDistributionAndOrdering]], so one shard's rows are never
- *    split across writers)
+ *    split across writers; each [[ShardDocWriter]] keeps its shards'
+ *    streams open side by side, so its input needs no sort
  *  - manifest lines on HDFS (BaseESReducer.java:317-319) → typed
  *    [[ShardCommitMessage]]s through the DSv2 commit protocol
  *  - IndexingPostProcessor.execute (IndexingPostProcessor.java:144-246)
@@ -95,6 +100,45 @@ object EsSnapshotSink {
   val CompressionOption = "compression"
   val CompressionLevelOption = "compression.level"
 
+  /** The int column [[graft.sinks.EsSnapshot.write]] adds and the sink
+    * clusters on: the writer key of the row's (index, shard). */
+  val WriterKeyColumn = "_writer_key"
+
+  /** Writer tasks of one write: one per core, and no more than the widest
+    * index has shards. The facade's key column and the sink's
+    * `requiredNumPartitions` both come from here. */
+  def writerSlots(spark: SparkSession, shardCfg: ShardConfig): Int =
+    math.max(1, math.min(spark.sparkContext.defaultParallelism,
+      (shardCfg.perIndex.values.toSeq :+ shardCfg.defaultShards).max))
+
+  /** `keys(s)`: the smallest int k >= 0 that Spark's `HashPartitioning`
+    * over `n` partitions sends to partition `s` (`pmod(murmur3(k, 42), n)`).
+    * Spark hashes the clustering value, so clustering on the raw slot would
+    * pile slots onto the same partitions (at n = 4, slots 0-3 land on
+    * partitions 3, 3, 2, 3); clustering on `keys(slot)` lands slot s on
+    * partition s. */
+  def writerKeys(n: Int): Array[Int] = {
+    val keys = Array.fill(n)(-1)
+    var found = 0
+    var k = 0
+    while (found < n) {
+      val p = Math.floorMod(Murmur3_x86_32.hashInt(k, 42), n)
+      if (keys(p) < 0) { keys(p) = k; found += 1 }
+      k += 1
+    }
+    keys
+  }
+
+  /** `docs` with the [[WriterKeyColumn]] of `n` writer slots: an index's
+    * shards go round-robin over the slots, from an offset its name sets,
+    * so every task gets an even share of every index. The key depends on
+    * (index, shard) alone, so a shard is written by exactly one task. */
+  def withWriterKey(docs: DataFrame, n: Int): DataFrame = {
+    import org.apache.spark.sql.functions.{col, hash, lit, pmod, typedLit}
+    val slot = pmod(col("shard") + pmod(hash(col("index")), lit(n)), lit(n))
+    docs.withColumn(WriterKeyColumn, typedLit(writerKeys(n).toSeq).getItem(slot))
+  }
+
   def shardConfig(options: Map[String, String]): ShardConfig = {
     val default = options.getOrElse(ShardsDefaultOption, "5").toInt
     val perIndex = options.collect {
@@ -146,6 +190,11 @@ class EsSnapshotWriteBuilder(info: LogicalWriteInfo)
           given.find(_.name == n).exists(_.dataType == dt) },
       s"es-snapshot sink expects the IndexableDoc envelope " +
         s"${EsSnapshotSink.Schema.simpleString}, got ${given.simpleString}")
+    require(given.find(_.name == EsSnapshotSink.WriterKeyColumn)
+      .exists(_.dataType == IntegerType),
+      s"es-snapshot sink input lacks the int column " +
+        s"${EsSnapshotSink.WriterKeyColumn} it clusters writers on; " +
+        "write through EsSnapshot.write, which adds it")
     // Mappings/template options land PARSED in the metadata blobs at
     // commit time — reject malformed input here, before any executor
     // writes a byte, not mid-commit with a raw Jackson error. They must
@@ -173,24 +222,19 @@ class EsSnapshotWrite(info: LogicalWriteInfo, truncateRepo: Boolean = false)
   private val dest = options.getOrElse("path",
     throw new IllegalArgumentException("es-snapshot sink requires .option(\"path\", dest)"))
 
-  /** Cluster rows by (index, shard): each shard is built by exactly one
-    * writer — the reference's reducer-per-shard invariant — while letting
-    * AQE pick partition counts / coalesce empties. */
+  /** Cluster rows on the writer key into exactly [[EsSnapshotSink.writerSlots]]
+    * partitions: each shard is built by exactly one writer — the
+    * reference's reducer-per-shard invariant — and every writer gets an
+    * even share of the shards. A fixed partition count also keeps AQE from
+    * merging a small write into one task. */
   override def requiredDistribution(): Distribution =
-    Distributions.clustered(Array(
-      Expressions.identity("index"), Expressions.identity("shard")))
-  override def requiredNumPartitions(): Int = 0 // engine/AQE decides
+    Distributions.clustered(Array(Expressions.identity(EsSnapshotSink.WriterKeyColumn)))
+  override def requiredNumPartitions(): Int = EsSnapshotSink.writerSlots(
+    SparkSession.active, EsSnapshotSink.shardConfig(options))
 
-  /** In-partition sort by (index, shard): rows arrive group-contiguous, so
-    * a writer keeps exactly ONE output stream open regardless of how many
-    * shards AQE packs into its partition (file-handle/memory bound at
-    * wide shard counts; the reference gets the same effect from MR's
-    * shuffle sort). */
-  override def requiredOrdering(): Array[SortOrder] = Array(
-    Expressions.sort(Expressions.identity("index"),
-      org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING),
-    Expressions.sort(Expressions.identity("shard"),
-      org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING))
+  /** No sort: a writer keeps one stream open per shard it owns (see
+    * [[ShardDocWriter]]). */
+  override def requiredOrdering(): Array[SortOrder] = Array.empty
 
   override def toBatch: BatchWrite =
     new EsSnapshotBatchWrite(info.schema(), dest, options, truncateRepo)
@@ -368,7 +412,11 @@ class EsSnapshotBatchWrite(schema: StructType, dest: String,
         "bytes_written" -> commits.map(_.bytes).sum.toString,
         "time_spent_indexing_ms" -> commits.map(_.indexingMs).sum.toString,
         "time_spent_flushing_ms" -> commits.map(_.flushMs).sum.toString,
-        "writer_files" -> commits.length.toString).getBytes(UTF_8))
+        "writer_files" -> commits.length.toString,
+        "writer_tasks" -> messages.count {
+          case m: ShardCommitMessage => m.files.nonEmpty
+          case _ => false
+        }.toString).getBytes(UTF_8))
   }
 
   /** One shard dir's part of the commit: sweep, then its `snap-<uuid>.dat`.
@@ -454,11 +502,23 @@ class ShardDocWriterFactory(schema: StructType, dest: String,
       gzip, gzipLevel, batchDocs)
 }
 
+object ShardDocWriter {
+  /** Streams one task keeps open at most: each holds two 64 KB buffers, a
+    * deflater (~256 KB of native state) and a file handle. */
+  val MaxOpenStreams = 64
+}
+
 /**
  * Per-partition writer: streams each (index, shard) group's documents as
  * gzipped NDJSON directly to the destination FS under an attempt-unique
  * name (idempotency: the file only becomes part of the snapshot if this
  * task's commit message wins).
+ *
+ * Rows arrive in shuffle order, unsorted, so the writer keeps one open
+ * stream per shard it owns, up to [[ShardDocWriter.MaxOpenStreams]]; at
+ * the cap it finishes the stream written least recently, and a later row
+ * for that shard opens the shard's next file (`seq` + 1), which the
+ * commit manifests like a rolled one.
  *
  * Mirrors the reducer's batching intent (BaseESReducer.java:255-266): the
  * buffered+gzip stream flushes by size; counters time the indexing (append)
@@ -467,9 +527,8 @@ class ShardDocWriterFactory(schema: StructType, dest: String,
  * Hot path: the 64 KB buffer sits IN FRONT of the deflater, so gzip sees
  * whole blocks (one deflate + CRC call per 64 KB, not one per doc and one
  * per newline); payloads go to that buffer through `UTF8String.writeTo`
- * (no `getBytes` copy when the row sits in a byte array), and the
- * shard-change test compares the row's `index` bytes without decoding a
- * String.
+ * (no `getBytes` copy when the row sits in a byte array), and the open
+ * stream is found by the row's `index` bytes without decoding a String.
  */
 class ShardDocWriter(schema: StructType, dest: String, conf: Configuration,
                      partitionId: Int, taskId: Long, batchBytes: Long,
@@ -489,8 +548,8 @@ class ShardDocWriter(schema: StructType, dest: String, conf: Configuration,
 
   private final class ShardStream(val index: String, val shard: Int, seq: Int) {
     val indexKey: UTF8String = UTF8String.fromString(index)
-    // seq guards the (engine-violated-ordering) case where a group is
-    // revisited after its stream closed: a fresh file, never an overwrite
+    // seq numbers a shard's files in this task (rolls and reopens after an
+    // eviction): a fresh file each time, never an overwrite
     val fileName: String = SnapshotLayout.dataFile(s"$writerUuid-$seq", gzip)
     val path = new Path(SnapshotLayout.shardDir(dest, index, shard), fileName)
     private val fs = path.getFileSystem(conf)
@@ -503,6 +562,7 @@ class ShardDocWriter(schema: StructType, dest: String, conf: Configuration,
     var bytes = 0L
     var indexingNanos = 0L
     var flushNanos = 0L
+    var lastRow = 0L // the task's row number of the latest append
 
     def append(json: UTF8String): Unit = {
       val t0 = System.nanoTime()
@@ -526,26 +586,31 @@ class ShardDocWriter(schema: StructType, dest: String, conf: Configuration,
     }
   }
 
-  // Rows arrive sorted by (index, shard) per requiredOrdering, so exactly
-  // one stream is open at a time; finished files accumulate as commits.
-  private var current: ShardStream = null
+  // open streams by (index bytes, shard); finished files accumulate as commits
+  private val open = mutable.HashMap.empty[(UTF8String, Int), ShardStream]
   private val finished = mutable.ArrayBuffer.empty[ShardFileCommit]
-  private val openSeq = mutable.HashMap.empty[(String, Int), Int]
+  private val nextSeq = mutable.HashMap.empty[(String, Int), Int]
+  private var rows = 0L
   private var docsSoFar = 0L
   private var bytesSoFar = 0L
   private var indexingNanosSoFar = 0L
 
-  private def roll(index: String, shard: Int): ShardStream = {
-    if (current != null) {
-      docsSoFar += current.docCount
-      bytesSoFar += current.bytes
-      indexingNanosSoFar += current.indexingNanos
-      finished += current.finish()
-    }
-    val seq = openSeq.getOrElse((index, shard), 0)
-    openSeq((index, shard)) = seq + 1
-    current = new ShardStream(index, shard, seq)
-    current
+  private def finish(s: ShardStream): Unit = {
+    finished += s.finish() // a failed close leaves it open, for abort
+    open.remove((s.indexKey, s.shard))
+    docsSoFar += s.docCount
+    bytesSoFar += s.bytes
+    indexingNanosSoFar += s.indexingNanos
+  }
+
+  private def openStream(index: String, shard: Int): ShardStream = {
+    if (open.size >= ShardDocWriter.MaxOpenStreams)
+      finish(open.valuesIterator.minBy(_.lastRow))
+    val seq = nextSeq.getOrElse((index, shard), 0)
+    nextSeq((index, shard)) = seq + 1
+    val s = new ShardStream(index, shard, seq)
+    open((s.indexKey, shard)) = s
+    s
   }
 
   private def thresholdHit(s: ShardStream): Boolean =
@@ -555,33 +620,36 @@ class ShardDocWriter(schema: StructType, dest: String, conf: Configuration,
   override def write(record: InternalRow): Unit = {
     val index = record.getUTF8String(iIndex)
     val shard = record.getInt(iShard)
-    val stream =
-      if (current != null && current.shard == shard && current.indexKey == index) {
-        // bounded data files: roll at the bytes/docs flush threshold (the
-        // reference's bulk-size knobs); every rolled file is committed and
-        // listed in the shard's snap manifest
-        if (thresholdHit(current)) roll(current.index, shard) else current
-      } else roll(index.toString, shard)
+    val stream = open.getOrElse((index, shard), null) match {
+      case null => openStream(index.toString, shard)
+      // bounded data files: roll at the bytes/docs flush threshold (the
+      // reference's bulk-size knobs); every rolled file is committed and
+      // listed in the shard's snap manifest
+      case s if thresholdHit(s) => finish(s); openStream(s.index, shard)
+      case s => s
+    }
+    rows += 1
+    stream.lastRow = rows
     stream.append(record.getUTF8String(iJson))
   }
 
   override def commit(): WriterCommitMessage = {
-    if (current != null) { finished += current.finish(); current = null }
+    open.values.toSeq.foreach(finish)
     ShardCommitMessage(finished.toSeq)
   }
 
   override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] = {
-    val (d, b, n) =
-      if (current == null) (0L, 0L, 0L)
-      else (current.docCount, current.bytes, current.indexingNanos)
+    val streams = open.values
     Array(
-      TaskMetric("docsWritten", docsSoFar + d),
-      TaskMetric("bytesWritten", bytesSoFar + b),
-      TaskMetric("indexingMs", (indexingNanosSoFar + n) / 1000000))
+      TaskMetric("docsWritten", docsSoFar + streams.map(_.docCount).sum),
+      TaskMetric("bytesWritten", bytesSoFar + streams.map(_.bytes).sum),
+      TaskMetric("indexingMs",
+        (indexingNanosSoFar + streams.map(_.indexingNanos).sum) / 1000000))
   }
 
   override def abort(): Unit = {
-    if (current != null) current.abort()
+    open.values.foreach(_.abort())
+    open.clear()
     // also remove files this task already closed — their commits will
     // never reach the driver
     finished.foreach { c =>

@@ -182,6 +182,21 @@ class GraphSpec extends SparkSpec {
     assert(leaky.values.sum < 0.999)
   }
 
+  test("pageRank drops edge rows with a null endpoint") {
+    val clean = edges.map { case (s, d) => (Option(s), Option(d)) }
+    def ranks(rows: Seq[(Option[Long], Option[Long])], weighted: Boolean): Map[Long, Double] = {
+      val df = rows.toDF("src", "dst").withColumn("w", lit(1.0))
+      Graph.pageRank(df, "src", "dst", iters = 10,
+          weightCol = if (weighted) Some("w") else None)
+        .as[(Long, Double)].collect().toMap
+    }
+    for (weighted <- Seq(false, true)) {
+      val want = ranks(clean, weighted)
+      assert(ranks(clean :+ (Some(2L), None), weighted) === want, s"null dst, weighted = $weighted")
+      assert(ranks(clean :+ (None, Some(3L)), weighted) === want, s"null src, weighted = $weighted")
+    }
+  }
+
   test("pageRank validates its inputs") {
     intercept[IllegalArgumentException] {
       Graph.pageRank(edges.toDF("src", "dst"), "src", "dst", iters = 0)

@@ -961,7 +961,7 @@ $fieldRows"""
       val shards = ids.map(strat.shardFor).distinct.toSeq
       EsSnapshot.readTable(s, dest)
         .filter(col("shard").isin(shards: _*)) // pushed → prunes shard dirs
-        .select(get_json_object(col("json"), "$.event_id").as("doc_id"))
+        .select(graft.functions.Json.docId(col("json"), "event_id").as("doc_id"))
         .filter(col("doc_id").isin(ids.toSeq: _*))
         .agg(count(lit(1)).as("found_docs"))
     }),

@@ -14,6 +14,15 @@ package object functions {
       org.apache.spark.sql.graft.EsHashFunctions.esRouting(c, numShards)
   }
 
+  /** JSON field extraction (see org.apache.spark.sql.graft.JsonDocId). */
+  object Json {
+    /** `get_json_object(json, "$.<field>")`: a byte-level scan of the line
+      * for a plain top-level field name, with Spark's parser as the exact
+      * fallback; any other path goes to `get_json_object` itself. */
+    def docId(json: Column, field: String): Column =
+      org.apache.spark.sql.graft.JsonDocIdFunctions.docId(json, field)
+  }
+
   /** Text-sketch expressions (see org.apache.spark.sql.graft.TextSketches). */
   object Text {
     /** MinHash signature: Array[Long] of `numHashes` minimums over

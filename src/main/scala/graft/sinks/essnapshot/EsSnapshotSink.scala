@@ -264,10 +264,12 @@ private[essnapshot] case class TaskMetric(metricName: String, metricValue: Long)
   override def value(): Long = metricValue
 }
 
-/** One (index, shard, dataFile) unit committed by a writer task. */
+/** One (index, shard, dataFile) unit committed by a writer task. Times
+  * stay in nanoseconds until the commit sums them: a file's sub-ms share
+  * would vanish if each were truncated to whole ms first. */
 case class ShardFileCommit(index: String, shard: Int, fileName: String,
-                           docCount: Long, bytes: Long, indexingMs: Long,
-                           flushMs: Long) extends Serializable
+                           docCount: Long, bytes: Long, indexingNanos: Long,
+                           flushNanos: Long) extends Serializable
 
 case class ShardCommitMessage(files: Seq[ShardFileCommit])
     extends WriterCommitMessage
@@ -410,8 +412,8 @@ class EsSnapshotBatchWrite(schema: StructType, dest: String,
         "snapshot_uuid" -> SnapshotLayout.jsonStr(snapshotUuid),
         "index_doc_created" -> totalDocs.toString,
         "bytes_written" -> commits.map(_.bytes).sum.toString,
-        "time_spent_indexing_ms" -> commits.map(_.indexingMs).sum.toString,
-        "time_spent_flushing_ms" -> commits.map(_.flushMs).sum.toString,
+        "time_spent_indexing_ms" -> (commits.map(_.indexingNanos).sum / 1000000).toString,
+        "time_spent_flushing_ms" -> (commits.map(_.flushNanos).sum / 1000000).toString,
         "writer_files" -> commits.length.toString,
         "writer_tasks" -> messages.count {
           case m: ShardCommitMessage => m.files.nonEmpty
@@ -576,8 +578,7 @@ class ShardDocWriter(schema: StructType, dest: String, conf: Configuration,
       val t0 = System.nanoTime()
       out.close()
       flushNanos += System.nanoTime() - t0
-      ShardFileCommit(index, shard, fileName, docCount, bytes,
-        indexingNanos / 1000000, flushNanos / 1000000)
+      ShardFileCommit(index, shard, fileName, docCount, bytes, indexingNanos, flushNanos)
     }
     def abort(): Unit = {
       try out.close() catch { case _: Exception => () }

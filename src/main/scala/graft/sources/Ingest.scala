@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import graft.core.IndexableDoc
-import graft.functions.EsHash
+import graft.functions.{EsHash, Json}
 
 /**
  * Ingest surface of the engine — the reference's scan-side operators
@@ -15,7 +15,8 @@ import graft.functions.EsHash
  * string end-to-end, reference: src/main/java/com/simondata/example/
  * IndexingMapperImpl.java:48-58), [[ndjsonRaw]] preserves the raw line so
  * the sink writes byte-exact payloads; only the document id is ever parsed
- * out, by one `get_json_object` per row whose result every later column
+ * out, by one byte-level scan per row ([[graft.functions.Json.docId]],
+ * exactly `get_json_object`'s answer) whose result every later column
  * reads (see [[Ingest.toIndexable]]).
  */
 object Ingest {
@@ -101,9 +102,12 @@ object Ingest {
    * The one body behind [[toIndexable]] and [[toIndexableObserved]]: the id
    * is parsed once, in a projection of (`docId`, `json`), and the counters,
    * the null filter and the routing columns all read that `docId` column.
+   * The parse is [[graft.functions.Json.docId]]: a byte-level scan of the
+   * line that returns what `get_json_object(json, '$.<docIdField>')` would,
+   * and hands any line outside its strict JSON subset to Spark's parser.
    * With an observation, its `CollectMetrics` node also keeps the filter
    * above the parse: Catalyst cannot push a predicate through it, so it
-   * never re-inlines `get_json_object` into the filter.
+   * never re-inlines the parse into the filter.
    */
   private def envelope(df: DataFrame, indexName: String, docIdField: String,
                        numShards: Int, jsonCol: String, failFast: Boolean,
@@ -112,7 +116,7 @@ object Ingest {
     val spark = df.sparkSession
     import spark.implicits._
     val json = col(jsonCol)
-    val extracted = get_json_object(json, s"$$.$docIdField")
+    val extracted = Json.docId(json, docIdField)
     val docId =
       if (failFast)
         coalesce(extracted, raise_error(concat(

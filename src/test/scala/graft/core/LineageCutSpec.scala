@@ -36,8 +36,7 @@ class LineageCutSpec extends SparkSpec {
    *  local (the no-ambient-state contract). */
   private def bothModes(f: => Set[String]): Unit = {
     val local = f
-    val dir = java.nio.file.Files.createTempDirectory("graft-cut-spec")
-    try {
+    try withTempDir("graft-cut-spec") { dir =>
       spark.sparkContext.setCheckpointDir(dir.toString)
       // setCheckpointDir scaffolds an empty subdir immediately — count
       // regular FILES, the evidence of an actual checkpoint write
@@ -60,7 +59,6 @@ class LineageCutSpec extends SparkSpec {
     } finally {
       spark.conf.unset(LineageCut.ReliableConfKey)
       spark.sparkContext.setCheckpointDir(null)
-      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
     }
   }
 
@@ -108,8 +106,7 @@ class LineageCutSpec extends SparkSpec {
       (11L, "a wholly new delta document about something else entirely"),
       (12L, "a wholly new delta document about something else entirely")
     ).toDF("doc_id", "text")
-    val idx = java.nio.file.Files.createTempDirectory("graft-cut-widx")
-    try {
+    withTempDir("graft-cut-widx") { idx =>
       Dedup.writeWinnowIndex(corpus, idx.toString, "doc_id", "text")
       bothModes {
         Dedup.winnowAdmitDelta(corpus, delta, idx.toString,
@@ -117,8 +114,6 @@ class LineageCutSpec extends SparkSpec {
           .select("doc_id").as[Long].collect().toSet
           .map((x: Long) => x.toString)
       }
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(idx.toFile)
     }
   }
 
@@ -126,8 +121,7 @@ class LineageCutSpec extends SparkSpec {
     val local = Similarity.semanticDedup(vecs, threshold = 0.9,
         numCells = 2, idCol = "vec_id", vecCol = "embedding")
       .select("vec_id").as[Long].collect().toSet
-    val dir = java.nio.file.Files.createTempDirectory("graft-cut-spec")
-    try {
+    try withTempDir("graft-cut-spec") { dir =>
       spark.sparkContext.setCheckpointDir(dir.toString)
       spark.conf.set(LineageCut.ReliableConfKey, "true")
       val reliable = Similarity.semanticDedup(vecs, threshold = 0.9,
@@ -137,7 +131,6 @@ class LineageCutSpec extends SparkSpec {
     } finally {
       spark.conf.unset(LineageCut.ReliableConfKey)
       spark.sparkContext.setCheckpointDir(null)
-      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
     }
   }
 }

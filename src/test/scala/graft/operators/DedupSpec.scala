@@ -499,8 +499,7 @@ class DedupSpec extends SparkSpec {
       // novel singleton → admitted
       (13L, "nothing in the corpus or the delta resembles this text at all")
     ).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-winnow-idx")
-    try {
+    withTempDir("graft-winnow-idx") { dir =>
       Dedup.writeWinnowIndex(corpus, dir.toString, "doc_id", "text")
       val admitted = Dedup.winnowAdmitDelta(corpus, delta, dir.toString,
           "doc_id", "text", maxDist = 2)
@@ -519,8 +518,6 @@ class DedupSpec extends SparkSpec {
           "doc_id", "text", maxDist = 2)
         .select("doc_id").as[Long].collect().toSet
       assert(full.filter(_ >= 10L) === admitted.toSet)
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
     }
   }
 

@@ -130,8 +130,7 @@ class GraphSpec extends SparkSpec {
     // local-mode default
     val local = Graph.pageRank(edges.toDF("src", "dst"), "src", "dst",
       iters = 7).as[(Long, Double)].collect().toMap
-    val dir = java.nio.file.Files.createTempDirectory("graft-pr-ckpt")
-    try {
+    try withTempDir("graft-pr-ckpt") { dir =>
       val rel = Graph.pageRank(edges.toDF("src", "dst"), "src", "dst",
           iters = 7, checkpointDir = Some(dir.toString))
         .as[(Long, Double)].collect().toMap
@@ -141,7 +140,6 @@ class GraphSpec extends SparkSpec {
       assert(wrote, "reliable checkpoint wrote nothing under the dir")
     } finally {
       spark.sparkContext.setCheckpointDir(null)
-      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
     }
   }
 
@@ -247,14 +245,14 @@ class GraphSpec extends SparkSpec {
   }
 
   test("hits: reliable-checkpoint mode returns identical scores") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-hits-ck").toString
     val local = Graph.hits(edges.toDF("src", "dst"), "src", "dst", iters = 4)
       .as[(Long, Double, Double)].collect().toSet
-    val rel = Graph.hits(edges.toDF("src", "dst"), "src", "dst", iters = 4,
-        checkpointDir = Some(dir))
-      .as[(Long, Double, Double)].collect().toSet
-    assert(rel === local)
-    spark.sparkContext.setCheckpointDir(null) // restore shared-session state
+    try withTempDir("graft-hits-ck") { dir =>
+      val rel = Graph.hits(edges.toDF("src", "dst"), "src", "dst", iters = 4,
+          checkpointDir = Some(dir.toString))
+        .as[(Long, Double, Double)].collect().toSet
+      assert(rel === local)
+    } finally spark.sparkContext.setCheckpointDir(null) // restore shared-session state
   }
 
   // ── connected components ────────────────────────────────────────────

@@ -1,5 +1,7 @@
 package graft.operators
 
+import java.nio.file.Files
+
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -222,19 +224,21 @@ class SimilaritySpec extends SparkSpec {
           "i -> cast(pmod(xxhash64(vec_id, i), 1000) / 1000.0 - 0.5 as float))"))
     val queries = vecs.filter(col("vec_id") % 200 === 0)
       .select(col("vec_id").as("query_id"), col("embedding"))
-    val dest = java.nio.file.Files.createTempDirectory("graft-ivf-ix").toString
-    Similarity.buildIvfIndex(vecs, dest, numCells = 8)
-    val direct = Similarity.ivfTopK(vecs, queries, 5, numCells = 8, nProbe = 3)
-    val fromIx = Similarity.ivfTopKFromIndex(spark, dest, queries, 5, nProbe = 3)
-    assert(fromIx.exceptAll(direct).isEmpty && direct.exceptAll(fromIx).isEmpty)
-    // the store really is cell-partitioned (one directory per cell)
-    val cells = new java.io.File(s"$dest/vectors").listFiles()
-      .filter(_.isDirectory).map(_.getName).filter(_.startsWith("cell=")).toSeq
-    assert(cells.nonEmpty && cells.size <= 8)
-    // rebuilding over the same dest overwrites cleanly (same results)
-    Similarity.buildIvfIndex(vecs, dest, numCells = 8)
-    val again = Similarity.ivfTopKFromIndex(spark, dest, queries, 5, nProbe = 3)
-    assert(again.exceptAll(direct).isEmpty && direct.exceptAll(again).isEmpty)
+    withTempDir("graft-ivf-ix") { dir =>
+      val dest = dir.toString
+      Similarity.buildIvfIndex(vecs, dest, numCells = 8)
+      val direct = Similarity.ivfTopK(vecs, queries, 5, numCells = 8, nProbe = 3)
+      val fromIx = Similarity.ivfTopKFromIndex(spark, dest, queries, 5, nProbe = 3)
+      assert(fromIx.exceptAll(direct).isEmpty && direct.exceptAll(fromIx).isEmpty)
+      // the store really is cell-partitioned (one directory per cell)
+      val cells = new java.io.File(s"$dest/vectors").listFiles()
+        .filter(_.isDirectory).map(_.getName).filter(_.startsWith("cell=")).toSeq
+      assert(cells.nonEmpty && cells.size <= 8)
+      // rebuilding over the same dest overwrites cleanly (same results)
+      Similarity.buildIvfIndex(vecs, dest, numCells = 8)
+      val again = Similarity.ivfTopKFromIndex(spark, dest, queries, 5, nProbe = 3)
+      assert(again.exceptAll(direct).isEmpty && direct.exceptAll(again).isEmpty)
+    }
   }
 
   test("appendToIvfIndex: delta probes through the frozen codebook; " +
@@ -246,25 +250,27 @@ class SimilaritySpec extends SparkSpec {
           "i -> cast(pmod(xxhash64(vec_id, i), 1000) / 1000.0 - 0.5 as float))"))
     val old = vecs.filter(col("vec_id") % 2 === 0)
     val delta = vecs.filter(col("vec_id") % 2 === 1)
-    val dest = java.nio.file.Files.createTempDirectory("graft-ivf-app").toString
-    Similarity.buildIvfIndex(old, dest, numCells = 8)
-    val census = Similarity.appendToIvfIndex(delta, dest)
-    assert(census.values.sum === n / 2) // every delta row landed in a cell
-    // appended vectors self-recover through the store: their argmin cell
-    // under the OLD codebook is exactly the first cell the probe checks
-    val queries = vecs.filter(col("vec_id") % 400 === 1) // odd = appended
-      .select(col("vec_id").as("query_id"), col("embedding"))
-    val got = Similarity.ivfTopKFromIndex(spark, dest, queries, 1, nProbe = 2)
-      .filter(col("rank") === 1)
-      .select("query_id", "nn_id").as[(Long, Long)].collect().toSeq
-    assert(got.nonEmpty && got.forall { case (q, nn) => q === nn })
-    // old vectors unaffected
-    val oldQ = vecs.filter(col("vec_id") % 400 === 0)
-      .select(col("vec_id").as("query_id"), col("embedding"))
-    val gotOld = Similarity.ivfTopKFromIndex(spark, dest, oldQ, 1, nProbe = 2)
-      .filter(col("rank") === 1)
-      .select("query_id", "nn_id").as[(Long, Long)].collect().toSeq
-    assert(gotOld.nonEmpty && gotOld.forall { case (q, nn) => q === nn })
+    withTempDir("graft-ivf-app") { dir =>
+      val dest = dir.toString
+      Similarity.buildIvfIndex(old, dest, numCells = 8)
+      val census = Similarity.appendToIvfIndex(delta, dest)
+      assert(census.values.sum === n / 2) // every delta row landed in a cell
+      // appended vectors self-recover through the store: their argmin cell
+      // under the OLD codebook is exactly the first cell the probe checks
+      val queries = vecs.filter(col("vec_id") % 400 === 1) // odd = appended
+        .select(col("vec_id").as("query_id"), col("embedding"))
+      val got = Similarity.ivfTopKFromIndex(spark, dest, queries, 1, nProbe = 2)
+        .filter(col("rank") === 1)
+        .select("query_id", "nn_id").as[(Long, Long)].collect().toSeq
+      assert(got.nonEmpty && got.forall { case (q, nn) => q === nn })
+      // old vectors unaffected
+      val oldQ = vecs.filter(col("vec_id") % 400 === 0)
+        .select(col("vec_id").as("query_id"), col("embedding"))
+      val gotOld = Similarity.ivfTopKFromIndex(spark, dest, oldQ, 1, nProbe = 2)
+        .filter(col("rank") === 1)
+        .select("query_id", "nn_id").as[(Long, Long)].collect().toSeq
+      assert(gotOld.nonEmpty && gotOld.forall { case (q, nn) => q === nn })
+    }
   }
 
   test("rebuildIvfIndexIfSkewed: skip below threshold, generation swap above, " +
@@ -274,74 +280,76 @@ class SimilaritySpec extends SparkSpec {
       .withColumn("embedding",
         expr("transform(sequence(1, 8), " +
           "i -> cast(pmod(xxhash64(vec_id, i), 1000) / 1000.0 - 0.5 as float))"))
-    val dest = java.nio.file.Files.createTempDirectory("graft-ivf-rb").toString
-    Similarity.buildIvfIndex(vecs.filter(col("vec_id") % 4 === 0), dest,
-      numCells = 8)
-    Similarity.appendToIvfIndex(vecs.filter(col("vec_id") % 4 =!= 0), dest)
-    val queries = vecs.filter(col("vec_id") % 200 === 0)
-      .select(col("vec_id").as("query_id"), col("embedding"))
-    val before = Similarity.ivfTopKFromIndex(spark, dest, queries, 3,
-      nProbe = 3)
+    withTempDir("graft-ivf-rb") { tmpDir =>
+      val dest = tmpDir.toString
+      Similarity.buildIvfIndex(vecs.filter(col("vec_id") % 4 === 0), dest,
+        numCells = 8)
+      Similarity.appendToIvfIndex(vecs.filter(col("vec_id") % 4 =!= 0), dest)
+      val queries = vecs.filter(col("vec_id") % 200 === 0)
+        .select(col("vec_id").as("query_id"), col("embedding"))
+      val before = Similarity.ivfTopKFromIndex(spark, dest, queries, 3,
+        nProbe = 3)
 
-    // an absurdly high threshold skips: returns false, store untouched
-    assert(!Similarity.rebuildIvfIndexIfSkewed(spark, dest,
-      skewThreshold = 1e9))
-    assert(Similarity.resolveIvfDir(spark, dest) === dest)
+      // an absurdly high threshold skips: returns false, store untouched
+      assert(!Similarity.rebuildIvfIndexIfSkewed(spark, dest,
+        skewThreshold = 1e9))
+      assert(Similarity.resolveIvfDir(spark, dest) === dest)
 
-    // FAILED-ATTEMPT ATOMICITY: a died rebuild = partial gen dir with
-    // no COMMITTED marker (simulate one), even with a stale CURRENT
-    // pointing at it — the resolver must keep serving the old layout
-    val carcass = new java.io.File(s"$dest/gen-7/vectors"); carcass.mkdirs()
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$dest/CURRENT"), "gen-7")
-    assert(Similarity.resolveIvfDir(spark, dest) === dest)
-    val during = Similarity.ivfTopKFromIndex(spark, dest, queries, 3,
-      nProbe = 3)
-    assert(during.exceptAll(before).isEmpty && before.exceptAll(during).isEmpty)
+      // FAILED-ATTEMPT ATOMICITY: a died rebuild = partial gen dir with
+      // no COMMITTED marker (simulate one), even with a stale CURRENT
+      // pointing at it — the resolver must keep serving the old layout
+      val carcass = new java.io.File(s"$dest/gen-7/vectors"); carcass.mkdirs()
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(s"$dest/CURRENT"), "gen-7")
+      assert(Similarity.resolveIvfDir(spark, dest) === dest)
+      val during = Similarity.ivfTopKFromIndex(spark, dest, queries, 3,
+        nProbe = 3)
+      assert(during.exceptAll(before).isEmpty && before.exceptAll(during).isEmpty)
 
-    // threshold 1.0 always fires: new generation must be COMMITTED,
-    // CURRENT swung past the carcass (attempt-unique: gen-8, not gen-7),
-    // and the carcass swept
-    assert(Similarity.rebuildIvfIndexIfSkewed(spark, dest,
-      skewThreshold = 1.0, numCells = 8))
-    assert(Similarity.resolveIvfDir(spark, dest) === s"$dest/gen-8")
-    assert(new java.io.File(s"$dest/gen-8/COMMITTED").exists())
-    assert(!new java.io.File(s"$dest/gen-7").exists(), "carcass not swept")
+      // threshold 1.0 always fires: new generation must be COMMITTED,
+      // CURRENT swung past the carcass (attempt-unique: gen-8, not gen-7),
+      // and the carcass swept
+      assert(Similarity.rebuildIvfIndexIfSkewed(spark, dest,
+        skewThreshold = 1.0, numCells = 8))
+      assert(Similarity.resolveIvfDir(spark, dest) === s"$dest/gen-8")
+      assert(new java.io.File(s"$dest/gen-8/COMMITTED").exists())
+      assert(!new java.io.File(s"$dest/gen-7").exists(), "carcass not swept")
 
-    // post-rebuild recall parity vs brute force: the rebuilt codebook
-    // serves at least as well as the stale pre-rebuild one
-    val exact = Similarity.bruteForceTopK(vecs, queries, 3)
-    def recall(approx: org.apache.spark.sql.DataFrame): Double =
-      Similarity.recallAtK(approx, exact)
-        .select("recall").as[Double].collect().head
-    val after = Similarity.ivfTopKFromIndex(spark, dest, queries, 3,
-      nProbe = 3)
-    assert(recall(after) >= recall(before))
-    // self-recovery invariant holds through the new generation
-    val r1 = after.filter(col("rank") === 1)
-      .select("query_id", "nn_id").as[(Long, Long)].collect().toSeq
-    assert(r1.nonEmpty && r1.forall { case (q, nn) => q === nn })
+      // post-rebuild recall parity vs brute force: the rebuilt codebook
+      // serves at least as well as the stale pre-rebuild one
+      val exact = Similarity.bruteForceTopK(vecs, queries, 3)
+      def recall(approx: org.apache.spark.sql.DataFrame): Double =
+        Similarity.recallAtK(approx, exact)
+          .select("recall").as[Double].collect().head
+      val after = Similarity.ivfTopKFromIndex(spark, dest, queries, 3,
+        nProbe = 3)
+      assert(recall(after) >= recall(before))
+      // self-recovery invariant holds through the new generation
+      val r1 = after.filter(col("rank") === 1)
+        .select("query_id", "nn_id").as[(Long, Long)].collect().toSeq
+      assert(r1.nonEmpty && r1.forall { case (q, nn) => q === nn })
 
-    // appends now land in the LIVE generation, not the legacy dir
-    Similarity.appendToIvfIndex(
-      vecs.select(col("vec_id") + 100000L as "vec_id", col("embedding"))
-        .limit(10), dest)
-    val genRows = spark.read.parquet(s"$dest/gen-8/vectors").count()
-    assert(genRows === n + 10)
+      // appends now land in the LIVE generation, not the legacy dir
+      Similarity.appendToIvfIndex(
+        vecs.select(col("vec_id") + 100000L as "vec_id", col("embedding"))
+          .limit(10), dest)
+      val genRows = spark.read.parquet(s"$dest/gen-8/vectors").count()
+      assert(genRows === n + 10)
 
-    // SECOND rebuild with keepGenerations = 1: gen-9 commits, CURRENT
-    // swings, and the retention sweep deletes gen-8 (beyond the window)
-    assert(Similarity.rebuildIvfIndexIfSkewed(spark, dest,
-      skewThreshold = 1.0, numCells = 8, keepGenerations = 1))
-    assert(Similarity.resolveIvfDir(spark, dest) === s"$dest/gen-9")
-    assert(!new java.io.File(s"$dest/gen-8").exists(),
-      "retention kept a generation beyond the window")
-    assert(spark.read.parquet(s"$dest/gen-9/vectors").count() === n + 10)
-    // probes keep serving through the newest generation
-    val afterTwo = Similarity.ivfTopKFromIndex(spark, dest, queries, 1,
-      nProbe = 2).filter(col("rank") === 1)
-      .select("query_id", "nn_id").as[(Long, Long)].collect().toSeq
-    assert(afterTwo.nonEmpty && afterTwo.forall { case (q, nn) => q === nn })
+      // SECOND rebuild with keepGenerations = 1: gen-9 commits, CURRENT
+      // swings, and the retention sweep deletes gen-8 (beyond the window)
+      assert(Similarity.rebuildIvfIndexIfSkewed(spark, dest,
+        skewThreshold = 1.0, numCells = 8, keepGenerations = 1))
+      assert(Similarity.resolveIvfDir(spark, dest) === s"$dest/gen-9")
+      assert(!new java.io.File(s"$dest/gen-8").exists(),
+        "retention kept a generation beyond the window")
+      assert(spark.read.parquet(s"$dest/gen-9/vectors").count() === n + 10)
+      // probes keep serving through the newest generation
+      val afterTwo = Similarity.ivfTopKFromIndex(spark, dest, queries, 1,
+        nProbe = 2).filter(col("rank") === 1)
+        .select("query_id", "nn_id").as[(Long, Long)].collect().toSeq
+      assert(afterTwo.nonEmpty && afterTwo.forall { case (q, nn) => q === nn })
+    }
   }
 
   test("centroidDrift: identical slices cosine exactly 1; an opposed " +
@@ -367,48 +375,50 @@ class SimilaritySpec extends SparkSpec {
   test("rebuild claim protocol: an interleaved concurrent attempt's " +
       "generation is never co-written (atomic disjoint claims)") {
     import org.apache.hadoop.fs.Path
-    val dest = java.nio.file.Files.createTempDirectory("graft-ivf-claim")
-      .toString
-    val root = new Path(dest)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // claims are atomic (create-no-overwrite) and disjoint: a rival's
-    // claim landing on the obvious next number forces ours PAST it —
-    // the exact interleaving that used to let two rebuilds co-write
-    // one gen dir before either COMMITTED marker
-    val g1 = graft.core.Generations.claim(fs, root)
-    assert(g1 === 1L)
-    fs.create(new Path(root, s"gen-${g1 + 1}/CLAIM"), false).close()
-    val g2 = graft.core.Generations.claim(fs, root)
-    assert(g2 === g1 + 2, "claim did not skip the rival's held number")
-    // re-creating a held claim file throws, never silently wins
-    intercept[java.io.IOException] {
-      fs.create(new Path(root, s"gen-$g2/CLAIM"), false).close()
-    }
+    withTempDir("graft-ivf") { tmp =>
+      val dest = Files.createDirectory(tmp.resolve("ivf-claim"))
+        .toString
+      val root = new Path(dest)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      // claims are atomic (create-no-overwrite) and disjoint: a rival's
+      // claim landing on the obvious next number forces ours PAST it —
+      // the exact interleaving that used to let two rebuilds co-write
+      // one gen dir before either COMMITTED marker
+      val g1 = graft.core.Generations.claim(fs, root)
+      assert(g1 === 1L)
+      fs.create(new Path(root, s"gen-${g1 + 1}/CLAIM"), false).close()
+      val g2 = graft.core.Generations.claim(fs, root)
+      assert(g2 === g1 + 2, "claim did not skip the rival's held number")
+      // re-creating a held claim file throws, never silently wins
+      intercept[java.io.IOException] {
+        fs.create(new Path(root, s"gen-$g2/CLAIM"), false).close()
+      }
 
-    // end-to-end: with a rival's claimed-but-unfinished attempt
-    // present, a rebuild claims a FRESH generation, commits there, and
-    // the rival's dir gains none of our data files
-    val n = 400
-    val vecs = spark.range(n).toDF("vec_id")
-      .withColumn("embedding",
-        expr("transform(sequence(1, 8), " +
-          "i -> cast(pmod(xxhash64(vec_id, i), 1000) / 1000.0 - 0.5 as float))"))
-    val store = java.nio.file.Files.createTempDirectory("graft-ivf-claim2")
-      .toString
-    Similarity.buildIvfIndex(vecs, store, numCells = 4)
-    val storeRoot = new Path(store)
-    val sfs = storeRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val rival = graft.core.Generations.claim(sfs, storeRoot) // holds gen-1
-    assert(Similarity.rebuildIvfIndexIfSkewed(spark, store,
-      skewThreshold = 1.0, numCells = 4))
-    assert(Similarity.resolveIvfDir(spark, store) === s"$store/gen-${rival + 1}")
-    assert(new java.io.File(s"$store/gen-${rival + 1}/COMMITTED").exists())
-    // the rival's claimed dir was never co-written: claim file only
-    // (it is then swept as an uncommitted carcass by our GC — the
-    // documented single-GC-owner contract)
-    val rivalDir = new java.io.File(s"$store/gen-$rival")
-    assert(!rivalDir.exists() ||
-      rivalDir.listFiles().map(_.getName).toSet.subsetOf(Set("CLAIM")))
+      // end-to-end: with a rival's claimed-but-unfinished attempt
+      // present, a rebuild claims a FRESH generation, commits there, and
+      // the rival's dir gains none of our data files
+      val n = 400
+      val vecs = spark.range(n).toDF("vec_id")
+        .withColumn("embedding",
+          expr("transform(sequence(1, 8), " +
+            "i -> cast(pmod(xxhash64(vec_id, i), 1000) / 1000.0 - 0.5 as float))"))
+      val store = Files.createDirectory(tmp.resolve("ivf-claim2"))
+        .toString
+      Similarity.buildIvfIndex(vecs, store, numCells = 4)
+      val storeRoot = new Path(store)
+      val sfs = storeRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val rival = graft.core.Generations.claim(sfs, storeRoot) // holds gen-1
+      assert(Similarity.rebuildIvfIndexIfSkewed(spark, store,
+        skewThreshold = 1.0, numCells = 4))
+      assert(Similarity.resolveIvfDir(spark, store) === s"$store/gen-${rival + 1}")
+      assert(new java.io.File(s"$store/gen-${rival + 1}/COMMITTED").exists())
+      // the rival's claimed dir was never co-written: claim file only
+      // (it is then swept as an uncommitted carcass by our GC — the
+      // documented single-GC-owner contract)
+      val rivalDir = new java.io.File(s"$store/gen-$rival")
+      assert(!rivalDir.exists() ||
+        rivalDir.listFiles().map(_.getName).toSet.subsetOf(Set("CLAIM")))
+    }
   }
 
   test("hierarchical codebook: two-level assignment is consistent and flatten-aligned") {

@@ -132,48 +132,50 @@ class SketchesSpec extends SparkSpec {
   }
 
   test("persisted bloom: save + merge delta + load covers the union; joins stay exact") {
-    val dest = java.nio.file.Files.createTempDirectory("graft-bloom-spec")
-      .toString + "/f.bloom"
-    val sliceA = Seq(3L, 5L, 7L).toDF("dim_key")
-    val sliceB = Seq(11L, 13L).toDF("dim_key")
-    Sketches.saveBloomFilter(sliceA, "dim_key", dest, expectedItems = 100)
-    Sketches.mergeIntoBloomFilter(sliceB, "dim_key", dest)
-    val bytes = Sketches.loadBloomFilter(spark, dest)
-    // no false negatives across BOTH slices after the merge
-    val union = Seq(3L, 5L, 7L, 11L, 13L).toDF("k")
-    assert(union.filter(
-      graft.functions.Sketch.bloomContains(col("k"), bytes)).count() === 5)
+    withTempDir("graft-bloom-spec") { dir =>
+      val dest = dir.toString + "/f.bloom"
+      val sliceA = Seq(3L, 5L, 7L).toDF("dim_key")
+      val sliceB = Seq(11L, 13L).toDF("dim_key")
+      Sketches.saveBloomFilter(sliceA, "dim_key", dest, expectedItems = 100)
+      Sketches.mergeIntoBloomFilter(sliceB, "dim_key", dest)
+      val bytes = Sketches.loadBloomFilter(spark, dest)
+      // no false negatives across BOTH slices after the merge
+      val union = Seq(3L, 5L, 7L, 11L, 13L).toDF("k")
+      assert(union.filter(
+        graft.functions.Sketch.bloomContains(col("k"), bytes)).count() === 5)
 
-    val large = (1L to 2000L).map(i => (i, i % 97)).toDF("id", "key")
-    val full = sliceA.unionByName(sliceB)
-    // WithFilter joins against the full key table == plain joins
-    val semi = Sketches.bloomSemiJoinWithFilter(large, full, "key", "dim_key", bytes)
-      .as[(Long, Long)].collect().sorted.toSeq
-    assert(semi === large.join(full, large("key") === full("dim_key"), "left_semi")
-      .as[(Long, Long)].collect().sorted.toSeq)
-    val anti = Sketches.bloomAntiJoinWithFilter(large, full, "key", "dim_key", bytes)
-      .as[(Long, Long)].collect().sorted.toSeq
-    assert(anti === large.join(full, large("key") === full("dim_key"), "left_anti")
-      .as[(Long, Long)].collect().sorted.toSeq)
-    // SUPERSET filter (grown past the current key table) stays exact for
-    // the anti shape: extra false positives are kept by the exact pass
-    val antiSubset = Sketches.bloomAntiJoinWithFilter(large, sliceA, "key",
-        "dim_key", bytes).as[(Long, Long)].collect().sorted.toSeq
-    assert(antiSubset === large.join(sliceA, large("key") === sliceA("dim_key"),
-      "left_anti").as[(Long, Long)].collect().sorted.toSeq)
+      val large = (1L to 2000L).map(i => (i, i % 97)).toDF("id", "key")
+      val full = sliceA.unionByName(sliceB)
+      // WithFilter joins against the full key table == plain joins
+      val semi = Sketches.bloomSemiJoinWithFilter(large, full, "key", "dim_key", bytes)
+        .as[(Long, Long)].collect().sorted.toSeq
+      assert(semi === large.join(full, large("key") === full("dim_key"), "left_semi")
+        .as[(Long, Long)].collect().sorted.toSeq)
+      val anti = Sketches.bloomAntiJoinWithFilter(large, full, "key", "dim_key", bytes)
+        .as[(Long, Long)].collect().sorted.toSeq
+      assert(anti === large.join(full, large("key") === full("dim_key"), "left_anti")
+        .as[(Long, Long)].collect().sorted.toSeq)
+      // SUPERSET filter (grown past the current key table) stays exact for
+      // the anti shape: extra false positives are kept by the exact pass
+      val antiSubset = Sketches.bloomAntiJoinWithFilter(large, sliceA, "key",
+          "dim_key", bytes).as[(Long, Long)].collect().sorted.toSeq
+      assert(antiSubset === large.join(sliceA, large("key") === sliceA("dim_key"),
+        "left_anti").as[(Long, Long)].collect().sorted.toSeq)
+    }
   }
 
   test("persisted bloom: string keys merge and probe by the same bytes") {
-    val dest = java.nio.file.Files.createTempDirectory("graft-bloom-str")
-      .toString + "/f.bloom"
-    val a = Seq("host1.com", "host2.com").toDF("h")
-    val b = Seq("host3.com").toDF("h")
-    Sketches.saveBloomFilter(a, "h", dest, expectedItems = 50)
-    Sketches.mergeIntoBloomFilter(b, "h", dest)
-    val bytes = Sketches.loadBloomFilter(spark, dest)
-    val probes = Seq("host1.com", "host2.com", "host3.com").toDF("h")
-    assert(probes.filter(
-      graft.functions.Sketch.bloomContains(col("h"), bytes)).count() === 3)
+    withTempDir("graft-bloom-str") { dir =>
+      val dest = dir.toString + "/f.bloom"
+      val a = Seq("host1.com", "host2.com").toDF("h")
+      val b = Seq("host3.com").toDF("h")
+      Sketches.saveBloomFilter(a, "h", dest, expectedItems = 50)
+      Sketches.mergeIntoBloomFilter(b, "h", dest)
+      val bytes = Sketches.loadBloomFilter(spark, dest)
+      val probes = Seq("host1.com", "host2.com", "host3.com").toDF("h")
+      assert(probes.filter(
+        graft.functions.Sketch.bloomContains(col("h"), bytes)).count() === 3)
+    }
   }
 
   test("bloomSemiJoin rejects non-integral keys (no silent lossy cast)") {
@@ -217,32 +219,33 @@ class SketchesSpec extends SparkSpec {
   }
 
   test("bloom saturation: writers report observed fpp; merge past capacity degrades it") {
-    val dest = java.nio.file.Files.createTempDirectory("graft-bloom-sat")
-      .toString + "/f.bloom"
-    // lifetime-sized for 20 keys at 1% — observed fpp starts near design
-    val small = (1L to 10L).toDF("k")
-    val fppAtSave = Sketches.saveBloomFilter(small, "k", dest,
-      expectedItems = 20, fpp = 0.01)
-    assert(fppAtSave < 0.05, s"fresh filter should be near design fpp, got $fppAtSave")
-    // merge 100x the capacity: geometry can't grow, fpp must ratchet up
-    val flood = (100L to 2100L).toDF("k")
-    val fppAfter = Sketches.mergeIntoBloomFilter(flood, "k", dest)
-    assert(fppAfter > 0.5, s"past-capacity merge must report saturation, got $fppAfter")
-    assert(fppAfter > fppAtSave)
-    // maxFpp turns saturation into a loud failure BEFORE overwriting
-    val ex = intercept[IllegalArgumentException] {
-      Sketches.mergeIntoBloomFilter((3000L to 3100L).toDF("k"), "k", dest,
-        maxFpp = 0.1)
+    withTempDir("graft-bloom-sat") { dir =>
+      val dest = dir.toString + "/f.bloom"
+      // lifetime-sized for 20 keys at 1% — observed fpp starts near design
+      val small = (1L to 10L).toDF("k")
+      val fppAtSave = Sketches.saveBloomFilter(small, "k", dest,
+        expectedItems = 20, fpp = 0.01)
+      assert(fppAtSave < 0.05, s"fresh filter should be near design fpp, got $fppAtSave")
+      // merge 100x the capacity: geometry can't grow, fpp must ratchet up
+      val flood = (100L to 2100L).toDF("k")
+      val fppAfter = Sketches.mergeIntoBloomFilter(flood, "k", dest)
+      assert(fppAfter > 0.5, s"past-capacity merge must report saturation, got $fppAfter")
+      assert(fppAfter > fppAtSave)
+      // maxFpp turns saturation into a loud failure BEFORE overwriting
+      val ex = intercept[IllegalArgumentException] {
+        Sketches.mergeIntoBloomFilter((3000L to 3100L).toDF("k"), "k", dest,
+          maxFpp = 0.1)
+      }
+      assert(ex.getMessage.contains("saturated"))
+      // results stay EXACT even saturated (the filter only gates)
+      val bytes = Sketches.loadBloomFilter(spark, dest)
+      val large = (1L to 3000L).map(i => (i, i % 500)).toDF("id", "key")
+      val full = small.unionByName(flood)
+      val anti = Sketches.bloomAntiJoinWithFilter(large, full, "key", "k", bytes)
+        .as[(Long, Long)].collect().sorted.toSeq
+      assert(anti === large.join(full, large("key") === full("k"), "left_anti")
+        .as[(Long, Long)].collect().sorted.toSeq)
     }
-    assert(ex.getMessage.contains("saturated"))
-    // results stay EXACT even saturated (the filter only gates)
-    val bytes = Sketches.loadBloomFilter(spark, dest)
-    val large = (1L to 3000L).map(i => (i, i % 500)).toDF("id", "key")
-    val full = small.unionByName(flood)
-    val anti = Sketches.bloomAntiJoinWithFilter(large, full, "key", "k", bytes)
-      .as[(Long, Long)].collect().sorted.toSeq
-    assert(anti === large.join(full, large("key") === full("k"), "left_anti")
-      .as[(Long, Long)].collect().sorted.toSeq)
   }
 
   test("frequentItems with a cache StorageLevel returns identical results") {
@@ -259,29 +262,31 @@ class SketchesSpec extends SparkSpec {
   test("HLL ledger: save + O(delta) merges estimate the union; overlap " +
       "does not double-count; string keys; null keys ignored") {
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft-hll").toString
-    val dest = s"$dir/ledger.hll"
-    // day 1: users 0..999; day 2: 500..1499 (50% overlap)
-    val day1 = spark.range(0, 1000).select(col("id").as("u"))
-    val day2 = spark.range(500, 1500).select(col("id").as("u"))
-    Sketches.saveHllSketch(day1, "u", dest)
-    Sketches.mergeIntoHllSketch(day2, "u", dest)
-    val est = Sketches.hllEstimate(spark, dest)
-    // true union = 1500; lgK=12 error ~1.6% — assert a loose 5% band,
-    // which also proves the overlap was not double-counted (2000 would
-    // be 33% off)
-    assert(math.abs(est - 1500L) <= 75L, s"estimate $est")
-    // a second identical merge is idempotent within the sketch (same keys
-    // add no new registers)
-    Sketches.mergeIntoHllSketch(day2, "u", dest)
-    assert(Sketches.hllEstimate(spark, dest) === est)
-    // string keys + nulls
-    val dest2 = s"$dir/strings.hll"
-    val strs = Seq(Some("a"), Some("b"), Some("c"), None)
-      .toDF("k")
-    Sketches.saveHllSketch(strs, "k", dest2)
-    val est2 = Sketches.hllEstimate(spark, dest2)
-    assert(est2 === 3L) // tiny cardinalities are exact in HLL
+    withTempDir("graft-hll") { tmpDir =>
+      val dir = tmpDir.toString
+      val dest = s"$dir/ledger.hll"
+      // day 1: users 0..999; day 2: 500..1499 (50% overlap)
+      val day1 = spark.range(0, 1000).select(col("id").as("u"))
+      val day2 = spark.range(500, 1500).select(col("id").as("u"))
+      Sketches.saveHllSketch(day1, "u", dest)
+      Sketches.mergeIntoHllSketch(day2, "u", dest)
+      val est = Sketches.hllEstimate(spark, dest)
+      // true union = 1500; lgK=12 error ~1.6% — assert a loose 5% band,
+      // which also proves the overlap was not double-counted (2000 would
+      // be 33% off)
+      assert(math.abs(est - 1500L) <= 75L, s"estimate $est")
+      // a second identical merge is idempotent within the sketch (same keys
+      // add no new registers)
+      Sketches.mergeIntoHllSketch(day2, "u", dest)
+      assert(Sketches.hllEstimate(spark, dest) === est)
+      // string keys + nulls
+      val dest2 = s"$dir/strings.hll"
+      val strs = Seq(Some("a"), Some("b"), Some("c"), None)
+        .toDF("k")
+      Sketches.saveHllSketch(strs, "k", dest2)
+      val est2 = Sketches.hllEstimate(spark, dest2)
+      assert(est2 === 3L) // tiny cardinalities are exact in HLL
+    }
   }
 
   test("approxIntersection: overlap inside the stated bound; clamp; nulls") {

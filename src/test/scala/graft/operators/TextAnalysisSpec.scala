@@ -1,5 +1,7 @@
 package graft.operators
 
+import java.nio.file.Files
+
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -716,52 +718,54 @@ class TextAnalysisSpec extends SparkSpec {
     val docs = Seq((1L, "cat dog"), (2L, "cat cat fish"), (3L, "bird"))
       .toDF("doc_id", "text")
     val qs = Seq((10L, "cat fish"), (11L, "unseen")).toDF("query_id", "qtext")
-    val dest = java.nio.file.Files.createTempDirectory("graft-bm25").toString
-    TextAnalysis.buildBm25Index(docs, dest, shards = 2)
-    assert(new java.io.File(s"$dest/gen-1/COMMITTED").exists())
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.as[(Long, Long, Long, Double)].collect().sorted.toSeq
-    val direct = rows(TextAnalysis.bm25Scores(docs, qs))
-    val probed = rows(TextAnalysis.bm25ScoresFromIndex(spark, dest, qs))
-    assert(probed === direct && probed.nonEmpty)
-    // REBUILD on a grown corpus lands in gen-2, CURRENT swings, and
-    // probes resolve the new generation — scores track the new corpus
-    val docs4 = docs.unionAll(Seq((4L, "cat bird bird")).toDF("doc_id", "text"))
-    TextAnalysis.buildBm25Index(docs4, dest, shards = 2)
-    assert(new java.io.File(s"$dest/gen-2/COMMITTED").exists())
-    val probed4 = rows(TextAnalysis.bm25ScoresFromIndex(spark, dest, qs))
-    assert(probed4 === rows(TextAnalysis.bm25Scores(docs4, qs)))
-    assert(probed4 !== probed) // N/avgdl moved: the swap is observable
-    // the probe plan reads index files only — never the corpus frame
-    // (executedPlan carries FileScan locations; optimizedPlan elides them)
-    val plan = TextAnalysis.bm25ScoresFromIndex(spark, dest, qs)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("postings") && plan.contains("doclens"), plan)
-    // APPEND a delta into the live generation: probes on the grown
-    // store bit-match the direct scorer on the union corpus — stats
-    // derive from doclens, so no staleness window exists
-    val delta = Seq((9L, "fish fish cat")).toDF("doc_id", "text")
-    assert(TextAnalysis.appendToBm25Index(delta, dest) === 1L)
-    val docs5 = docs4.unionAll(delta)
-    assert(rows(TextAnalysis.bm25ScoresFromIndex(spark, dest, qs)) ===
-      rows(TextAnalysis.bm25Scores(docs5, qs)))
-    // appending to a store that was never built fails loud
-    intercept[IllegalArgumentException] {
-      TextAnalysis.appendToBm25Index(delta,
-        java.nio.file.Files.createTempDirectory("graft-bm25-none").toString)
+    withTempDir("graft-bm25") { tmp =>
+      val dest = Files.createDirectory(tmp.resolve("bm25")).toString
+      TextAnalysis.buildBm25Index(docs, dest, shards = 2)
+      assert(new java.io.File(s"$dest/gen-1/COMMITTED").exists())
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.as[(Long, Long, Long, Double)].collect().sorted.toSeq
+      val direct = rows(TextAnalysis.bm25Scores(docs, qs))
+      val probed = rows(TextAnalysis.bm25ScoresFromIndex(spark, dest, qs))
+      assert(probed === direct && probed.nonEmpty)
+      // REBUILD on a grown corpus lands in gen-2, CURRENT swings, and
+      // probes resolve the new generation — scores track the new corpus
+      val docs4 = docs.unionAll(Seq((4L, "cat bird bird")).toDF("doc_id", "text"))
+      TextAnalysis.buildBm25Index(docs4, dest, shards = 2)
+      assert(new java.io.File(s"$dest/gen-2/COMMITTED").exists())
+      val probed4 = rows(TextAnalysis.bm25ScoresFromIndex(spark, dest, qs))
+      assert(probed4 === rows(TextAnalysis.bm25Scores(docs4, qs)))
+      assert(probed4 !== probed) // N/avgdl moved: the swap is observable
+      // the probe plan reads index files only — never the corpus frame
+      // (executedPlan carries FileScan locations; optimizedPlan elides them)
+      val plan = TextAnalysis.bm25ScoresFromIndex(spark, dest, qs)
+        .queryExecution.executedPlan.toString
+      assert(plan.contains("postings") && plan.contains("doclens"), plan)
+      // APPEND a delta into the live generation: probes on the grown
+      // store bit-match the direct scorer on the union corpus — stats
+      // derive from doclens, so no staleness window exists
+      val delta = Seq((9L, "fish fish cat")).toDF("doc_id", "text")
+      assert(TextAnalysis.appendToBm25Index(delta, dest) === 1L)
+      val docs5 = docs4.unionAll(delta)
+      assert(rows(TextAnalysis.bm25ScoresFromIndex(spark, dest, qs)) ===
+        rows(TextAnalysis.bm25Scores(docs5, qs)))
+      // appending to a store that was never built fails loud
+      intercept[IllegalArgumentException] {
+        TextAnalysis.appendToBm25Index(delta,
+          Files.createDirectory(tmp.resolve("bm25-none")).toString)
+      }
+      // ONE index serves BOTH retrieval models: the Dirichlet LM probe
+      // over the same store bit-matches the direct LM scorer on the
+      // union corpus (cf = per-term tf sum over the pruned postings)
+      def lmRows(df: org.apache.spark.sql.DataFrame) =
+        df.as[(Long, Long, Long, Double)].collect().sorted.toSeq
+      assert(lmRows(TextAnalysis.lmDirichletFromIndex(spark, dest, qs)) ===
+        lmRows(TextAnalysis.lmDirichletScores(docs5, qs)))
+      // probe-term bound fails loud with the split/raise escape
+      val e = intercept[IllegalArgumentException] {
+        TextAnalysis.bm25ScoresFromIndex(spark, dest, qs, maxProbeTerms = 2)
+      }
+      assert(e.getMessage.contains("maxProbeTerms"))
     }
-    // ONE index serves BOTH retrieval models: the Dirichlet LM probe
-    // over the same store bit-matches the direct LM scorer on the
-    // union corpus (cf = per-term tf sum over the pruned postings)
-    def lmRows(df: org.apache.spark.sql.DataFrame) =
-      df.as[(Long, Long, Long, Double)].collect().sorted.toSeq
-    assert(lmRows(TextAnalysis.lmDirichletFromIndex(spark, dest, qs)) ===
-      lmRows(TextAnalysis.lmDirichletScores(docs5, qs)))
-    // probe-term bound fails loud with the split/raise escape
-    val e = intercept[IllegalArgumentException] {
-      TextAnalysis.bm25ScoresFromIndex(spark, dest, qs, maxProbeTerms = 2)
-    }
-    assert(e.getMessage.contains("maxProbeTerms"))
   }
 
   test("appendToBm25Index mid-append visibility: a probe between the " +
@@ -771,39 +775,40 @@ class TextAnalysisSpec extends SparkSpec {
     val docs = Seq((1L, "cat dog"), (2L, "cat cat fish"), (3L, "bird"))
       .toDF("doc_id", "text")
     val qs = Seq((10L, "cat fish")).toDF("query_id", "qtext")
-    val dest =
-      java.nio.file.Files.createTempDirectory("graft-bm25-mid").toString
-    TextAnalysis.buildBm25Index(docs, dest, shards = 2)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.as[(Long, Long, Long, Double)].collect().sorted.toSeq
-    val before = rows(TextAnalysis.bm25ScoresFromIndex(spark, dest, qs))
-    val lmBefore = rows(TextAnalysis.lmDirichletFromIndex(spark, dest, qs))
-    // simulate EXACTLY the state a concurrent probe can observe during
-    // appendToBm25Index: the delta's postings fully committed (the
-    // append writes postings FIRST), its doclens not yet visible
-    val delta = Seq((9L, "fish fish cat")).toDF("doc_id", "text")
-    val base = delta.select(col("doc_id"),
-      TextAnalysis.tokens(lower(col("text"))).as("__toks"))
-    val live = s"$dest/gen-1"
-    base.select(col("doc_id"), explode(col("__toks")).as("term"))
-      .groupBy("term", "doc_id").agg(count(lit(1)).as("tf"))
-      .write.mode("append").parquet(s"$live/postings")
-    // mid-append probes are BIT-IDENTICAL to the pre-append probes:
-    // docs without a doclens row are invisible to df, cf, N/avgdl/T,
-    // AND the scoring join — the old corpus, scored consistently
-    assert(rows(TextAnalysis.bm25ScoresFromIndex(spark, dest, qs))
-      === before)
-    assert(rows(TextAnalysis.lmDirichletFromIndex(spark, dest, qs))
-      === lmBefore)
-    // completing the append (doclens lands) atomically flips every
-    // probe to the union corpus, matching the direct scorers
-    base.select(col("doc_id"), size(col("__toks")).cast("long").as("len"))
-      .write.mode("append").parquet(s"$live/doclens")
-    val union = docs.unionAll(delta)
-    assert(rows(TextAnalysis.bm25ScoresFromIndex(spark, dest, qs))
-      === rows(TextAnalysis.bm25Scores(union, qs)))
-    assert(rows(TextAnalysis.lmDirichletFromIndex(spark, dest, qs))
-      === rows(TextAnalysis.lmDirichletScores(union, qs)))
+    withTempDir("graft-bm25-mid") { dir =>
+      val dest = dir.toString
+      TextAnalysis.buildBm25Index(docs, dest, shards = 2)
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.as[(Long, Long, Long, Double)].collect().sorted.toSeq
+      val before = rows(TextAnalysis.bm25ScoresFromIndex(spark, dest, qs))
+      val lmBefore = rows(TextAnalysis.lmDirichletFromIndex(spark, dest, qs))
+      // simulate EXACTLY the state a concurrent probe can observe during
+      // appendToBm25Index: the delta's postings fully committed (the
+      // append writes postings FIRST), its doclens not yet visible
+      val delta = Seq((9L, "fish fish cat")).toDF("doc_id", "text")
+      val base = delta.select(col("doc_id"),
+        TextAnalysis.tokens(lower(col("text"))).as("__toks"))
+      val live = s"$dest/gen-1"
+      base.select(col("doc_id"), explode(col("__toks")).as("term"))
+        .groupBy("term", "doc_id").agg(count(lit(1)).as("tf"))
+        .write.mode("append").parquet(s"$live/postings")
+      // mid-append probes are BIT-IDENTICAL to the pre-append probes:
+      // docs without a doclens row are invisible to df, cf, N/avgdl/T,
+      // AND the scoring join — the old corpus, scored consistently
+      assert(rows(TextAnalysis.bm25ScoresFromIndex(spark, dest, qs))
+        === before)
+      assert(rows(TextAnalysis.lmDirichletFromIndex(spark, dest, qs))
+        === lmBefore)
+      // completing the append (doclens lands) atomically flips every
+      // probe to the union corpus, matching the direct scorers
+      base.select(col("doc_id"), size(col("__toks")).cast("long").as("len"))
+        .write.mode("append").parquet(s"$live/doclens")
+      val union = docs.unionAll(delta)
+      assert(rows(TextAnalysis.bm25ScoresFromIndex(spark, dest, qs))
+        === rows(TextAnalysis.bm25Scores(union, qs)))
+      assert(rows(TextAnalysis.lmDirichletFromIndex(spark, dest, qs))
+        === rows(TextAnalysis.lmDirichletScores(union, qs)))
+    }
   }
 
   test("skipGramPairs: hand counts, posexplode-replica parity, quirk") {
@@ -988,17 +993,18 @@ class TextAnalysisSpec extends SparkSpec {
     val direct = TextAnalysis.rm3ExpandQueries(docs, qs,
       fbDocs = 3, fbTerms = 6, alpha = 0.5)
       .as[(Long, String, Double, Int)].collect().sortBy(r => (r._1, r._4))
-    val dest = java.nio.file.Files
-      .createTempDirectory("graft-rm3-spec").toString
-    TextAnalysis.buildBm25Index(docs, dest)
-    val indexed = TextAnalysis.rm3ExpandQueriesFromIndex(spark, dest, qs,
-      fbDocs = 3, fbTerms = 6, alpha = 0.5)
-      .as[(Long, String, Double, Int)].collect().sortBy(r => (r._1, r._4))
-    // shared epilogue + identical feedback stats => identical BITS
-    assert(indexed.toSeq === direct.toSeq)
-    intercept[IllegalArgumentException] {
-      TextAnalysis.rm3ExpandQueriesFromIndex(spark, dest, qs,
-        fbDocs = 3, maxFeedbackIds = 2)
+    withTempDir("graft-rm3-spec") { dir =>
+      val dest = dir.toString
+      TextAnalysis.buildBm25Index(docs, dest)
+      val indexed = TextAnalysis.rm3ExpandQueriesFromIndex(spark, dest, qs,
+        fbDocs = 3, fbTerms = 6, alpha = 0.5)
+        .as[(Long, String, Double, Int)].collect().sortBy(r => (r._1, r._4))
+      // shared epilogue + identical feedback stats => identical BITS
+      assert(indexed.toSeq === direct.toSeq)
+      intercept[IllegalArgumentException] {
+        TextAnalysis.rm3ExpandQueriesFromIndex(spark, dest, qs,
+          fbDocs = 3, maxFeedbackIds = 2)
+      }
     }
   }
 

@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.core.{EsMurmur3, ShardConfig}
-import graft.sinks.essnapshot.{Smile, SnapshotLayout}
+import graft.sinks.essnapshot.{EsSnapshotBatchWrite, EsSnapshotSink, ShardCommitMessage,
+  ShardFileCommit, Smile, SnapshotLayout}
 import graft.sources.Ingest
 
 class EsSnapshotSinkSpec extends SparkSpec {
@@ -249,6 +250,21 @@ class EsSnapshotSinkSpec extends SparkSpec {
       assert(!Files.exists(Paths.get(dest, "indices", SnapshotLayout.indexId("beta"), "2")))
       val manifest = EsSnapshot.readManifest(spark, dest).collect()
       assert(manifest.map(_.getString(0)).toSet === Set("alpha", "beta"))
+    }
+  }
+
+  test("_SUMMARY.json times sum the files' nanoseconds before rounding to ms") {
+    withTempDir("graft-summary-ms") { dir =>
+      val write = new EsSnapshotBatchWrite(new org.apache.spark.sql.types.StructType(),
+        dir.toString, Map(EsSnapshotSink.ShardsDefaultOption -> "4"))
+      // 40 files of 0.6 ms indexing and 0.3 ms flushing each: 24 ms and 12 ms
+      val files = (0 until 40).map(i => ShardFileCommit("events", i % 4, f"docs-$i%04d.json.gz",
+        docCount = 1, bytes = 10, indexingNanos = 600000L, flushNanos = 300000L))
+      write.commit(files.grouped(10).map(ShardCommitMessage(_)).toArray)
+      val summary = Files.readString(dir.resolve(SnapshotLayout.SummaryFile))
+      assert(summary.contains("\"time_spent_indexing_ms\":24"), summary)
+      assert(summary.contains("\"time_spent_flushing_ms\":12"), summary)
+      assert(summary.contains("\"writer_files\":40"), summary)
     }
   }
 }

@@ -4,9 +4,14 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.catalyst.expressions.GetJsonObject
+import org.apache.spark.sql.functions.{col, get_json_object}
+import org.apache.spark.sql.graft.JsonDocId
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 
 import graft.SparkSpec
 import graft.core.EsMurmur3
+import graft.functions.JsonDocIdProperties
 
 class IngestSpec extends SparkSpec {
 
@@ -19,10 +24,14 @@ class IngestSpec extends SparkSpec {
       f(file.toString)
     }
 
-  /** `get_json_object` nodes in the physical plan `ds` would run. */
+  /** Doc-id parses (`json_doc_id` or `get_json_object` nodes) in the
+    * physical plan `ds` would run. */
   private def jsonParses(ds: Dataset[_]): Int =
     ds.queryExecution.executedPlan.collect { case node =>
-      node.expressions.map(_.collect { case g: GetJsonObject => g }.size).sum
+      node.expressions.map(_.collect {
+        case g: GetJsonObject => g
+        case d: JsonDocId => d
+      }.size).sum
     }.sum
 
   test("ndjsonRaw preserves lines byte-exactly; toIndexable extracts id/shard/routing") {
@@ -98,6 +107,43 @@ class IngestSpec extends SparkSpec {
       val m = obs.get
       assert(m("input_docs") === 5L)
       assert(m("rejected_docs") === 3L)
+    }
+  }
+
+  test("both toIndexable modes reject exactly the lines get_json_object rejects") {
+    import spark.implicits._
+    // generated lines of every kind the equivalence property covers; they
+    // travel as bytes, as a Java string would replace invalid UTF-8
+    val lines = Gen.listOfN(600, JsonDocIdProperties.line)
+      .pureApply(Gen.Parameters.default, Seed(7L))
+    def frame(ls: Seq[Array[Byte]]) = ls.toDF("b").select(col("b").cast("string").as("json"))
+    val raw = frame(lines)
+    val parsed = raw.select(col("json").cast("binary"), get_json_object(col("json"), "$.doc_id"))
+      .collect().map(r => (r.getAs[Array[Byte]](0), Option(r.getString(1))))
+    val (accepted, rejected) = parsed.partition(_._2.isDefined)
+    assert(accepted.nonEmpty && rejected.nonEmpty)
+    val wantIds = accepted.flatMap(_._2).sorted.toSeq
+
+    val (docs, obs) = Ingest.toIndexableObserved(raw, "idx", "doc_id", 5)
+    assert(docs.collect().map(_.docId).sorted.toSeq === wantIds)
+    assert(obs.get("input_docs") === lines.length.toLong)
+    assert(obs.get("rejected_docs") === rejected.length.toLong)
+    assert(Ingest.toIndexable(raw, "idx", "doc_id", 5).collect().map(_.docId).sorted.toSeq
+      === wantIds)
+
+    // failFast: the accepted lines pass; each rejected line dies naming itself
+    assert(Ingest.toIndexable(frame(accepted.map(_._1).toSeq), "idx", "doc_id", 5,
+      failFast = true).collect().map(_.docId).sorted.toSeq === wantIds)
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
+    for (line <- rejected.map(_._1).sortBy(_.length).take(8)) {
+      val ex = intercept[Exception] {
+        Ingest.toIndexableObserved(frame(Seq(line)), "idx", "doc_id", 5, failFast = true)
+          ._1.collect()
+      }
+      assert(messages(ex).exists(_.contains(
+        "INDEXING_DOC_FAIL: no 'doc_id' in document: " + new String(line, "UTF-8"))),
+        JsonDocIdProperties.show(line))
     }
   }
 

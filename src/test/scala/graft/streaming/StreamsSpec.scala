@@ -68,36 +68,38 @@ class StreamsSpec extends SparkSpec {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
 
-    val ckpt = Files.createTempDirectory("graft-restart-ckpt").toString
-    val outDir = Files.createTempDirectory("graft-restart-out").toString
-    val input = MemoryStream[Event]
-    val sessions = Streams.sessionizeStream(input.toDS(), gapMs = 10 * 60 * 1000)
-    // the memory sink refuses checkpoint recovery; the parquet file sink
-    // is the recoverable one (exactly-once via its file manifest)
-    def start() = sessions.writeStream.format("parquet")
-      .option("path", outDir).option("checkpointLocation", ckpt)
-      .outputMode("append").start()
+    withTempDir("graft-restart") { tmp =>
+      val ckpt = Files.createDirectory(tmp.resolve("restart-ckpt")).toString
+      val outDir = Files.createDirectory(tmp.resolve("restart-out")).toString
+      val input = MemoryStream[Event]
+      val sessions = Streams.sessionizeStream(input.toDS(), gapMs = 10 * 60 * 1000)
+      // the memory sink refuses checkpoint recovery; the parquet file sink
+      // is the recoverable one (exactly-once via its file manifest)
+      def start() = sessions.writeStream.format("parquet")
+        .option("path", outDir).option("checkpointLocation", ckpt)
+        .outputMode("append").start()
 
-    // run 1: user 7's session accumulates in state, nothing emits yet
-    val q1 = start()
-    try {
-      input.addData(Event(1, ts(0), 7, "click", 1.0), Event(2, ts(5), 7, "click", 2.0))
-      q1.processAllAvailable()
-    } finally q1.stop()
-    assert(spark.read.parquet(outDir).count() === 0)
+      // run 1: user 7's session accumulates in state, nothing emits yet
+      val q1 = start()
+      try {
+        input.addData(Event(1, ts(0), 7, "click", 1.0), Event(2, ts(5), 7, "click", 2.0))
+        q1.processAllAvailable()
+      } finally q1.stop()
+      assert(spark.read.parquet(outDir).count() === 0)
 
-    // run 2: a NEW query restores from the SAME checkpoint; pushing the
-    // watermark must flush the session buffered BEFORE the restart —
-    // proof the flatMapGroupsWithState state store round-tripped
-    val q2 = start()
-    try {
-      input.addData(Event(3, ts(40), 9, "view", 5.0))
-      q2.processAllAvailable()
-      input.addData(Event(4, ts(41), 9, "view", 6.0))
-      q2.processAllAvailable()
-    } finally q2.stop()
-    val out = spark.read.parquet(outDir).as[Session].collect()
-    assert(out.toSeq === Seq(Session(7, ts(0), ts(5), 2, 3.0)))
+      // run 2: a NEW query restores from the SAME checkpoint; pushing the
+      // watermark must flush the session buffered BEFORE the restart —
+      // proof the flatMapGroupsWithState state store round-tripped
+      val q2 = start()
+      try {
+        input.addData(Event(3, ts(40), 9, "view", 5.0))
+        q2.processAllAvailable()
+        input.addData(Event(4, ts(41), 9, "view", 6.0))
+        q2.processAllAvailable()
+      } finally q2.stop()
+      val out = spark.read.parquet(outDir).as[Session].collect()
+      assert(out.toSeq === Seq(Session(7, ts(0), ts(5), 2, 3.0)))
+    }
   }
 
   test("windowedTypeCounts: identical logic runs batch and streaming") {
@@ -107,27 +109,29 @@ class StreamsSpec extends SparkSpec {
     assert(batchOut.count() > 0)
 
     // streaming, same function, file source + watermark, AvailableNow
-    val srcDir = Files.createTempDirectory("graft-stream-src").toString
-    batchDf.write.mode("overwrite").parquet(srcDir)
-    val stream = Streams.readEventStream(spark, srcDir)
-    val out = Streams.windowedTypeCounts(stream, "1 hour", watermark = Some("10 minutes"))
-    val ckpt = Files.createTempDirectory("graft-stream-ckpt").toString
-    val q = out.writeStream.format("memory").queryName("win_counts")
-      .outputMode("append").option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(120000)
-    // append mode only emits windows the watermark has passed; the final
-    // (unclosed) window stays in state — everything BEFORE it must match
-    // the batch result exactly.
-    val streamed = spark.table("win_counts")
-    val maxStart = streamed.agg(org.apache.spark.sql.functions.max("window_start"))
-      .head().getTimestamp(0)
-    val batchRows = batchOut
-      .filter(org.apache.spark.sql.functions.col("window_start") <= maxStart)
-      .collect().map(_.toString).sorted
-    val streamRows = streamed.collect().map(_.toString).sorted
-    assert(streamRows.nonEmpty)
-    assert(streamRows.toSeq === batchRows.toSeq)
+    withTempDir("graft-stream") { tmp =>
+      val srcDir = Files.createDirectory(tmp.resolve("stream-src")).toString
+      batchDf.write.mode("overwrite").parquet(srcDir)
+      val stream = Streams.readEventStream(spark, srcDir)
+      val out = Streams.windowedTypeCounts(stream, "1 hour", watermark = Some("10 minutes"))
+      val ckpt = Files.createDirectory(tmp.resolve("stream-ckpt")).toString
+      val q = out.writeStream.format("memory").queryName("win_counts")
+        .outputMode("append").option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination(120000)
+      // append mode only emits windows the watermark has passed; the final
+      // (unclosed) window stays in state — everything BEFORE it must match
+      // the batch result exactly.
+      val streamed = spark.table("win_counts")
+      val maxStart = streamed.agg(org.apache.spark.sql.functions.max("window_start"))
+        .head().getTimestamp(0)
+      val batchRows = batchOut
+        .filter(org.apache.spark.sql.functions.col("window_start") <= maxStart)
+        .collect().map(_.toString).sorted
+      val streamRows = streamed.collect().map(_.toString).sorted
+      assert(streamRows.nonEmpty)
+      assert(streamRows.toSeq === batchRows.toSeq)
+    }
   }
 
   test("slidingTypeCounts: each event lands in window/slide windows; batch == stream") {
@@ -138,25 +142,27 @@ class StreamsSpec extends SparkSpec {
       .head().getLong(0)
     assert(total === 4L * batchDf.count())
 
-    val srcDir = Files.createTempDirectory("graft-slide-src").toString
-    batchDf.write.mode("overwrite").parquet(srcDir)
-    val stream = Streams.readEventStream(spark, srcDir)
-    val out = Streams.slidingTypeCounts(stream, "1 hour", "15 minutes",
-      watermark = Some("10 minutes"))
-    val ckpt = Files.createTempDirectory("graft-slide-ckpt").toString
-    val q = out.writeStream.format("memory").queryName("slide_counts")
-      .outputMode("append").option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(120000)
-    val streamed = spark.table("slide_counts")
-    val maxStart = streamed.agg(org.apache.spark.sql.functions.max("window_start"))
-      .head().getTimestamp(0)
-    val batchRows = batchOut
-      .filter(org.apache.spark.sql.functions.col("window_start") <= maxStart)
-      .collect().map(_.toString).sorted
-    val streamRows = streamed.collect().map(_.toString).sorted
-    assert(streamRows.nonEmpty)
-    assert(streamRows.toSeq === batchRows.toSeq)
+    withTempDir("graft-slide") { tmp =>
+      val srcDir = Files.createDirectory(tmp.resolve("slide-src")).toString
+      batchDf.write.mode("overwrite").parquet(srcDir)
+      val stream = Streams.readEventStream(spark, srcDir)
+      val out = Streams.slidingTypeCounts(stream, "1 hour", "15 minutes",
+        watermark = Some("10 minutes"))
+      val ckpt = Files.createDirectory(tmp.resolve("slide-ckpt")).toString
+      val q = out.writeStream.format("memory").queryName("slide_counts")
+        .outputMode("append").option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination(120000)
+      val streamed = spark.table("slide_counts")
+      val maxStart = streamed.agg(org.apache.spark.sql.functions.max("window_start"))
+        .head().getTimestamp(0)
+      val batchRows = batchOut
+        .filter(org.apache.spark.sql.functions.col("window_start") <= maxStart)
+        .collect().map(_.toString).sorted
+      val streamRows = streamed.collect().map(_.toString).sorted
+      assert(streamRows.nonEmpty)
+      assert(streamRows.toSeq === batchRows.toSeq)
+    }
   }
 
   test("streamToSnapshots: each micro-batch commits as the repo's next snapshot") {
@@ -164,22 +170,24 @@ class StreamsSpec extends SparkSpec {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
 
-    val dest = java.nio.file.Files.createTempDirectory("graft-stream-snap").toString
-    val input = MemoryStream[Event]
-    val q = Streams.streamToSnapshots(input.toDF(), dest, numShards = 2).start()
-    try {
-      input.addData(Event(1, ts(0), 7, "click", 1.0), Event(2, ts(1), 8, "view", 2.0))
-      q.processAllAvailable()
-      input.addData(Event(3, ts(2), 9, "view", 3.0))
-      q.processAllAvailable()
-    } finally q.stop()
+    withTempDir("graft-stream-snap") { dir =>
+      val dest = dir.toString
+      val input = MemoryStream[Event]
+      val q = Streams.streamToSnapshots(input.toDF(), dest, numShards = 2).start()
+      try {
+        input.addData(Event(1, ts(0), 7, "click", 1.0), Event(2, ts(1), 8, "view", 2.0))
+        q.processAllAvailable()
+        input.addData(Event(3, ts(2), 9, "view", 3.0))
+        q.processAllAvailable()
+      } finally q.stop()
 
-    // one repo, two snapshots; default read = the latest micro-batch
-    assert(graft.sinks.EsSnapshot.readTable(spark, dest).count() === 1)
-    assert(graft.sinks.EsSnapshot
-      .readTable(spark, dest, Some("batch-0")).count() === 2)
-    assert(graft.sinks.EsSnapshot
-      .readTable(spark, dest, Some("batch-1")).count() === 1)
+      // one repo, two snapshots; default read = the latest micro-batch
+      assert(graft.sinks.EsSnapshot.readTable(spark, dest).count() === 1)
+      assert(graft.sinks.EsSnapshot
+        .readTable(spark, dest, Some("batch-0")).count() === 2)
+      assert(graft.sinks.EsSnapshot
+        .readTable(spark, dest, Some("batch-1")).count() === 1)
+    }
   }
 
   test("nearDupCandidates: streaming LSH catches a near-dup arriving in a later batch") {
@@ -252,35 +260,37 @@ class StreamsSpec extends SparkSpec {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
 
-    val ckpt = Files.createTempDirectory("graft-nd-restart-ckpt").toString
-    val outDir = Files.createTempDirectory("graft-nd-restart-out").toString
-    val base = "the quick brown fox jumps over the lazy dog " * 8
-    val input = MemoryStream[Streams.DocEvent]
-    val verdicts = Streams.nearDupVerdicts(input.toDS(),
-      candidateThreshold = 0.4, jaccardThreshold = 0.9)
-    def start() = verdicts.writeStream.format("parquet")
-      .option("path", outDir).option("checkpointLocation", ckpt)
-      .outputMode("append").start()
+    withTempDir("graft-nd-restart") { tmp =>
+      val ckpt = Files.createDirectory(tmp.resolve("nd-restart-ckpt")).toString
+      val outDir = Files.createDirectory(tmp.resolve("nd-restart-out")).toString
+      val base = "the quick brown fox jumps over the lazy dog " * 8
+      val input = MemoryStream[Streams.DocEvent]
+      val verdicts = Streams.nearDupVerdicts(input.toDS(),
+        candidateThreshold = 0.4, jaccardThreshold = 0.9)
+      def start() = verdicts.writeStream.format("parquet")
+        .option("path", outDir).option("checkpointLocation", ckpt)
+        .outputMode("append").start()
 
-    // run 1: the original document enters bucket state; no verdict yet
-    val q1 = start()
-    try {
-      input.addData(Streams.DocEvent(1L, ts(0), base))
-      q1.processAllAvailable()
-    } finally q1.stop()
+      // run 1: the original document enters bucket state; no verdict yet
+      val q1 = start()
+      try {
+        input.addData(Streams.DocEvent(1L, ts(0), base))
+        q1.processAllAvailable()
+      } finally q1.stop()
 
-    // run 2: a byte-identical copy arrives AFTER the restart — matching
-    // it requires the (signature, gram-hash set) state written before the
-    // stop to round-trip through the checkpoint's state store
-    val q2 = start()
-    try {
-      input.addData(Streams.DocEvent(2L, ts(5), base))
-      q2.processAllAvailable()
-    } finally q2.stop()
-    val got = spark.read.parquet(outDir)
-      .select("doc_id", "dup_of", "jaccard").distinct()
-      .as[(Long, Long, Double)].collect().toSet
-    assert(got === Set((2L, 1L, 1.0)))
+      // run 2: a byte-identical copy arrives AFTER the restart — matching
+      // it requires the (signature, gram-hash set) state written before the
+      // stop to round-trip through the checkpoint's state store
+      val q2 = start()
+      try {
+        input.addData(Streams.DocEvent(2L, ts(5), base))
+        q2.processAllAvailable()
+      } finally q2.stop()
+      val got = spark.read.parquet(outDir)
+        .select("doc_id", "dup_of", "jaccard").distinct()
+        .as[(Long, Long, Double)].collect().toSet
+      assert(got === Set((2L, 1L, 1.0)))
+    }
   }
 
   test("intervalJoinStream: streamed pairs equal the batch join across batches") {

@@ -14,7 +14,8 @@ import org.apache.spark.sql.SparkSession
  *   - `dest/gen-N/…`        one immutable generation's data
  *   - `dest/gen-N/CLAIM`    atomic writer claim (create-no-overwrite)
  *   - `dest/gen-N/COMMITTED` marker: the generation is complete
- *   - `dest/CURRENT`        pointer file naming the live `gen-N`
+ *   - `dest/CURRENT`        pointer file naming the live `gen-N`, for
+ *                           tools; readers resolve through the markers
  *   - anything else at the root = the LEGACY FLAT layout (a store
  *     built before the lifecycle existed) — resolvable, never deleted
  *
@@ -85,30 +86,18 @@ object Generations {
   }
 
   /**
-   * Resolve a store's live data dir: `CURRENT` if it names a committed
-   * generation, else the newest committed generation, else the legacy
-   * flat layout (`dest` itself). Uncommitted carcasses are never
+   * Resolve a store's live data dir: the newest committed generation,
+   * else the legacy flat layout (`dest` itself). A commit whose pointer
+   * swing died after its `COMMITTED` marker is live, as [[commit]]
+   * promises, so `CURRENT` (which then still names the previous
+   * generation) is not consulted. Uncommitted carcasses are never
    * returned — that is the reader half of the atomicity contract.
    */
   def resolve(spark: SparkSession, dest: String): String = {
     val root = new Path(dest)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def committed(gen: String): Boolean =
-      gen.matches("gen-\\d+") && fs.exists(new Path(root, s"$gen/COMMITTED"))
-    val cur = new Path(root, "CURRENT")
-    val pointed =
-      if (!fs.exists(cur)) None
-      else {
-        val in = fs.open(cur)
-        val name =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-          finally in.close()
-        Some(name).filter(committed)
-      }
-    pointed.map(g => s"$dest/$g").getOrElse {
-      val gens = genNumbers(fs, root).filter(n => committed(s"gen-$n"))
-      if (gens.nonEmpty) s"$dest/gen-${gens.max}" else dest
-    }
+    val gens = genNumbers(fs, root).filter(isCommitted(fs, root, _))
+    if (gens.nonEmpty) s"$dest/gen-${gens.max}" else dest
   }
 
   /**

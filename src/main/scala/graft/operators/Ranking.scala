@@ -177,7 +177,17 @@ object Ranking {
   def withGroupedRank(df: DataFrame, grpCol: String, order: Seq[Column],
                       rankCol: String, nCol: String,
                       chunks: Int = 0,
-                      broadcastOffsets: Option[Boolean] = None): DataFrame = {
+                      broadcastOffsets: Option[Boolean] = None): DataFrame =
+    withGroupedRank(df, grpCol, order, rankCol, nCol, chunks, broadcastOffsets,
+      chunkRowLimit = 1L << MidBits)
+
+  /** [[withGroupedRank]] with the per-chunk row limit as a parameter, so a
+    * spec can reach the overflow guard without 2^33 rows. */
+  private[operators] def withGroupedRank(df: DataFrame, grpCol: String,
+                                         order: Seq[Column], rankCol: String,
+                                         nCol: String, chunks: Int,
+                                         broadcastOffsets: Option[Boolean],
+                                         chunkRowLimit: Long): DataFrame = {
     require(order.nonEmpty, "order must name at least one sort column")
     require(chunks >= 0, "chunks must be >= 0 (0 = derive from session)")
     val chunksN = if (chunks == 0) sessionChunks(df) else chunks
@@ -201,15 +211,18 @@ object Ranking {
     val summary0 = parted
       .groupBy(shiftright(col("__mid"), MidBits).as("__opid"),
         col(grpCol).as("__g"))
+      .agg(count(lit(1)).as("__cnt"), min("__mid").as("__base"))
       // same 2^33-rows-per-chunk overflow guard as withGlobalRank
-      // (ADVICE r17) — rides the summary aggregate, near-free
-      .agg(when(count(lit(1)) >= (1L << MidBits),
-          raise_error(lit("withGroupedRank: a range chunk exceeds 2^33 " +
-            "rows — monotonically_increasing_id's record-index bits " +
-            "would overflow into the chunk id; raise `chunks` (or " +
-            "spark.sql.shuffle.partitions)")))
-        .otherwise(count(lit(1))).as("__cnt"),
-        min("__mid").as("__base"))
+      // (ADVICE r17): monotonically_increasing_id overflows per chunk, so
+      // the guard sums the chunk's groups — a window over the summary
+      // rows, which every offset reads
+      .withColumn("__cnt", when(
+          sum(col("__cnt")).over(Window.partitionBy("__opid")) >= chunkRowLimit,
+          raise_error(lit(s"withGroupedRank: a range chunk reaches " +
+            s"$chunkRowLimit rows — monotonically_increasing_id's " +
+            "record-index bits would overflow into the chunk id; raise " +
+            "`chunks` (or spark.sql.shuffle.partitions)")))
+        .otherwise(col("__cnt")))
     val (summary, doBroadcast) = broadcastOffsets match {
       case Some(forced) => (summary0, forced)
       case None =>

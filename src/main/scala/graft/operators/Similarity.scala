@@ -1361,15 +1361,13 @@ object Similarity {
 
   /**
    * Live data dir of an IVF store under the generation lifecycle:
-   * `dest/CURRENT` names the committed generation (`gen-N`, written by
-   * [[rebuildIvfIndexIfSkewed]]); a missing/stale pointer falls back
-   * to the NEWEST generation carrying a `COMMITTED` marker, then to
-   * the legacy flat layout ([[buildIvfIndex]] writes
-   * `dest/{centroids,vectors}` directly, which stays fully
-   * compatible). A failed rebuild attempt leaves an UNCOMMITTED gen
-   * dir that no resolver path ever returns — that is the atomicity
-   * contract: readers see the old index until the commit marker and
-   * pointer land, however the attempt died. Delegates to
+   * the NEWEST generation carrying a `COMMITTED` marker (`gen-N`,
+   * written by [[rebuildIvfIndexIfSkewed]]), else the legacy flat
+   * layout ([[buildIvfIndex]] writes `dest/{centroids,vectors}`
+   * directly, which stays fully compatible). A failed rebuild attempt
+   * leaves an UNCOMMITTED gen dir that no resolver path ever returns —
+   * that is the atomicity contract: readers see the old index until
+   * the commit marker lands, however the attempt died. Delegates to
    * [[graft.core.Generations]], the engine-wide claim/commit/resolve
    * protocol shared with the BM25 postings index.
    */

@@ -27,7 +27,7 @@ object EsSnapshot {
             options: Map[String, String] = Map.empty,
             overwrite: Boolean = false): Unit = {
     val slots = EsSnapshotSink.writerSlots(docs.sparkSession, shards)
-    var w = EsSnapshotSink.withWriterKey(docs.toDF(), slots).write.format("es-snapshot")
+    var w = EsSnapshotSink.writerInput(docs.toDF(), slots).write.format("es-snapshot")
       .option("path", dest)
       .option(EsSnapshotSink.ShardsDefaultOption, shards.defaultShards)
     shards.perIndex.foreach { case (ix, n) =>

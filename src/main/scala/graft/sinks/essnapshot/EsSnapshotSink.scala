@@ -69,11 +69,11 @@ class EsSnapshotDataSource extends TableProvider with DataSourceRegister {
 }
 
 object EsSnapshotSink {
-  /** The IndexableDoc envelope, as the sink's fixed input schema. */
+  /** The envelope columns the writer reads. [[writerInput]] projects the
+    * IndexableDoc envelope to these plus [[WriterKeyColumn]], so `docId`
+    * and `routing` never reach the shuffle. */
   val Schema: StructType = StructType(Seq(
     StructField("index", StringType, nullable = false),
-    StructField("docId", StringType, nullable = false),
-    StructField("routing", StringType, nullable = false),
     StructField("shard", IntegerType, nullable = false),
     StructField("json", StringType, nullable = false)))
 
@@ -129,14 +129,16 @@ object EsSnapshotSink {
     keys
   }
 
-  /** `docs` with the [[WriterKeyColumn]] of `n` writer slots: an index's
-    * shards go round-robin over the slots, from an offset its name sets,
-    * so every task gets an even share of every index. The key depends on
-    * (index, shard) alone, so a shard is written by exactly one task. */
-  def withWriterKey(docs: DataFrame, n: Int): DataFrame = {
+  /** `docs` projected to the [[Schema]] columns plus the [[WriterKeyColumn]]
+    * of `n` writer slots: an index's shards go round-robin over the slots,
+    * from an offset its name sets, so every task gets an even share of
+    * every index. The key depends on (index, shard) alone, so a shard is
+    * written by exactly one task. */
+  def writerInput(docs: DataFrame, n: Int): DataFrame = {
     import org.apache.spark.sql.functions.{col, hash, lit, pmod, typedLit}
     val slot = pmod(col("shard") + pmod(hash(col("index")), lit(n)), lit(n))
-    docs.withColumn(WriterKeyColumn, typedLit(writerKeys(n).toSeq).getItem(slot))
+    docs.select(Schema.fieldNames.map(col).toSeq :+
+      typedLit(writerKeys(n).toSeq).getItem(slot).as(WriterKeyColumn): _*)
   }
 
   def shardConfig(options: Map[String, String]): ShardConfig = {
@@ -188,7 +190,7 @@ class EsSnapshotWriteBuilder(info: LogicalWriteInfo)
       expected.keySet.subsetOf(given.fieldNames.toSet) &&
         expected.forall { case (n, dt) =>
           given.find(_.name == n).exists(_.dataType == dt) },
-      s"es-snapshot sink expects the IndexableDoc envelope " +
+      s"es-snapshot sink expects the envelope columns " +
         s"${EsSnapshotSink.Schema.simpleString}, got ${given.simpleString}")
     require(given.find(_.name == EsSnapshotSink.WriterKeyColumn)
       .exists(_.dataType == IntegerType),
@@ -307,7 +309,7 @@ class EsSnapshotBatchWrite(schema: StructType, dest: String,
     * every shard dir's, index's and the root's metadata concurrently, as
     * each depends on the plan alone; (4) serially, the truncate sweep,
     * the publish (`index-N`, then `index.latest`), then `manifest.txt`
-    * and `_SUMMARY.json`.
+    * and `_SUMMARY.json` side by side.
     * A failure before the publish leaves readers on the previous
     * generation, and the DSv2 abort then deletes this write's data files. */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -348,34 +350,41 @@ class EsSnapshotBatchWrite(schema: StructType, dest: String,
       .getOrElse(SnapshotLayout.RepoState.Empty)
       .plus(snapshotName, snapshotUuid, indexes)
 
-    val shardWrites = indexes.flatMap { index =>
-      val perShard = byIndex(index).groupBy(_.shard)
-      val winners = byIndex(index).map(_.fileName).toSet
-      (0 until shardCfg.shardsFor(index)).map { shard => () =>
-        commitShardDir(fs, index, shard, perShard.getOrElse(shard, Seq.empty), winners)
+    // every blob of this phase is CodecUtil-framed, so it goes out
+    // without a `.crc` sidecar
+    val ownFs = SnapshotLayout.sidecarFree(fs, conf)
+    try {
+      val framedFs = ownFs.getOrElse(fs)
+      val shardWrites = indexes.flatMap { index =>
+        val perShard = byIndex(index).groupBy(_.shard)
+        val winners = byIndex(index).map(_.fileName).toSet
+        (0 until shardCfg.shardsFor(index)).map { shard => () =>
+          commitShardDir(fs, framedFs, index, shard,
+            perShard.getOrElse(shard, Seq.empty), winners)
+        }
       }
-    }
-    val indexMetaWrites = indexes.map { index => () =>
-      SnapshotLayout.writeBytes(fs,
-        new Path(SnapshotLayout.indicesDir(dest, index), SnapshotLayout.metaDat(snapshotUuid)),
-        SnapshotLayout.indexMetaDat(index, SnapshotLayout.indexId(index),
-          shardCfg.shardsFor(index),
-          options.getOrElse(EsSnapshotSink.MappingsOption, "{}")))
-    }
-    // Root metadata (IndexingPostProcessor.java:144-193). The template —
-    // cluster-level state in ES — lands in the root MetaData blob under
-    // its name, as a real repo stores it.
-    val rootWrites = Seq(
-      () => SnapshotLayout.writeBytes(fs,
-        new Path(destPath, SnapshotLayout.snapDat(snapshotUuid)),
-        SnapshotLayout.rootSnapDat(snapshotName, snapshotUuid, indexes,
-          totalDocs, totalShards)),
-      () => SnapshotLayout.writeBytes(fs,
-        new Path(destPath, SnapshotLayout.metaDat(snapshotUuid)),
-        SnapshotLayout.rootMetaDat("graft",
-          options.getOrElse(EsSnapshotSink.TemplateNameOption, "template_1"),
-          options.getOrElse(EsSnapshotSink.TemplateOption, "{}"))))
-    Concurrently.runAll("es-snapshot-commit", shardWrites ++ indexMetaWrites ++ rootWrites)
+      val indexMetaWrites = indexes.map { index => () =>
+        SnapshotLayout.writeBytes(framedFs,
+          new Path(SnapshotLayout.indicesDir(dest, index), SnapshotLayout.metaDat(snapshotUuid)),
+          SnapshotLayout.indexMetaDat(index, SnapshotLayout.indexId(index),
+            shardCfg.shardsFor(index),
+            options.getOrElse(EsSnapshotSink.MappingsOption, "{}")))
+      }
+      // Root metadata (IndexingPostProcessor.java:144-193). The template —
+      // cluster-level state in ES — lands in the root MetaData blob under
+      // its name, as a real repo stores it.
+      val rootWrites = Seq(
+        () => SnapshotLayout.writeBytes(framedFs,
+          new Path(destPath, SnapshotLayout.snapDat(snapshotUuid)),
+          SnapshotLayout.rootSnapDat(snapshotName, snapshotUuid, indexes,
+            totalDocs, totalShards)),
+        () => SnapshotLayout.writeBytes(framedFs,
+          new Path(destPath, SnapshotLayout.metaDat(snapshotUuid)),
+          SnapshotLayout.rootMetaDat("graft",
+            options.getOrElse(EsSnapshotSink.TemplateNameOption, "template_1"),
+            options.getOrElse(EsSnapshotSink.TemplateOption, "{}"))))
+      Concurrently.runAll("es-snapshot-commit", shardWrites ++ indexMetaWrites ++ rootWrites)
+    } finally ownFs.foreach(_.close())
 
     if (truncateRepo) {
       // forget prior generations at the root: stale index-N pointers and
@@ -402,29 +411,31 @@ class EsSnapshotBatchWrite(schema: StructType, dest: String,
           .foreach(d => fs.delete(d.getPath, true))
     }
     SnapshotLayout.publishRepo(fs, dest, next)
-    SnapshotLayout.writeBytes(fs, new Path(destPath, SnapshotLayout.ManifestFile),
-      manifest.sorted.map(_ + "\n").mkString.getBytes(UTF_8))
-
-    // JOB_COUNTER-equivalent metrics (BaseESReducer.java:60-62).
-    SnapshotLayout.writeBytes(fs,
-      new Path(destPath, SnapshotLayout.SummaryFile),
-      SnapshotLayout.jsonObj(
-        "snapshot_uuid" -> SnapshotLayout.jsonStr(snapshotUuid),
-        "index_doc_created" -> totalDocs.toString,
-        "bytes_written" -> commits.map(_.bytes).sum.toString,
-        "time_spent_indexing_ms" -> (commits.map(_.indexingNanos).sum / 1000000).toString,
-        "time_spent_flushing_ms" -> (commits.map(_.flushNanos).sum / 1000000).toString,
-        "writer_files" -> commits.length.toString,
-        "writer_tasks" -> messages.count {
-          case m: ShardCommitMessage => m.files.nonEmpty
-          case _ => false
-        }.toString).getBytes(UTF_8))
+    Concurrently.runAll("es-snapshot-commit", Seq(
+      () => SnapshotLayout.writeBytes(fs, new Path(destPath, SnapshotLayout.ManifestFile),
+        manifest.sorted.map(_ + "\n").mkString.getBytes(UTF_8)),
+      // JOB_COUNTER-equivalent metrics (BaseESReducer.java:60-62).
+      () => SnapshotLayout.writeBytes(fs,
+        new Path(destPath, SnapshotLayout.SummaryFile),
+        SnapshotLayout.jsonObj(
+          "snapshot_uuid" -> SnapshotLayout.jsonStr(snapshotUuid),
+          "index_doc_created" -> totalDocs.toString,
+          "bytes_written" -> commits.map(_.bytes).sum.toString,
+          "time_spent_indexing_ms" -> (commits.map(_.indexingNanos).sum / 1000000).toString,
+          "time_spent_flushing_ms" -> (commits.map(_.flushNanos).sum / 1000000).toString,
+          "writer_files" -> commits.length.toString,
+          "writer_tasks" -> messages.count {
+            case m: ShardCommitMessage => m.files.nonEmpty
+            case _ => false
+          }.toString).getBytes(UTF_8))))
   }
 
-  /** One shard dir's part of the commit: sweep, then its `snap-<uuid>.dat`.
-    * Touches only `dir`, so shard dirs commit concurrently. */
-  private def commitShardDir(fs: FileSystem, index: String, shard: Int,
-                             files: Seq[ShardFileCommit], winners: Set[String]): Unit = {
+  /** One shard dir's part of the commit: sweep through `fs`, then write
+    * its `snap-<uuid>.dat` through `framedFs`. Touches only `dir`, so
+    * shard dirs commit concurrently. */
+  private def commitShardDir(fs: FileSystem, framedFs: FileSystem, index: String,
+                             shard: Int, files: Seq[ShardFileCommit],
+                             winners: Set[String]): Unit = {
     val dir = new Path(SnapshotLayout.shardDir(dest, index, shard))
     fs.mkdirs(dir)
     // Sweep stray files from failed/zombie attempts: survivors are
@@ -478,7 +489,7 @@ class EsSnapshotBatchWrite(schema: StructType, dest: String,
     // (IndexingPostProcessor.java:195-216); here shards are born stitched.
     // A4: shards with no rows still get a dir + snap file (empty-shard
     // backfill, BaseTransport.java:144-167).
-    SnapshotLayout.writeBytes(fs,
+    SnapshotLayout.writeBytes(framedFs,
       new Path(dir, SnapshotLayout.snapDat(snapshotUuid)),
       SnapshotLayout.shardSnapDat(snapshotName, docs, bytes, fileLens))
   }
@@ -530,7 +541,8 @@ object ShardDocWriter {
  * whole blocks (one deflate + CRC call per 64 KB, not one per doc and one
  * per newline); payloads go to that buffer through `UTF8String.writeTo`
  * (no `getBytes` copy when the row sits in a byte array), and the open
- * stream is found by the row's `index` bytes without decoding a String.
+ * stream is found without allocating: the row's `index` bytes are compared
+ * with the previous row's index, and its shard keys a `LongMap`.
  */
 class ShardDocWriter(schema: StructType, dest: String, conf: Configuration,
                      partitionId: Int, taskId: Long, batchBytes: Long,
@@ -548,13 +560,24 @@ class ShardDocWriter(schema: StructType, dest: String, conf: Configuration,
   private final class LeveledGzip(o: OutputStream, level: Int)
       extends GZIPOutputStream(o, 64 * 1024) { `def`.setLevel(level) }
 
-  private final class ShardStream(val index: String, val shard: Int, seq: Int) {
-    val indexKey: UTF8String = UTF8String.fromString(index)
+  // gzip files carry their own CRC32 (the trailer), so they go out
+  // without a `.crc` sidecar through an instance this writer owns, which
+  // commit or abort closes; `compression=none` files keep the sidecar
+  private val destFs = new Path(dest).getFileSystem(conf)
+  private var ownFs = if (gzip) SnapshotLayout.sidecarFree(destFs, conf) else None
+  private val fs = ownFs.getOrElse(destFs)
+
+  private def closeFs(): Unit = {
+    ownFs.foreach(_.close())
+    ownFs = None
+  }
+
+  private final class ShardStream(val ix: IndexStreams, val shard: Int, seq: Int) {
+    val index: String = ix.name
     // seq numbers a shard's files in this task (rolls and reopens after an
     // eviction): a fresh file each time, never an overwrite
     val fileName: String = SnapshotLayout.dataFile(s"$writerUuid-$seq", gzip)
     val path = new Path(SnapshotLayout.shardDir(dest, index, shard), fileName)
-    private val fs = path.getFileSystem(conf)
     val out: OutputStream = {
       val file = fs.create(path, true)
       new BufferedOutputStream(
@@ -587,30 +610,45 @@ class ShardDocWriter(schema: StructType, dest: String, conf: Configuration,
     }
   }
 
-  // open streams by (index bytes, shard); finished files accumulate as commits
-  private val open = mutable.HashMap.empty[(UTF8String, Int), ShardStream]
+  /** One index's open streams and the next `seq` of each shard, keyed by
+    * shard without boxing. `key` is a copy: a row's `index` may point into
+    * a buffer the next row reuses. */
+  private final class IndexStreams(val name: String) {
+    val key: UTF8String = UTF8String.fromString(name)
+    val open = new mutable.LongMap[ShardStream]
+    val nextSeq = new mutable.LongMap[Int]
+  }
+
+  private val indexes = mutable.HashMap.empty[UTF8String, IndexStreams]
+  private var last: IndexStreams = null // the previous row's index
+  private var openCount = 0
+  // finished files accumulate as commits
   private val finished = mutable.ArrayBuffer.empty[ShardFileCommit]
-  private val nextSeq = mutable.HashMap.empty[(String, Int), Int]
   private var rows = 0L
   private var docsSoFar = 0L
   private var bytesSoFar = 0L
   private var indexingNanosSoFar = 0L
 
+  private def openStreams: Iterator[ShardStream] =
+    indexes.valuesIterator.flatMap(_.open.valuesIterator)
+
   private def finish(s: ShardStream): Unit = {
     finished += s.finish() // a failed close leaves it open, for abort
-    open.remove((s.indexKey, s.shard))
+    s.ix.open.remove(s.shard)
+    openCount -= 1
     docsSoFar += s.docCount
     bytesSoFar += s.bytes
     indexingNanosSoFar += s.indexingNanos
   }
 
-  private def openStream(index: String, shard: Int): ShardStream = {
-    if (open.size >= ShardDocWriter.MaxOpenStreams)
-      finish(open.valuesIterator.minBy(_.lastRow))
-    val seq = nextSeq.getOrElse((index, shard), 0)
-    nextSeq((index, shard)) = seq + 1
-    val s = new ShardStream(index, shard, seq)
-    open((s.indexKey, shard)) = s
+  private def openStream(ix: IndexStreams, shard: Int): ShardStream = {
+    if (openCount >= ShardDocWriter.MaxOpenStreams)
+      finish(openStreams.minBy(_.lastRow))
+    val seq = ix.nextSeq.getOrElse(shard, 0)
+    ix.nextSeq(shard) = seq + 1
+    val s = new ShardStream(ix, shard, seq)
+    ix.open(shard) = s
+    openCount += 1
     s
   }
 
@@ -620,13 +658,21 @@ class ShardDocWriter(schema: StructType, dest: String, conf: Configuration,
 
   override def write(record: InternalRow): Unit = {
     val index = record.getUTF8String(iIndex)
+    if (last == null || !last.key.equals(index))
+      last = indexes.get(index) match {
+        case Some(ix) => ix
+        case None =>
+          val ix = new IndexStreams(index.toString)
+          indexes(ix.key) = ix
+          ix
+      }
     val shard = record.getInt(iShard)
-    val stream = open.getOrElse((index, shard), null) match {
-      case null => openStream(index.toString, shard)
+    val stream = last.open.getOrNull(shard) match {
+      case null => openStream(last, shard)
       // bounded data files: roll at the bytes/docs flush threshold (the
       // reference's bulk-size knobs); every rolled file is committed and
       // listed in the shard's snap manifest
-      case s if thresholdHit(s) => finish(s); openStream(s.index, shard)
+      case s if thresholdHit(s) => finish(s); openStream(last, shard)
       case s => s
     }
     rows += 1
@@ -635,12 +681,13 @@ class ShardDocWriter(schema: StructType, dest: String, conf: Configuration,
   }
 
   override def commit(): WriterCommitMessage = {
-    open.values.toSeq.foreach(finish)
+    openStreams.toSeq.foreach(finish)
+    closeFs()
     ShardCommitMessage(finished.toSeq)
   }
 
   override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] = {
-    val streams = open.values
+    val streams = openStreams.toSeq
     Array(
       TaskMetric("docsWritten", docsSoFar + streams.map(_.docCount).sum),
       TaskMetric("bytesWritten", bytesSoFar + streams.map(_.bytes).sum),
@@ -649,17 +696,17 @@ class ShardDocWriter(schema: StructType, dest: String, conf: Configuration,
   }
 
   override def abort(): Unit = {
-    open.values.foreach(_.abort())
-    open.clear()
+    openStreams.foreach(_.abort())
+    indexes.clear()
     // also remove files this task already closed — their commits will
     // never reach the driver
     finished.foreach { c =>
       try {
         val p = new Path(SnapshotLayout.shardDir(dest, c.index, c.shard), c.fileName)
-        val fs = p.getFileSystem(conf)
         if (fs.exists(p)) fs.delete(p, false)
       } catch { case _: Exception => () }
     }
+    closeFs()
   }
 
   override def close(): Unit = ()

@@ -4,7 +4,8 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.util.UUID
 
 import com.fasterxml.jackson.databind.JsonNode
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
 
 /**
  * Path/name builders, tiny JSON codecs and the one reader/publisher of the
@@ -28,6 +29,12 @@ import org.apache.hadoop.fs.{FileSystem, Path}
  *   manifest.txt            index|snapshotUUID|indexId per populated shard
  *   _SUMMARY.json           JOB_COUNTER-equivalent metrics
  * }}}
+ *
+ * Blobs that carry their own CRC32 (gzip data files, the CodecUtil-framed
+ * `.dat` files) are written through [[sidecarFree]], so a `file:` repo
+ * holds no Hadoop `.crc` sidecar beside them, as an ES repository holds
+ * none. The unframed files (`index-N`, `index.latest`, `manifest.txt`,
+ * `_SUMMARY.json`, `compression=none` data files) keep their sidecar.
  *
  * "Layout mode": document payloads are gzipped NDJSON rather than Lucene
  * segments (no embedded ES available in this environment — SURVEY.md §7.3
@@ -342,6 +349,23 @@ object SnapshotLayout {
   /** A whole UTF-8 text file: generation JSON, manifests, summaries. */
   def readString(fs: FileSystem, path: Path): String =
     new String(readBytes(fs, path), UTF_8)
+
+  /** A file system for `fs`'s destination that writes no Hadoop `.crc`
+    * sidecar, for the blobs that check themselves: a gzip trailer holds a
+    * CRC32 and the length, which `GZIPInputStream` verifies, and a
+    * CodecUtil footer holds a CRC32, which [[LuceneFrame.unwrap]] verifies
+    * on every read. Only a `ChecksumFileSystem` (`file:`) writes sidecars,
+    * so only there is it `Some`: a new instance of the destination's own
+    * class with `setWriteChecksum(false)`, which the caller must close (the
+    * shared cached instance keeps its sidecars). Elsewhere (HDFS, s3a) it
+    * is `None` and `fs` serves as it is. */
+  def sidecarFree(fs: FileSystem, conf: Configuration): Option[FileSystem] = fs match {
+    case _: ChecksumFileSystem =>
+      val own = FileSystem.newInstance(fs.getUri, conf)
+      own.setWriteChecksum(false)
+      Some(own)
+    case _ => None
+  }
 
   /** Creates (or replaces) `path` with exactly `body`. */
   def writeBytes(fs: FileSystem, path: Path, body: Array[Byte]): Unit = {

@@ -540,4 +540,27 @@ class RankingSpec extends SparkSpec {
       Ranking.levelRanks(gc, Nil, "nope", "cnt", "r2")
     }
   }
+
+  test("withGroupedRank's overflow guard counts each chunk's rows, not each group's") {
+    // 3 groups of 4 rows: every group is under the limit, a chunk holding
+    // all of them is not
+    val df = (0 until 12).map(i => (i.toLong, s"g${i % 3}", (i / 3).toDouble))
+      .toDF("id", "grp", "metric")
+    val order = Seq(col("metric"), col("id"))
+    for (stitch <- Seq(None, Some(true), Some(false))) {
+      val e = intercept[Exception](Ranking.withGroupedRank(df, "grp", order,
+        "rn", "n", chunks = 1, stitch, chunkRowLimit = 12).collect())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(c => c.getMessage != null &&
+          c.getMessage.contains("withGroupedRank: a range chunk reaches 12 rows")),
+        s"stitch $stitch: $e")
+    }
+    // the same rows over three chunks stay under it and rank exactly
+    val expected = df.withColumn("rn",
+        row_number().over(Window.partitionBy("grp").orderBy(order: _*)).cast("long"))
+      .withColumn("n", lit(4L)).collect().toSet
+    val got = Ranking.withGroupedRank(df, "grp", order, "rn", "n", chunks = 3,
+      None, chunkRowLimit = 12).collect().toSet
+    assert(got === expected)
+  }
 }

@@ -3,31 +3,17 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val repeats = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEATS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      // testdata events.ts is parquet TIMESTAMP(NANOS): read as epoch-nanos long
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // untimed warmup: JVM/codegen infra + parquet footers, not query work
-    Seq("lineitem", "orders", "customer", "events", "documents", "embeddings",
-      "nation", "region").foreach { t =>
-      spark.read.parquet(s"$sfDir/$t.parquet").count()
-    }
-    // Caches (sketch-frame localCheckpoints) are per-query scratch: free
-    // them between queries or 33×2 runs of cached RDDs pile up in one JVM
-    // and GC pressure poisons later queries' timings.
-    def dropCaches(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      spark.catalog.clearCache()
-    }
+    // SPARK_GRAFT_BENCH_ONLY: comma-separated query subset for local
+    // iteration (the driver never sets it — full suite by default); a
+    // typo'd name fails before the session starts, instead of timing a
+    // quietly smaller subset
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
+    val selected = SparkEntry.select(only.getOrElse(SparkEntry.queries.keys))
+    require(selected.nonEmpty, "SPARK_GRAFT_BENCH_ONLY names no query")
+    val spark = LocalSession()
+    LocalSession.warm(spark, sfDir)
     // MIN over `repeats` FULL passes of the suite (not back-to-back
     // repeats of one query) is the HEADLINE semantics (r12+, per the
     // r11 verdict): environment noise arrives in multi-second bursts
@@ -51,19 +37,7 @@ object Bench {
       "q_stream_heavy", "q_stream_transitions", "q_stream_changepoint",
       "q_stream_ewma", "q_stream_drift", "q_stream_cusum",
       "q_stream_srm", "q_stream_msprt")
-    // SPARK_GRAFT_BENCH_ONLY: comma-separated query subset for local
-    // iteration (the driver never sets it — full suite by default)
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(',').map(_.trim).toSet)
-    val names = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filterNot { case (n, _) => parityDrives.contains(n) }
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-    // a typo'd subset must not emit a valid-looking 0.00-sec metric
-    // line and overwrite BENCH_METRIC.json (a pure stream-drive subset
-    // is fine — those time in the separate streams block below)
-    require(names.nonEmpty ||
-      only.exists(_.exists(parityDrives.contains)),
-      s"SPARK_GRAFT_BENCH_ONLY matched no benchable queries: ${only.get}")
+    val names = selected.filterNot { case (n, _) => parityDrives.contains(n) }
     val samples = scala.collection.mutable.Map.empty[String, List[Double]]
     val crashed = scala.collection.mutable.Set.empty[String]
     def timeOne(name: String,
@@ -80,7 +54,7 @@ object Bench {
         try { fn(spark, sfDir).queryExecution.toRdd.count(); true }
         catch { case _: Throwable => false }
       val dt = (System.nanoTime() - t0) / 1e9
-      dropCaches()
+      LocalSession.dropCaches(spark)
       // a FAILED query must not report its time-to-crash as a valid
       // sample (a regression would SHRINK the total); the failure is
       // sticky and surfaces as -1 in the per-query map
@@ -125,9 +99,7 @@ object Bench {
     val streamPasses = 2
     val streamSamples =
       scala.collection.mutable.Map.empty[String, List[(Double, Long)]]
-    val streamNames = SparkEntry.queries.keys.toSeq.sorted
-      .filter(parityDrives.contains)
-      .filter(n => only.forall(_.contains(n)))
+    val streamNames = selected.map(_._1).filter(parityDrives.contains)
     for (_ <- 1 to streamPasses; name <- streamNames) {
       val t0 = System.nanoTime()
       // most drives return ONE (n_stream, n_batch, n_matched) parity
@@ -141,7 +113,7 @@ object Bench {
           else df.count()
         } catch { case _: Throwable => -1L }
       val dt = (System.nanoTime() - t0) / 1e9
-      dropCaches()
+      LocalSession.dropCaches(spark)
       if (rows >= 0)
         streamSamples(name) = (dt, rows) :: streamSamples.getOrElse(name, Nil)
     }

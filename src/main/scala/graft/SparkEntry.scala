@@ -815,8 +815,18 @@ $fieldRows"""
   def entry(spark: SparkSession): DataFrame =
     queries("q3_revenue_by_nation")(spark, "/root/testdata/sf0.001")
 
+  /** The named entries of [[queries]] in name order. An unknown name is an
+    * error that lists every unknown name, so a typo neither drops a query
+    * silently nor surfaces only after the earlier queries have run. */
+  def select(names: Iterable[String])
+  : Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val unknown = names.filterNot(queries.contains).toSeq.distinct.sorted
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    names.toSeq.distinct.sorted.map(n => n -> queries(n))
+  }
+
   /** One entry per implemented operator from SURVEY.md §2 (+ extensions). */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // ── Reference-derived surface (SURVEY.md §2.1-2.3, §2.7) ──────────────
 
@@ -5544,7 +5554,7 @@ $fieldRows"""
         |    AS lm_score
         |FROM f WHERE rn = nt""".stripMargin
 
-  def oracleSql: Map[String, String] = Map(
+  lazy val oracleSql: Map[String, String] = Map(
     "ef_ingest_ids" ->
       """SELECT CAST(event_id AS VARCHAR) AS doc_id,
         |       json_extract_string(props, '$.k') AS k_str,

@@ -1,22 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      // testdata events.ts is parquet TIMESTAMP(NANOS): read as epoch-nanos long
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     new java.io.File(outDir).mkdirs()
     // Local-iteration subset (comma-separated names); the driver runs
     // the full surface with the env var unset. Unknown names are an
@@ -26,26 +15,15 @@ object Verify {
     // fresh SQL and masquerade as a full pass — use a fresh outDir per
     // subset run regardless.
     val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_VERIFY_ONLY names not in SparkEntry.queries: " +
-          s"${unknown.toSeq.sorted.mkString(", ")}")
-    }
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    val selected = SparkEntry.select(only.getOrElse(SparkEntry.queries.keys))
+    selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // per-query scratch caches (sketch-frame localCheckpoints) must not
-      // accumulate across 33 queries in one JVM (see Bench.dropCaches)
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      spark.catalog.clearCache()
+      LocalSession.dropCaches(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

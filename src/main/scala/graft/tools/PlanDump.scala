@@ -2,46 +2,39 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FormattedMode
 
-/** Dumps `.explain("formatted")` for named queries into
-  * `plans/<tag>/<query>_<suffix>.txt` — the optimization rounds'
-  * before/after plan evidence (same bench-shaped session: local[cpus],
-  * shuffle.partitions = cpus). Scratch tooling, not part of the API.
+import graft.{LocalSession, SparkEntry}
+
+/** Writes `.explain("formatted")` of the named queries, or of every query
+  * when none is named, in name order into one markdown file: the
+  * plan-quality evidence trail (pushdown, pruning, broadcast,
+  * WholeStageCodegen spans). Re-run after plan-affecting changes.
   *
-  * Usage: SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=32 \
-  *   sbt "runMain graft.tools.PlanDump r18 before q_sssp q_harmonic"
+  * Usage: SPARK_GRAFT_SF_DIR=<sf dir> \
+  *   sbt "runMain graft.tools.PlanDump PLANS.md [query...]"
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    require(args.length >= 3, "usage: PlanDump <tag> <suffix> <query>...")
-    val (tag, suffix, names) = (args(0), args(1), args.drop(2).toSeq)
+    require(args.nonEmpty, "usage: PlanDump <out.md> [query...]")
+    val selected = SparkEntry.select(
+      if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Files.createDirectories(Paths.get(s"plans/$tag"))
-    for (name <- names) {
-      val fn = graft.SparkEntry.queries.getOrElse(name,
-        sys.error(s"unknown query: $name"))
-      val df = fn(spark, sfDir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      Files.writeString(Paths.get(s"plans/$tag/${name}_$suffix.txt"),
-        s"## $name\n\n```\n$plan\n```\n")
-      println(s"plans/$tag/${name}_$suffix.txt " +
-        s"(${plan.linesIterator.count(_.contains("Exchange"))} Exchange lines)")
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      spark.catalog.clearCache()
+    val spark = LocalSession()
+
+    val sb = new StringBuilder
+    sb ++= "# PLANS — physical-plan audit (generated by graft.tools.PlanDump)\n\n"
+    sb ++= s"Scale dir: `$sfDir`. What to look for: `PushedFilters` reaching\n"
+    sb ++= "the scan, pruned `ReadSchema`, `BroadcastHashJoin` for small dims,\n"
+    sb ++= "wide `WholeStageCodegen` spans (custom expressions stay inside),\n"
+    sb ++= "and exactly one `Exchange` per required clustering.\n"
+    for ((name, fn) <- selected) {
+      val plan = fn(spark, sfDir).queryExecution.explainString(FormattedMode)
+      sb ++= s"\n## $name\n\n```\n$plan```\n"
+      LocalSession.dropCaches(spark)
     }
+    Files.writeString(Paths.get(args(0)), sb.toString)
+    println(s"[plan-dump] wrote ${args(0)} (${selected.size} plans)")
     spark.stop()
   }
 }

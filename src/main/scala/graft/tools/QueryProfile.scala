@@ -1,123 +1,60 @@
 package graft.tools
 
-import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.JobCounter
+
+import graft.{LocalSession, SparkEntry}
 
 /**
  * Per-query job/stage/shuffle profiler (optimization-round measurement
  * instrument, guide §1): runs each named query once (plus one untimed
- * warm pass of the inputs) under a SparkListener and prints, per query,
+ * warm pass of the inputs) under a [[JobCounter]] and prints, per query,
  * wall seconds, the number of Spark JOBS it launched (sequential
  * driver-side round trips — at bench scale each costs a fixed latency,
  * at 100 TB each is a full cluster barrier), stages, tasks, and total
- * shuffle read/write bytes. Scratch tooling, not part of the API.
+ * shuffle read/write and spill bytes. `PROFILE_STAGES=1` also prints each
+ * stage that ran at least `PROFILE_MIN_STAGE_SEC` (default 0.3) seconds.
  *
  * Usage: SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=32 \
  *   sbt "runMain graft.tools.QueryProfile q_perm_test q_spearman"
  */
 object QueryProfile {
   def main(args: Array[String]): Unit = {
+    require(args.nonEmpty, "usage: QueryProfile <query>...")
+    val selected = SparkEntry.select(args.toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    // same warmup as Bench: JVM/codegen/footers, untimed
-    Seq("lineitem", "orders", "customer", "events", "documents",
-      "embeddings", "nation", "region").foreach { t =>
-      spark.read.parquet(s"$sfDir/$t.parquet").count()
-    }
+    val spark = LocalSession()
+    LocalSession.warm(spark, sfDir)
 
     val minStageSec = sys.env.getOrElse("PROFILE_MIN_STAGE_SEC", "0.3").toDouble
     val verbose = sys.env.get("PROFILE_STAGES").exists(_ == "1")
 
-    class Counter extends SparkListener {
-      val jobs = new java.util.concurrent.atomic.AtomicLong
-      val stages = new java.util.concurrent.atomic.AtomicLong
-      val tasks = new java.util.concurrent.atomic.AtomicLong
-      val shufRead = new java.util.concurrent.atomic.AtomicLong
-      val shufWrite = new java.util.concurrent.atomic.AtomicLong
-      val spill = new java.util.concurrent.atomic.AtomicLong
-      val jobSecs = new java.util.concurrent.ConcurrentLinkedQueue[Double]
-      val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, Long]
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); jobStart.put(j.jobId, j.time)
-      }
-      override def onJobEnd(j: SparkListenerJobEnd): Unit = {
-        Option(jobStart.get(j.jobId)).foreach { t0 =>
-          jobSecs.add((j.time - t0) / 1e3)
-        }
-      }
-      val stageRows = new java.util.concurrent.ConcurrentLinkedQueue[String]
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-        stages.incrementAndGet()
-        tasks.addAndGet(s.stageInfo.numTasks.toLong)
-        val m = s.stageInfo.taskMetrics
-        shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        spill.addAndGet(m.diskBytesSpilled + m.memoryBytesSpilled)
-        val dur = (for {
-          a <- s.stageInfo.submissionTime; b <- s.stageInfo.completionTime
-        } yield (b - a) / 1e3).getOrElse(-1.0)
-        if (dur >= minStageSec) stageRows.add(
-          f"    stage ${s.stageInfo.stageId}%4d $dur%6.2fs " +
-            f"${s.stageInfo.numTasks}%4dt " +
-            f"exec ${m.executorRunTime / 1e3}%7.1fs " +
-            f"cpu ${m.executorCpuTime / 1e9}%7.1fs " +
-            f"sR ${m.shuffleReadMetrics.totalBytesRead / 1e6}%7.1fMB " +
-            f"sW ${m.shuffleWriteMetrics.bytesWritten / 1e6}%7.1fMB  " +
-            s.stageInfo.name.take(90))
-      }
-    }
-
-    def dropCaches(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      spark.catalog.clearCache()
-    }
-
-    val names =
-      if (args.nonEmpty) args.toSeq
-      else SparkEntryNames.topByR16 // fallback: edit as needed
     println(f"${"query"}%-28s ${"sec"}%7s ${"jobs"}%5s ${"stages"}%6s " +
       f"${"tasks"}%6s ${"shufR_MB"}%9s ${"shufW_MB"}%9s ${"spill_MB"}%9s  slowest jobs (s)")
-    for (name <- names) {
-      val fn = graft.SparkEntry.queries.getOrElse(name,
-        sys.error(s"unknown query: $name"))
-      val c = new Counter
-      spark.sparkContext.addSparkListener(c)
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).queryExecution.toRdd.count()
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.removeSparkListener(c)
-      dropCaches()
-      import scala.jdk.CollectionConverters._
-      val slow = c.jobSecs.asScala.toSeq.sortBy(-_).take(6)
-        .map(s => f"$s%.2f").mkString(" ")
-      println(f"$name%-28s $dt%7.2f ${c.jobs.get}%5d ${c.stages.get}%6d " +
-        f"${c.tasks.get}%6d ${c.shufRead.get / 1e6}%9.1f " +
-        f"${c.shufWrite.get / 1e6}%9.1f ${c.spill.get / 1e6}%9.1f  $slow")
-      if (verbose) c.stageRows.forEach(r => println(r))
+    for ((name, fn) <- selected) {
+      val c = new JobCounter(spark.sparkContext)
+      try {
+        val t0 = System.nanoTime()
+        fn(spark, sfDir).queryExecution.toRdd.count()
+        val dt = (System.nanoTime() - t0) / 1e9
+        val slow = c.jobSeconds.sortBy(-_).take(6).map(s => f"$s%.2f").mkString(" ")
+        println(f"$name%-28s $dt%7.2f ${c.jobs}%5d ${c.stages.size}%6d " +
+          f"${c.tasks}%6d ${c.shuffleReadBytes / 1e6}%9.1f " +
+          f"${c.shuffleWriteBytes / 1e6}%9.1f ${c.spillBytes / 1e6}%9.1f  $slow")
+        if (verbose) for (s <- c.stages) {
+          val dur = (for (a <- s.submissionTime; b <- s.completionTime)
+            yield (b - a) / 1e3).getOrElse(-1.0)
+          val m = s.taskMetrics
+          if (dur >= minStageSec) println(
+            f"    stage ${s.stageId}%4d $dur%6.2fs ${s.numTasks}%4dt " +
+              f"exec ${m.executorRunTime / 1e3}%7.1fs " +
+              f"cpu ${m.executorCpuTime / 1e9}%7.1fs " +
+              f"sR ${m.shuffleReadMetrics.totalBytesRead / 1e6}%7.1fMB " +
+              f"sW ${m.shuffleWriteMetrics.bytesWritten / 1e6}%7.1fMB  " +
+              s.name.take(90))
+        }
+      } finally c.close()
+      LocalSession.dropCaches(spark)
     }
     spark.stop()
   }
-}
-
-/** Default profile set: the r16 bench's slowest queries. */
-object SparkEntryNames {
-  val topByR16: Seq[String] = Seq(
-    "q_perm_test", "q_triangles", "q_bootstrap_diff", "q_bootstrap",
-    "q_link_predict", "q_hits", "q_sssp", "q_spearman_matrix",
-    "q_spearman", "q_assoc_rules", "text_kneser_ney", "text_dimsum",
-    "ann_ivf_rebuild", "dedup_winnow_pipeline", "dedup_winnow_incremental",
-    "q_harmonic", "q_pagerank_dangling", "dedup_edit_verify",
-    "text_backoff", "q_ppr", "q_pagerank_weighted", "q_pagerank",
-    "text_rm3_index", "dedup_simjoin", "text_backoff_hashed", "q_yuen")
 }

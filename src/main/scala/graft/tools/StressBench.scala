@@ -2,6 +2,9 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.JobCounter
+
+import graft.LocalSession
 
 /**
  * Scale-evidence harness: drives the dedup / similarity operators over
@@ -15,7 +18,10 @@ import org.apache.spark.sql.functions._
  * candidate rate stays low, so operator cost should scale ~linearly in
  * corpus size; a superlinear jump flags a broken blocking scheme.
  *
- * Run: `sbt "runMain graft.tools.StressBench"` (local[32], ~2-4 min).
+ * Run: `sbt "runMain graft.tools.StressBench"` on [[LocalSession]]
+ * (~2-4 min at local[32]). `SPARK_GRAFT_STRESS_ONLY=<section>` runs one
+ * section; the sections tested with `only.contains` (`chunkbytes`,
+ * `scaleprobe`, ...) run only when named.
  */
 object StressBench {
 
@@ -58,15 +64,7 @@ object StressBench {
   }.flatten
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     import graft.operators.{Dedup, Similarity}
 
     val results = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Double, Long)]
@@ -82,9 +80,7 @@ object StressBench {
       val (sec, rows) = time(f)
       results += ((op, n, sec, rows))
       println(f"[stress] $op%-16s n=$n%-8d ${sec}%8.2f s  ($rows rows)")
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      spark.catalog.clearCache()
+      LocalSession.dropCaches(spark)
     }
 
     val only = sys.env.get("SPARK_GRAFT_STRESS_ONLY") // "docs" | "ann"
@@ -1043,8 +1039,8 @@ object StressBench {
     // Chunk-dedup shuffle bytes: the hashed-key path promises ~16 bytes
     // per chunk through the exchanges (keys + the small loser set) where
     // the text-keyed baseline moves every chunk's TEXT twice (keep-first
-    // window + id-keyed reassembly). Measured from the executed plan's
-    // ShuffleExchangeLike write metrics — same corpus, both paths.
+    // window + id-keyed reassembly). Measured from the shuffle writes of
+    // every stage each path runs — same corpus, both paths.
     if (only.contains("chunkbytes")) {
       val n = if (xl) 2000000L else 500000L
       // 40-word docs of 8-char words (web-ish token length); every 10th
@@ -1059,32 +1055,19 @@ object StressBench {
         .select("doc_id", "text")
         .cache()
       docs.count()
-      // task-level listener, not executed-plan metrics: dedupChunks
+      // listener-counted, not executed-plan metrics: dedupChunks
       // materializes its loser table eagerly (localCheckpoint), so part
       // of its shuffle happens OUTSIDE the final Dataset's queryExecution
       def shuffled(run: => org.apache.spark.sql.DataFrame)
       : (Long, Long, Double) = {
-        val bytes = new java.util.concurrent.atomic.AtomicLong
-        val recs = new java.util.concurrent.atomic.AtomicLong
-        val listener = new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(
-              t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-            val m = t.taskMetrics
-            if (m != null) {
-              bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-              recs.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-            }
-          }
-        }
-        spark.sparkContext.addSparkListener(listener)
+        val counter = new JobCounter(spark.sparkContext)
         try {
           val t0 = System.nanoTime()
           run.select(sum(length(col("clean_text"))).as("sig"),
             count(lit(1)).as("nn")).collect()
           val sec = (System.nanoTime() - t0) / 1e9
-          Thread.sleep(2000) // listener bus drains asynchronously
-          (bytes.get, recs.get, sec)
-        } finally spark.sparkContext.removeSparkListener(listener)
+          (counter.shuffleWriteBytes, counter.shuffleWriteRecords, sec)
+        } finally counter.close()
       }
       val (hB, hR, hSec) = shuffled(
         Dedup.dedupChunks(docs, "doc_id", "text", chunkTokens = 8))
@@ -1758,6 +1741,55 @@ object StressBench {
         graft.operators.TextAnalysis.skipGramPairs(docs, "text", 4,
           minCount = 2L).count())
       docs.unpersist()
+    }
+
+    // Scale-adaptive heuristics at a 16M-row tier. Every expectation comes
+    // from the session, so the checks hold at any local[n]:
+    //  1. `LineageCut.cutFanout` / `cutFanoutBy` are no-ops when the cut
+    //     frame already has ≥ max(shuffle partitions, default parallelism)
+    //     partitions (no added exchange at data scale), and fan a
+    //     single-split frame out to the default parallelism;
+    //  2. `Ranking.withGlobalRank`'s session-derived chunk count tracks
+    //     `spark.sql.shuffle.partitions` (the deployment knob), read off
+    //     the cut frame's range partitioning;
+    //  3. `spearmanMatrix`'s level-count form stays level-bounded at 16M
+    //     rows (3 columns of ~100k/5k/50 quantized levels).
+    if (only.contains("scaleprobe")) {
+      import graft.core.LineageCut
+      val dp = spark.sparkContext.defaultParallelism
+      val sp = spark.conf.get("spark.sql.shuffle.partitions").toInt
+      def check(what: String, parts: Int, want: Int): Unit = {
+        println(s"[stress] scaleprobe $what: $parts partitions (want $want)")
+        assert(parts == want, s"$what: $parts partitions, want $want")
+      }
+      val bigParts = 16 * math.max(sp, dp)
+      val big = spark.range(0, 16L << 20, 1, bigParts).toDF("id")
+        .withColumn("v", pmod(xxhash64(col("id")), lit(1000L)))
+      check(s"cutFanout @16M/${bigParts}p",
+        LineageCut.cutFanout(big).rdd.getNumPartitions, bigParts)
+      check(s"cutFanoutBy @16M/${bigParts}p",
+        LineageCut.cutFanoutBy(big, Seq("v")).rdd.getNumPartitions, bigParts)
+      check("cutFanout @1k/1p", LineageCut.cutFanout(
+        spark.range(0, 1000, 1, 1).toDF("id")).rdd.getNumPartitions, dp)
+      LocalSession.dropCaches(spark)
+      for (knob <- Seq(sp, 3 * sp)) {
+        spark.conf.set("spark.sql.shuffle.partitions", knob.toString)
+        val chunks =
+          try graft.operators.Ranking.withGlobalRank(
+            spark.range(0, 1L << 20, 1, 8).toDF("id")
+              .withColumn("v", pmod(xxhash64(col("id")), lit(97L))),
+            Seq(col("v").asc, col("id").asc), "r", "n").rdd.getNumPartitions
+          finally spark.conf.set("spark.sql.shuffle.partitions", sp.toString)
+        check(s"withGlobalRank chunks @shuffle.partitions=$knob", chunks,
+          math.max(knob, dp))
+        LocalSession.dropCaches(spark)
+      }
+      val wide = spark.range(0, 16L << 20, 1, bigParts).toDF("id")
+        .withColumn("x", pmod(xxhash64(col("id"), lit(1)), lit(100000L)) / 100.0)
+        .withColumn("y", pmod(xxhash64(col("id"), lit(2)), lit(5000L)) / 100.0)
+        .withColumn("z", pmod(xxhash64(col("id"), lit(3)), lit(50L)) / 10.0)
+      run("spearman_levels", 16L << 20)(graft.operators.Profiling
+        .spearmanMatrix(wide, Seq("x", "y", "z"), "id").count())
     }
 
     // scaling factors op by op: sec(16x)/sec(1x) — linear ⇒ ~16, and the

@@ -16,6 +16,15 @@ class SparkEntrySpec extends SparkSpec {
     assert(orphans.isEmpty, s"oracles without queries: $orphans")
   }
 
+  test("select returns the named queries in name order and names every unknown one") {
+    assert(SparkEntry.select(Seq("q1_pricing", "ef_ingest_ids", "q1_pricing")).map(_._1)
+      === Seq("ef_ingest_ids", "q1_pricing"))
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.select(Seq("q1_pricing", "q1_pricng", "ef_ingest_id"))
+    }
+    assert(e.getMessage.endsWith("unknown queries: ef_ingest_id, q1_pricng"))
+  }
+
   test("every query runs and returns rows at sf0.001") {
     val dir = "/root/testdata/sf0.001"
     SparkEntry.queries.foreach { case (name, fn) =>

@@ -36,10 +36,12 @@ object LocalSession {
 
   /** Frees per-query scratch caches (sketch-frame localCheckpoints and
     * cached frames). Call it between queries, or hundreds of runs' cached
-    * RDDs pile up in one JVM and GC pressure poisons later timings. */
+    * RDDs pile up in one JVM and GC pressure poisons later timings. The
+    * removals are blocking, so a `spark.stop()` right after it finds no
+    * block removal still pending. */
   def dropCaches(spark: SparkSession): Unit = {
     spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
+      .foreach(_.unpersist(blocking = true))
     spark.catalog.clearCache()
   }
 }

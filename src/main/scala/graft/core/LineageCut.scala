@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Column, Dataset, Observation}
 import org.apache.spark.storage.StorageLevel
 
 /**
@@ -93,6 +93,25 @@ object LineageCut {
       try ds.checkpoint(eager = true)
       finally ds.unpersist(blocking = false)
     } else ds.localCheckpoint(eager = true)
+  }
+
+  /**
+   * Eager cut with a witness: `metric` and `metrics` ride the cut's own
+   * materialization as an `Observation` named `name`, so a count, a flag
+   * sum or a set about the cut frame costs no job of its own (ReStore's
+   * "reuse the materialized intermediate", within one query). Returns the
+   * cut frame and the observed values by metric alias.
+   *
+   * The local cut traverses the plan once, so the values are exact. A
+   * reliable cut persists, then checkpoints; if its checkpoint write ever
+   * re-traversed the plan, a sum could inflate, so loop exits should test
+   * witnesses against zero only.
+   */
+  def cutWitnessed[T](ds: Dataset[T], name: String, reliable: Boolean = false)(
+      metric: Column, metrics: Column*): (Dataset[T], Map[String, Any]) = {
+    val obs = new Observation(name)
+    val c = cut(ds.observe(obs, metric, metrics: _*), reliable)
+    (c, obs.get)
   }
 
   /**

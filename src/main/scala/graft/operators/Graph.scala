@@ -532,10 +532,10 @@ object Graph {
       // re-executed the degree aggregate once per anti-join side
       // (three executions per round); now it executes once and both
       // anti-joins read the materialized frame
-      val obs = new org.apache.spark.sql.Observation(s"kcore_round_$i")
-      val bad = cut(deg.filter(col("deg") < k).select(col("n"))
-        .observe(obs, count(lit(1)).as("n_bad")))
-      if (obs.get("n_bad").asInstanceOf[Long] == 0L) {
+      val (bad, w) = LineageCut.cutWitnessed(
+        deg.filter(col("deg") < k).select(col("n")), s"kcore_round_$i",
+        checkpointDir.isDefined)(count(lit(1)).as("n_bad"))
+      if (w("n_bad").asInstanceOf[Long] == 0L) {
         return deg.select(col("n").as("node"), col("deg"))
       }
       cur = cut(cur
@@ -704,16 +704,15 @@ object Graph {
       val cand = frontier.join(e, frontier("node") === e("src"))
         .select(e("dst").as("node"), lit(level).as("level"),
           lit(false).as("__old"))
-      val obs = new org.apache.spark.sql.Observation(s"bfs_hop_$level")
-      val nextFull = cut(visited
+      val (nextFull, w) = LineageCut.cutWitnessed(visited
         .select(col("node"), col("level"), lit(true).as("__old"))
         .unionAll(cand)
         .groupBy("node")
         .agg(min("level").as("level"),
-          min(when(col("__old"), col("level"))).as("__ol"))
-        .observe(obs,
-          sum(when(col("__ol").isNull, 1L).otherwise(0L)).as("reached")))
-      if (obs.get("reached").asInstanceOf[Long] == 0) done = true
+          min(when(col("__old"), col("level"))).as("__ol")),
+        s"bfs_hop_$level", checkpointDir.isDefined)(
+        sum(when(col("__ol").isNull, 1L).otherwise(0L)).as("reached"))
+      if (w("reached").asInstanceOf[Long] == 0) done = true
       else {
         visited = nextFull.select(col("node"), col("level"))
         level += 1
@@ -793,17 +792,16 @@ object Graph {
       val cand = frontier.join(e, frontier("node") === e("src"))
         .select(col("seed"), e("dst").as("node"), lit(level).as("level"),
           lit(false).as("__old"))
-      val obs = new org.apache.spark.sql.Observation(s"harmonic_hop_$level")
-      val nextFull = cut(vis
+      val (nextFull, w) = LineageCut.cutWitnessed(vis
         .select(col("seed"), col("node"), col("level"),
           lit(true).as("__old"))
         .unionAll(cand)
         .groupBy("seed", "node")
         .agg(min("level").as("level"),
-          min(when(col("__old"), col("level"))).as("__ol"))
-        .observe(obs,
-          sum(when(col("__ol").isNull, 1L).otherwise(0L)).as("reached")))
-      if (obs.get("reached").asInstanceOf[Long] == 0) done = true
+          min(when(col("__old"), col("level"))).as("__ol")),
+        s"harmonic_hop_$level", checkpointDir.isDefined)(
+        sum(when(col("__ol").isNull, 1L).otherwise(0L)).as("reached"))
+      if (w("reached").asInstanceOf[Long] == 0) done = true
       else {
         vis = nextFull.select(col("seed"), col("node"), col("level"))
         level += 1
@@ -906,18 +904,17 @@ object Graph {
       // zero/nonzero signals: dropped == 0 ⇔ the old next.count() ==
       // nEdges fixpoint, kept == 0 ⇔ the old empty-truss exit. The
       // separate per-round count job (and the setup e.count) are gone.
-      val obs = new org.apache.spark.sql.Observation(s"ktruss_round_$i")
-      val flagged = cut(e.join(support,
+      val (flagged, w) = LineageCut.cutWitnessed(e.join(support,
           col("a") === col("ea") && col("b") === col("eb"), "left")
         .select(col("a"), col("b"),
-          (coalesce(col("sup"), lit(0L)) >= minSup).as("__keep"))
-        .observe(obs,
-          sum(when(!col("__keep"), 1L).otherwise(0L)).as("dropped"),
-          sum(when(col("__keep"), 1L).otherwise(0L)).as("kept")))
-      if (obs.get("dropped").asInstanceOf[Long] == 0L) converged = true
+          (coalesce(col("sup"), lit(0L)) >= minSup).as("__keep")),
+        s"ktruss_round_$i", checkpointDir.isDefined)(
+        sum(when(!col("__keep"), 1L).otherwise(0L)).as("dropped"),
+        sum(when(col("__keep"), 1L).otherwise(0L)).as("kept"))
+      if (w("dropped").asInstanceOf[Long] == 0L) converged = true
       else {
         e = flagged.filter(col("__keep")).select("a", "b")
-        converged = obs.get("kept").asInstanceOf[Long] == 0L
+        converged = w("kept").asInstanceOf[Long] == 0L
       }
       i += 1
     }
@@ -1159,23 +1156,19 @@ object Graph {
           lit(false).as("__old"))
       // the min-aggregate keeps the standing distance alongside the new
       // minimum, so "did any node improve or appear" is answerable from
-      // the aggregation itself; an Observation rides the cut's
+      // the aggregation itself; the witness rides the cut's
       // materialization job — the EXACT early-exit witness costs zero
-      // extra actions (it used to be a separate keys-only join per hop).
-      // The metric is valid ONLY as a zero/nonzero witness: if the cut's
-      // plan were ever traversed twice (e.g. a reliable checkpoint write
-      // racing the persist-backed cache), the sum could inflate — it is
-      // never surfaced or compared to a count, only to zero
-      val obs = new org.apache.spark.sql.Observation(s"sssp_hop_$hop")
-      val nextFull = cut(dist
+      // extra actions (it used to be a separate keys-only join per hop),
+      // and it is only ever compared to zero
+      val (nextFull, w) = LineageCut.cutWitnessed(dist
         .select(col("node"), col("d"), lit(true).as("__old"))
         .unionAll(cand)
         .groupBy("node")
-        .agg(min("d").as("d"), min(when(col("__old"), col("d"))).as("__od"))
-        .observe(obs,
-          sum(when(col("__od").isNull || col("d") < col("__od"), 1L)
-            .otherwise(0L)).as("improved")))
-      val improved = obs.get("improved").asInstanceOf[Long]
+        .agg(min("d").as("d"), min(when(col("__old"), col("d"))).as("__od")),
+        s"sssp_hop_$hop", checkpointDir.isDefined)(
+        sum(when(col("__od").isNull || col("d") < col("__od"), 1L)
+          .otherwise(0L)).as("improved"))
+      val improved = w("improved").asInstanceOf[Long]
       if (improved == 0) done = true // fixpoint: next ≡ dist (the union
       // keeps every standing node and min never increases)
       else dist = nextFull.select(col("node"), col("d"))

@@ -606,37 +606,36 @@ object Similarity {
    *
    * Scale shape: the sample is a hash-filtered scan capped at
    * `trainSample` rows, so Lloyd costs O(iters · sample) regardless of
-   * corpus size; each iteration shuffles only numCells·dim doubles per
-   * partition (map-side combine); init is seeded hash-rank (TakeOrdered,
-   * no full sort).
+   * corpus size; each iteration is one stage whose tasks return only
+   * numCells·dim doubles each; init is the seeded hash-rank prefix of the
+   * driver-held sample (no extra job).
    */
   def trainKMeans(corpus: DataFrame, numCells: Int, iters: Int = 5,
                   seed: Long = 42, trainSample: Int = 50000,
                   idCol: String = "vec_id", vecCol: String = "embedding")
   : Array[Array[Float]] = {
-    val train = boundedSample(corpus, trainSample, seed, idCol, vecCol)
-    try lloyd(train, numCells, iters, seed)
-    finally train.unpersist(blocking = false)
+    val sample = boundedSample(corpus, trainSample, seed, idCol, vecCol)
+    lloyd(sampleRdd(corpus.sparkSession, sample), initCentroids(sample, numCells),
+      iters)
   }
 
   /** Bounded deterministic training set: the `trainSample` globally
-    * smallest hash ranks in ONE scan. Each partition keeps at most
-    * `trainSample` survivors in a bounded max-heap; the per-partition
-    * partials are merged in a SINGLE EXECUTOR TASK (one extra narrow
-    * shuffle of ≤ numPartitions·trainSample already-pruned rows), so the
-    * driver receives exactly ONE k-bounded sample — O(trainSample), not
-    * the former `takeOrdered` merge that transiently held ~2× the sample
-    * in boxed tuples driver-side (0.5-1 GB at trainSample=50k × dim
-    * 1024). At extreme partition counts an intermediate merge level
-    * could bound the single merge task's fan-in; at ≤ O(100) partitions
-    * the streamed iterator merge (live set ≈ heap + one incoming
-    * partial) is the simpler shape. The sample is then re-parallelized
-    * and cached for Lloyd to iterate. Ranking uses the same seeded hash
-    * as Lloyd's init, so init centroids are a deterministic prefix of
-    * the sample ranking. */
+    * smallest hash ranks in ONE scan, ascending by (rank, id). Each
+    * partition keeps at most `trainSample` survivors in a bounded
+    * max-heap; the per-partition partials are merged in a SINGLE EXECUTOR
+    * TASK (one extra narrow shuffle of ≤ numPartitions·trainSample
+    * already-pruned rows), so the driver receives exactly ONE k-bounded
+    * sample — O(trainSample), not the former `takeOrdered` merge that
+    * transiently held ~2× the sample in boxed tuples driver-side (0.5-1 GB
+    * at trainSample=50k × dim 1024). At extreme partition counts an
+    * intermediate merge level could bound the single merge task's fan-in;
+    * at ≤ O(100) partitions the streamed iterator merge (live set ≈ heap +
+    * one incoming partial) is the simpler shape. Ranking uses the same
+    * seeded hash as Lloyd's init, so init centroids are the sample's
+    * prefix ([[initCentroids]]). */
   private def boundedSample(corpus: DataFrame, trainSample: Int, seed: Long,
                             idCol: String, vecCol: String)
-  : org.apache.spark.rdd.RDD[(Long, Array[Float])] = {
+  : Array[(Long, Array[Float])] = {
     val spark = corpus.sparkSession
     import spark.implicits._
     val typed = corpus.select(col(idCol).cast("long"), col(vecCol))
@@ -664,36 +663,43 @@ object Similarity {
       .mapPartitions(it => Iterator.single(bounded(it)))
     // repartition(1) (NOT coalesce): the scan/prune stays parallel and
     // only pruned partials flow to the one merge task
-    val sample = partials.repartition(1)
+    partials.repartition(1)
       .mapPartitions(heaps => Iterator.single(bounded(heaps.flatMap(_.iterator))))
       .collect() match {
         case Array(merged) => merged.map(e => (e._2, e._3))
         case _ => Array.empty[(Long, Array[Float])] // empty corpus: no partials
       }
-    val parts = math.max(1, math.min(
-      spark.sparkContext.defaultParallelism, sample.length / 1024 + 1))
-    val train = spark.sparkContext.parallelize(sample.toSeq, parts).cache()
-    train.count() // materialize once; Lloyd iterates over this RDD only
-    train
   }
 
-  /** Distributed Lloyd over a (bounded, cached) sample RDD: deterministic
-    * seeded hash-rank init (TakeOrdered, no full sort), then `iters`
-    * rounds of per-partition (cell → sum, count) combine — only
-    * numCells·dim doubles per partition ever shuffle. */
+  /** The driver-held sample as Lloyd's input RDD: one partition per 1024
+    * rows, at most `defaultParallelism`. Not cached: a
+    * `ParallelCollectionRDD` ships its rows inside every task anyway. */
+  private def sampleRdd(spark: SparkSession, sample: Array[(Long, Array[Float])])
+  : org.apache.spark.rdd.RDD[(Long, Array[Float])] = {
+    val parts = math.max(1, math.min(
+      spark.sparkContext.defaultParallelism, sample.length / 1024 + 1))
+    spark.sparkContext.parallelize(sample.toSeq, parts)
+  }
+
+  /** Deterministic seeded hash-rank init: the first `k` rows of the
+    * (rank, id)-sorted sample. */
+  private def initCentroids(sample: Array[(Long, Array[Float])],
+                            k: Int): Array[Array[Float]] =
+    sample.take(k).map(_._2)
+
+  /** Distributed Lloyd over a (bounded) sample RDD from `init`: each
+    * round is ONE stage whose tasks return their (sum, count) per cell,
+    * folded on the driver in partition order — so the centroids do not
+    * depend on the order in which task results arrive. Only
+    * numCells·dim doubles per partition ever move. */
   private def lloyd(train: org.apache.spark.rdd.RDD[(Long, Array[Float])],
-                    numCells: Int, iters: Int, seed: Long)
+                    init: Array[Array[Float]], iters: Int)
   : Array[Array[Float]] = {
     val sc = train.sparkContext
-    var centroids: Array[Array[Float]] = train
-      .map { case (id, vec) =>
-        (graft.core.EsMurmur3.hash(id.toString + seed).toLong, vec) }
-      .takeOrdered(numCells)(Ordering.by(_._1))
-      .map(_._2)
-
+    var centroids = init
     for (_ <- 1 to iters) {
       val cB = sc.broadcast(centroids)
-      val sums = train.mapPartitions { rows =>
+      val partials = train.mapPartitions { rows =>
         val cs = cB.value
         val acc = Array.fill(cs.length)(null: Array[Double])
         val cnt = new Array[Long](cs.length)
@@ -704,20 +710,27 @@ object Similarity {
           while (i < vec.length && i < acc(c).length) { acc(c)(i) += vec(i); i += 1 }
           cnt(c) += 1
         }
-        acc.iterator.zipWithIndex.collect {
-          case (s, c) if s != null => (c, (s, cnt(c)))
+        Iterator.single((acc, cnt))
+      }.collect()
+      val sums = Array.fill(centroids.length)(null: Array[Double])
+      val cnt = new Array[Long](centroids.length)
+      partials.foreach { case (acc, n) =>
+        var c = 0
+        while (c < acc.length) {
+          if (acc(c) != null) {
+            if (sums(c) == null) sums(c) = acc(c)
+            else {
+              var i = 0
+              while (i < sums(c).length) { sums(c)(i) += acc(c)(i); i += 1 }
+            }
+            cnt(c) += n(c)
+          }
+          c += 1
         }
-      }.reduceByKey { (a: (Array[Double], Long), b: (Array[Double], Long)) =>
-        val (s1, n1) = a; val (s2, n2) = b
-        var i = 0
-        while (i < s1.length) { s1(i) += s2(i); i += 1 }
-        (s1, n1 + n2)
-      }.collectAsMap()
+      }
       centroids = centroids.indices.map { c =>
-        sums.get(c) match {
-          case Some((s, n)) => s.map(v => (v / n).toFloat)
-          case None => centroids(c) // empty cell keeps its centroid
-        }
+        if (cnt(c) > 0) sums(c).map(v => (v / cnt(c)).toFloat)
+        else centroids(c) // empty cell keeps its centroid
       }.toArray
     }
     centroids
@@ -779,10 +792,9 @@ object Similarity {
    * many-cells regime: coarse-cluster the bounded sample into
    * ~√numCells super-cells with the distributed [[lloyd]], then
    * re-cluster each super-cell's sample slice independently (one
-   * `groupByKey` over the SAME cached sample; each group is ≤ the
-   * sample, and the √numCells local Lloyd runs execute in parallel
-   * across executors). One sample scan total (takeOrdered, no sizing
-   * count) — the same I/O as the flat trainer.
+   * `groupByKey` over the SAME sample; each group is ≤ the sample, and
+   * the √numCells local Lloyd runs execute in parallel across
+   * executors). One sample scan total — the same I/O as the flat trainer.
    */
   def trainKMeansHier(corpus: DataFrame, numCells: Int, iters: Int = 5,
                       seed: Long = 42, trainSample: Int = 50000,
@@ -791,27 +803,26 @@ object Similarity {
     require(numCells >= 1, "numCells must be >= 1")
     val numCoarse = math.max(1, math.ceil(math.sqrt(numCells.toDouble)).toInt)
     val numFine = math.max(1, math.ceil(numCells.toDouble / numCoarse).toInt)
-    val train = boundedSample(corpus, trainSample, seed, idCol, vecCol)
-    try {
-      val coarse = lloyd(train, numCoarse, iters, seed)
-      val cB = train.sparkContext.broadcast(coarse)
-      val fineMap = train
-        .map { case (id, vec) => (nearest(cB.value, vec), (id, vec)) }
-        .groupByKey(math.min(numCoarse, 256))
-        .mapValues { slice =>
-          // sort for a deterministic fold order (group arrival order is
-          // shuffle-dependent); each slice is bounded by the sample size
-          localLloyd(slice.toArray.sortBy(_._1), numFine, iters, seed)
-        }
-        .collectAsMap()
-      val fine = Array.tabulate(coarse.length) { c =>
-        val fs = fineMap.getOrElse(c, Array.empty[Array[Float]])
-        // a super-cell with no sample rows keeps one fine centroid — its
-        // own coarse centroid — so every coarse cell stays addressable
-        if (fs.isEmpty) Array(coarse(c)) else fs
+    val sample = boundedSample(corpus, trainSample, seed, idCol, vecCol)
+    val train = sampleRdd(corpus.sparkSession, sample)
+    val coarse = lloyd(train, initCentroids(sample, numCoarse), iters)
+    val cB = train.sparkContext.broadcast(coarse)
+    val fineMap = train
+      .map { case (id, vec) => (nearest(cB.value, vec), (id, vec)) }
+      .groupByKey(math.min(numCoarse, 256))
+      .mapValues { slice =>
+        // sort for a deterministic fold order (group arrival order is
+        // shuffle-dependent); each slice is bounded by the sample size
+        localLloyd(slice.toArray.sortBy(_._1), numFine, iters, seed)
       }
-      HierCodebook(coarse, fine)
-    } finally train.unpersist(blocking = false)
+      .collectAsMap()
+    val fine = Array.tabulate(coarse.length) { c =>
+      val fs = fineMap.getOrElse(c, Array.empty[Array[Float]])
+      // a super-cell with no sample rows keeps one fine centroid — its
+      // own coarse centroid — so every coarse cell stays addressable
+      if (fs.isEmpty) Array(coarse(c)) else fs
+    }
+    HierCodebook(coarse, fine)
   }
 
   /** Assign every corpus vector to its hierarchical cell: one broadcast +
@@ -926,10 +937,12 @@ object Similarity {
   }
 
   /**
-   * Train a PQ codebook on the bounded hash-ranked sample: ONE cached
-   * sample, `iters` distributed Lloyd rounds covering ALL `m` subspaces
-   * per pass (each partition accumulates (subspace, code) → (sum, count);
-   * only m·256·subDim doubles per partition ever move). K is 256 (byte
+   * Train a PQ codebook on the bounded hash-ranked sample: `iters`
+   * distributed Lloyd rounds covering ALL `m` subspaces per pass (each
+   * partition accumulates (subspace, code) → (sum, count); only
+   * m·256·subDim doubles per partition ever move, folded on the driver in
+   * partition order). `dim` and the 256 init rows (the sample ranked by a
+   * second seeded hash) come from the driver-held sample. K is 256 (byte
    * codes) or the sample size if smaller.
    */
   def trainPq(corpus: DataFrame, m: Int = 8, iters: Int = 5,
@@ -937,55 +950,55 @@ object Similarity {
               idCol: String = "vec_id", vecCol: String = "embedding")
   : PqCodebook = {
     require(m >= 1, "m must be >= 1")
-    val train = boundedSample(corpus, trainSample, seed, idCol, vecCol)
-    try {
-      val dim = train.first()._2.length
-      require(dim % m == 0, s"dim $dim must divide into m=$m subspaces")
-      val subDim = dim / m
-      val sc = train.sparkContext
-      val initRows = train
-        .map { case (id, vec) =>
-          (graft.core.EsMurmur3.hash(id.toString + "pq" + seed).toLong, vec) }
-        .takeOrdered(256)(Ordering.by(_._1))
-        .map(_._2)
-      var cents: Array[Array[Array[Float]]] = Array.tabulate(m)(s =>
-        initRows.map(v => java.util.Arrays.copyOfRange(v, s * subDim,
-          (s + 1) * subDim)))
-      for (_ <- 1 to iters) {
-        val cB = sc.broadcast(PqCodebook(cents, subDim))
-        val merged = train.mapPartitions { rows =>
-          val cb = cB.value
-          val k = cb.sub(0).length
-          val sums = Array.ofDim[Double](m, k, subDim)
-          val cnt = Array.ofDim[Long](m, k)
-          rows.foreach { case (_, vec) =>
-            val code = cb.encode(vec)
-            var s = 0
-            while (s < m) {
-              val c = code(s) & 0xff
-              var i = 0
-              while (i < subDim) { sums(s)(c)(i) += vec(s * subDim + i); i += 1 }
-              cnt(s)(c) += 1
-              s += 1
-            }
-          }
-          Iterator.single((sums, cnt))
-        }.reduce { case ((s1, c1), (s2, c2)) =>
-          for (s <- 0 until m; c <- 0 until c1(s).length) {
-            c1(s)(c) += c2(s)(c)
+    val sample = boundedSample(corpus, trainSample, seed, idCol, vecCol)
+    require(sample.nonEmpty, "trainPq needs a non-empty corpus")
+    val dim = sample.head._2.length
+    require(dim % m == 0, s"dim $dim must divide into m=$m subspaces")
+    val subDim = dim / m
+    val train = sampleRdd(corpus.sparkSession, sample)
+    val sc = train.sparkContext
+    val initRows = sample
+      .sortBy { case (id, _) =>
+        (graft.core.EsMurmur3.hash(id.toString + "pq" + seed).toLong, id) }
+      .take(256).map(_._2)
+    var cents: Array[Array[Array[Float]]] = Array.tabulate(m)(s =>
+      initRows.map(v => java.util.Arrays.copyOfRange(v, s * subDim,
+        (s + 1) * subDim)))
+    for (_ <- 1 to iters) {
+      val cB = sc.broadcast(PqCodebook(cents, subDim))
+      val merged = train.mapPartitions { rows =>
+        val cb = cB.value
+        val k = cb.sub(0).length
+        val sums = Array.ofDim[Double](m, k, subDim)
+        val cnt = Array.ofDim[Long](m, k)
+        rows.foreach { case (_, vec) =>
+          val code = cb.encode(vec)
+          var s = 0
+          while (s < m) {
+            val c = code(s) & 0xff
             var i = 0
-            while (i < subDim) { s1(s)(c)(i) += s2(s)(c)(i); i += 1 }
+            while (i < subDim) { sums(s)(c)(i) += vec(s * subDim + i); i += 1 }
+            cnt(s)(c) += 1
+            s += 1
           }
-          (s1, c1)
         }
-        cents = Array.tabulate(m)(s => Array.tabulate(cents(s).length) { c =>
-          if (merged._2(s)(c) > 0)
-            merged._1(s)(c).map(v => (v / merged._2(s)(c)).toFloat)
-          else cents(s)(c) // empty code keeps its centroid, like lloyd()
-        })
+        Iterator.single((sums, cnt))
+      }.collect().reduce { (a, b) => // partition order
+        val ((s1, c1), (s2, c2)) = (a, b)
+        for (s <- 0 until m; c <- 0 until c1(s).length) {
+          c1(s)(c) += c2(s)(c)
+          var i = 0
+          while (i < subDim) { s1(s)(c)(i) += s2(s)(c)(i); i += 1 }
+        }
+        (s1, c1)
       }
-      PqCodebook(cents, subDim)
-    } finally train.unpersist(blocking = false)
+      cents = Array.tabulate(m)(s => Array.tabulate(cents(s).length) { c =>
+        if (merged._2(s)(c) > 0)
+          merged._1(s)(c).map(v => (v / merged._2(s)(c)).toFloat)
+        else cents(s)(c) // empty code keeps its centroid, like lloyd()
+      })
+    }
+    PqCodebook(cents, subDim)
   }
 
   /**
@@ -1293,24 +1306,70 @@ object Similarity {
    * partition pruning reads ONLY the probed cells' files — at 100 TB the
    * scan itself is the candidate selection, and index build cost
    * (train + one assignment pass + one partitioned write) amortizes over
-   * every query batch that follows.
+   * every query batch that follows. Each cell dir holds at most
+   * ⌈shufflePartitions / numCells⌉ files per write ([[writeCells]]).
    */
   def buildIvfIndex(corpus: DataFrame, dest: String, numCells: Int = 16,
                     iters: Int = 5, seed: Long = 42, trainSample: Int = 50000,
                     idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
     val cents = trainKMeans(corpus, numCells, iters, seed, trainSample,
       idCol, vecCol)
-    // the two writes are independent once the codebook is trained —
-    // overlap them (guide §2.6: concurrent jobs back-fill the tail;
-    // the tiny one-file centroids write rides the big write's slack)
-    graft.core.Concurrently.runAll("ivf-build", Seq(
+    writeIndex(assignCells(corpus, cents, idCol, vecCol), cents, dest,
+      "ivf-build")
+  }
+
+  /** `cell INT, centroid ARRAY<FLOAT>`: the codebook table of a store. */
+  private val CentroidSchema = "cell INT, centroid ARRAY<FLOAT>"
+
+  /** `nn_id BIGINT, cvec ARRAY<FLOAT>, cell INT`: the vector table of a
+    * store, `cell` being its partition column. */
+  private val VectorSchema = "nn_id BIGINT, cvec ARRAY<FLOAT>, cell INT"
+
+  /** A store's codebook, in cell order. The known schema spares the
+    * schema-inference job a plain parquet read runs. */
+  private def readCentroids(spark: SparkSession, dir: String)
+  : Array[Array[Float]] = {
+    import spark.implicits._
+    spark.read.schema(CentroidSchema).parquet(s"$dir/centroids")
+      .as[(Int, Array[Float])].collect().sortBy(_._1).map(_._2)
+  }
+
+  /** A store's `(nn_id, cvec, cell)` rows, read with the known schema. */
+  private def readVectors(spark: SparkSession, dir: String): DataFrame =
+    spark.read.schema(VectorSchema).parquet(s"$dir/vectors")
+
+  /** Write `(cell, nn_id, cvec)` rows as `dir/vectors`, partitioned by
+    * cell, with one writer per cell slot. Cell c has k = ⌈shufflePartitions
+    * / numCells⌉ slots, `c·k + pmod(xxhash64(nn_id), k)`, and slot s is
+    * written by task s mod shufflePartitions ([[graft.core.HashSlots]]),
+    * so a cell gets at most k files per write, and the write about
+    * max(numCells, shufflePartitions), instead of one per (input
+    * partition, cell). The slots keep a few-cell store of a huge corpus
+    * from being written by one task per cell. */
+  private def writeCells(binned: DataFrame, numCells: Int, dir: String,
+                         mode: String): Unit = {
+    val parts = binned.sparkSession.sessionState.conf.numShufflePartitions
+    val k = math.max(1, (parts + numCells - 1) / math.max(1, numCells))
+    val slot = pmod(col("cell").cast("long") * k +
+      pmod(xxhash64(col("nn_id")), lit(k.toLong)), lit(parts.toLong)).cast("int")
+    // the explicit partition count keeps AQE from coalescing the exchange
+    binned.repartition(parts, graft.core.HashSlots.key(slot, parts))
+      .write.mode(mode).partitionBy("cell").parquet(s"$dir/vectors")
+  }
+
+  /** Write a fresh store at `dir`: the codebook and the cell-slot vector
+    * files. The two writes are independent, so they overlap (concurrent
+    * jobs back-fill the tail; the tiny one-file centroids write rides the
+    * big write's slack), and both complete, even when one fails. */
+  private def writeIndex(binned: DataFrame, cents: Array[Array[Float]],
+                         dir: String, label: String): Unit = {
+    val spark = binned.sparkSession
+    import spark.implicits._
+    graft.core.Concurrently.runAll(label, Seq(
       () => cents.zipWithIndex.map { case (v, c) => (c, v) }.toSeq
         .toDF("cell", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dest/centroids"),
-      () => assignCells(corpus, cents, idCol, vecCol)
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$dest/vectors")))
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids"),
+      () => writeCells(binned, cents.length, dir, "overwrite")))
   }
 
   /**
@@ -1332,11 +1391,8 @@ object Similarity {
                        idCol: String = "vec_id",
                        vecCol: String = "embedding"): Map[Int, Long] = {
     val spark = delta.sparkSession
-    import spark.implicits._
     val live = resolveIvfDir(spark, dest)
-    val cents = spark.read.parquet(s"$live/centroids")
-      .select(col("cell"), col("centroid"))
-      .as[(Int, Array[Float])].collect().sortBy(_._1).map(_._2)
+    val cents = readCentroids(spark, live)
     require(cents.nonEmpty, s"no centroids at $dest — buildIvfIndex first")
     // r18: the per-cell census rides the append write's own job as
     // Observation counters (one fixed sum per known cell — the write
@@ -1346,9 +1402,9 @@ object Similarity {
     val obs = new org.apache.spark.sql.Observation("ivf_append_census")
     val censusCols = cents.indices.map(c =>
       sum(when(col("cell") === c, 1L).otherwise(0L)).as(s"c$c"))
-    assignCells(delta, cents, idCol, vecCol)
-      .observe(obs, censusCols.head, censusCols.tail: _*)
-      .write.mode("append").partitionBy("cell").parquet(s"$live/vectors")
+    writeCells(assignCells(delta, cents, idCol, vecCol)
+      .observe(obs, censusCols.head, censusCols.tail: _*),
+      cents.length, live, "append")
     cents.indices.map(c => c -> obs.get(s"c$c").asInstanceOf[Long])
       .filter(_._2 > 0L).toMap
   }
@@ -1398,7 +1454,7 @@ object Similarity {
    * GC'd oldest-first; the legacy flat layout is never deleted.
    *
    * Scale shape: one ≤ numCells census aggregate, one bounded-sample
-   * k-means train, one assignment map pass + partitioned write over
+   * k-means train, one assignment map pass + cell-slot write over
    * the store — work ∝ store size, driver state ≤ numCells rows.
    * Returns true iff a rebuild happened.
    */
@@ -1414,11 +1470,11 @@ object Similarity {
     require(keepGenerations >= 1, "keepGenerations must be >= 1")
     val (fs, root) = ivfFs(spark, dest)
     val live = resolveIvfDir(spark, dest)
-    val census = spark.read.parquet(s"$live/vectors")
+    val census = readVectors(spark, live)
       .groupBy("cell").agg(count(lit(1)).as("cnt"))
       .as[(Int, Long)].collect()
     require(census.nonEmpty, s"no vectors at $live — buildIvfIndex first")
-    val nCells = spark.read.parquet(s"$live/centroids").count()
+    val nCells = readCentroids(spark, live).length
     val total = census.map(_._2).sum
     val skew = census.map(_._2).max.toDouble * nCells / total
     if (skew < skewThreshold) return false
@@ -1432,18 +1488,13 @@ object Similarity {
     val gen = graft.core.Generations.claim(fs, root)
     val genDir = s"$dest/gen-$gen"
     val store = graft.core.LineageCut.cut(
-      spark.read.parquet(s"$live/vectors").select(col("nn_id"), col("cvec")))
+      readVectors(spark, live).select(col("nn_id"), col("cvec")))
     val cents = trainKMeans(store, numCells, iters, seed, trainSample,
       "nn_id", "cvec")
-    // independent writes once trained — overlap (guide §2.6), same as
-    // buildIvfIndex; both complete, even when one fails, before the
-    // commit marker below
-    graft.core.Concurrently.runAll("ivf-rebuild", Seq(
-      () => cents.zipWithIndex.map { case (v, c) => (c, v) }.toSeq
-        .toDF("cell", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(s"$genDir/centroids"),
-      () => assignCells(store, cents, "nn_id", "cvec")
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$genDir/vectors")))
+    // both writes complete, even when one fails, before the commit
+    // marker below
+    writeIndex(assignCells(store, cents, "nn_id", "cvec"), cents, genDir,
+      "ivf-rebuild")
     // ---- commit (marker, then pointer swing) + retention GC: keep
     // the newest `keepGenerations` committed gens, sweep the rest —
     // including uncommitted carcasses of died attempts
@@ -1459,22 +1510,21 @@ object Similarity {
                        k: Int, nProbe: Int = 4,
                        queryIdCol: String = "query_id",
                        vecCol: String = "embedding"): DataFrame = {
-    import spark.implicits._
     val live = resolveIvfDir(spark, dest)
-    val cents = spark.read.parquet(s"$live/centroids")
-      .select(col("cell"), col("centroid"))
-      .as[(Int, Array[Float])].collect().sortBy(_._1).map(_._2)
-    val probed = probeFrame(queries, cents, nProbe, queryIdCol, vecCol)
-      .lineageCut() // evaluated twice: cell set + the probe join
+    val cents = readCentroids(spark, live)
+    // the probed-cell set rides the cut's own job as a witness
+    val (probed, seen) = graft.core.LineageCut.cutWitnessed(
+      probeFrame(queries, cents, nProbe, queryIdCol, vecCol),
+      "ivf_probe_cells")(collect_set(col("cell")).as("cells"))
     // LITERAL partition predicate, not a join-driven one: dynamic
     // partition pruning declines filter-less build sides (measured: 98%
-    // of store rows read), while an isin over the collected probed-cell
-    // set (≤ numCells ints — driver-bounded) prunes at FILE LISTING,
+    // of store rows read), while an isin over the probed-cell set
+    // (≤ numCells ints — driver-bounded) prunes at FILE LISTING,
     // unconditionally. At 100 TB the store scan then touches only the
     // probed cells' files — the scan IS the candidate selection.
-    val cellsWanted = probed.select(col("cell")).distinct()
-      .as[Int].collect().toSeq
-    val binned = spark.read.parquet(s"$live/vectors")
+    val cellsWanted = seen("cells").asInstanceOf[scala.collection.Seq[Int]].toSeq
+      .sorted
+    val binned = readVectors(spark, live)
       .filter(col("cell").isin(cellsWanted: _*))
       .select(col("cell"), col("nn_id"), col("cvec"))
     topKFromCells(binned, broadcast(probed), k, queryIdCol)

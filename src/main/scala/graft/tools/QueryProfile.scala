@@ -12,7 +12,8 @@ import graft.{LocalSession, SparkEntry}
  * driver-side round trips — at bench scale each costs a fixed latency,
  * at 100 TB each is a full cluster barrier), stages, tasks, and total
  * shuffle read/write and spill bytes. `PROFILE_STAGES=1` also prints each
- * stage that ran at least `PROFILE_MIN_STAGE_SEC` (default 0.3) seconds.
+ * job's call site, in order, and each stage that ran at least
+ * `PROFILE_MIN_STAGE_SEC` (default 0.3) seconds.
  *
  * Usage: SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=32 \
  *   sbt "runMain graft.tools.QueryProfile q_perm_test q_spearman"
@@ -40,6 +41,7 @@ object QueryProfile {
         println(f"$name%-28s $dt%7.2f ${c.jobs}%5d ${c.stages.size}%6d " +
           f"${c.tasks}%6d ${c.shuffleReadBytes / 1e6}%9.1f " +
           f"${c.shuffleWriteBytes / 1e6}%9.1f ${c.spillBytes / 1e6}%9.1f  $slow")
+        if (verbose) c.jobNames.foreach(j => println(s"    job $j"))
         if (verbose) for (s <- c.stages) {
           val dur = (for (a <- s.submissionTime; b <- s.completionTime)
             yield (b - a) / 1e3).getOrElse(-1.0)

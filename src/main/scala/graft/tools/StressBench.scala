@@ -970,10 +970,14 @@ object StressBench {
       val vecScans = allScans(topk.queryExecution.executedPlan)
         .filter(_.metadata.get("Location").exists(_.contains("vectors")))
       val readRows = vecScans.map(_.metrics("numOutputRows").value).sum
+      val storeFiles = new java.io.File(s"$dest/vectors").listFiles()
+        .filter(_.getName.startsWith("cell="))
+        .map(_.listFiles().count(_.getName.endsWith(".parquet"))).sum
       println(f"[stress] ivf index (n=$n, cells=$cells, nProbe=$nProbe): " +
-        f"build ${buildSec}%5.1f s; probe batch ${probeSec}%5.2f s " +
-        f"($rows results); store rows read=$readRows of $n " +
-        f"(${readRows * 100.0 / n}%.1f%%)")
+        f"build ${buildSec}%5.1f s ($storeFiles store files); probe batch " +
+        f"${probeSec}%5.2f s ($rows results); store rows read=$readRows " +
+        f"of $n (${readRows * 100.0 / n}%.1f%%)")
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dest))
     }
 
     // r14: full persisted-store LIFECYCLE re-price under the shared

@@ -71,6 +71,28 @@ class LineageCutSpec extends SparkSpec {
     assert(ex.getMessage.contains("checkpoint dir"))
   }
 
+  test("cutWitnessed: the witness rides the cut's one job, in both modes") {
+    import org.apache.spark.sql.functions._
+    val df = spark.range(0, 1000, 1, 4).toDF("id")
+      .filter(col("id") % 3 === 0)
+      .select(col("id"), (col("id") % 5).as("m"))
+    val jc = new org.apache.spark.sql.graft.JobCounter(spark.sparkContext)
+    val (c, w) = try {
+      val r = LineageCut.cutWitnessed(df, "spec_witness")(
+        count(lit(1)).as("n"), collect_set(col("m")).as("ms"))
+      assert(jc.jobs === 1, jc.jobNames)
+      r
+    } finally jc.close()
+    assert(w("n") === 334L)
+    assert(w("ms").asInstanceOf[scala.collection.Seq[Long]].sorted === (0L to 4L))
+    assert(c.count() === 334L)
+    bothModes {
+      val (cut, wr) = LineageCut.cutWitnessed(df, "spec_witness_modes")(
+        sum(col("id")).as("s"))
+      Set(s"sum=${wr("s")}", s"rows=${cut.count()}")
+    }
+  }
+
   test("Dedup.dedupe survivors identical under both cut modes") {
     bothModes {
       Dedup.dedupe(docs, "doc_id", "text", jaccardThreshold = 0.8)

@@ -1,9 +1,38 @@
 package graft.operators
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.LineageCut._
+
+/** Reduces results that arrive in any order, indexed 0 until n, to
+  * `merge(…merge(r0, r1)…, rn-1)`: result i is merged as soon as every
+  * earlier one is, so only the results that arrive ahead of their turn
+  * are held. Not thread-safe: the caller serializes [[add]]. */
+private[operators] final class InOrderFold[U](merge: (U, U) => U) {
+  private val early = scala.collection.mutable.Map.empty[Int, U]
+  private var next = 0
+  private var acc: Option[U] = None
+
+  def add(i: Int, u: U): Unit = {
+    early(i) = u
+    while (early.contains(next)) {
+      val r = early.remove(next).get
+      acc = Some(acc.fold(r)(merge(_, r)))
+      next += 1
+    }
+  }
+
+  /** Results held until an earlier one arrives. */
+  def held: Int = early.size
+
+  def result: U = {
+    require(early.isEmpty && acc.nonEmpty, s"result $next has not arrived")
+    acc.get
+  }
+}
 
 /**
  * Similarity search over embedding columns (mission extension, SURVEY.md
@@ -607,7 +636,8 @@ object Similarity {
    * Scale shape: the sample is a hash-filtered scan capped at
    * `trainSample` rows, so Lloyd costs O(iters · sample) regardless of
    * corpus size; each iteration is one stage whose tasks return only
-   * numCells·dim doubles each; init is the seeded hash-rank prefix of the
+   * numCells·dim doubles each, or no job at all for a sample under 1024
+   * rows ([[foldSample]]); init is the seeded hash-rank prefix of the
    * driver-held sample (no extra job).
    */
   def trainKMeans(corpus: DataFrame, numCells: Int, iters: Int = 5,
@@ -615,8 +645,7 @@ object Similarity {
                   idCol: String = "vec_id", vecCol: String = "embedding")
   : Array[Array[Float]] = {
     val sample = boundedSample(corpus, trainSample, seed, idCol, vecCol)
-    lloyd(sampleRdd(corpus.sparkSession, sample), initCentroids(sample, numCells),
-      iters)
+    lloyd(corpus.sparkSession, sample, initCentroids(sample, numCells), iters)
   }
 
   /** Bounded deterministic training set: the `trainSample` globally
@@ -671,14 +700,37 @@ object Similarity {
       }
   }
 
-  /** The driver-held sample as Lloyd's input RDD: one partition per 1024
-    * rows, at most `defaultParallelism`. Not cached: a
-    * `ParallelCollectionRDD` ships its rows inside every task anyway. */
+  /** Slices of the driver-held sample: one per 1024 rows, at most
+    * `defaultParallelism`. */
+  private def sampleParts(spark: SparkSession, rows: Int): Int =
+    math.max(1, math.min(spark.sparkContext.defaultParallelism, rows / 1024 + 1))
+
+  /** The driver-held sample as an RDD of [[sampleParts]] slices. Not
+    * cached: a `ParallelCollectionRDD` ships its rows inside every task
+    * anyway. */
   private def sampleRdd(spark: SparkSession, sample: Array[(Long, Array[Float])])
-  : org.apache.spark.rdd.RDD[(Long, Array[Float])] = {
-    val parts = math.max(1, math.min(
-      spark.sparkContext.defaultParallelism, sample.length / 1024 + 1))
-    spark.sparkContext.parallelize(sample.toSeq, parts)
+  : org.apache.spark.rdd.RDD[(Long, Array[Float])] =
+    spark.sparkContext.parallelize(sample.toSeq, sampleParts(spark, sample.length))
+
+  /** One pass over the driver-held sample: `partial(v, slice)` for each
+    * [[sampleRdd]] slice, reduced with `merge` in slice order
+    * ([[InOrderFold]]), so the result does not depend on the order in
+    * which task results arrive. A one-slice sample (under 1024 rows) is
+    * folded on the driver, where its rows already are, with no job.
+    * Otherwise one job runs with `v` broadcast. */
+  private def foldSample[V: ClassTag, U: ClassTag](
+      spark: SparkSession, sample: Array[(Long, Array[Float])], v: V)(
+      partial: (V, Iterator[(Long, Array[Float])]) => U)(merge: (U, U) => U): U = {
+    val parts = sampleParts(spark, sample.length)
+    if (parts == 1) return partial(v, sample.iterator)
+    val sc = spark.sparkContext
+    val vB = sc.broadcast(v)
+    val fold = new InOrderFold(merge)
+    // JobWaiter calls the handler under its own lock, one result at a time
+    try sc.runJob(sc.parallelize(sample.toSeq, parts),
+      (rows: Iterator[(Long, Array[Float])]) => partial(vB.value, rows), fold.add _)
+    finally vB.destroy()
+    fold.result
   }
 
   /** Deterministic seeded hash-rank init: the first `k` rows of the
@@ -687,20 +739,15 @@ object Similarity {
                             k: Int): Array[Array[Float]] =
     sample.take(k).map(_._2)
 
-  /** Distributed Lloyd over a (bounded) sample RDD from `init`: each
-    * round is ONE stage whose tasks return their (sum, count) per cell,
-    * folded on the driver in partition order — so the centroids do not
-    * depend on the order in which task results arrive. Only
-    * numCells·dim doubles per partition ever move. */
-  private def lloyd(train: org.apache.spark.rdd.RDD[(Long, Array[Float])],
+  /** Lloyd over the (bounded) driver-held sample from `init`: each round
+    * is one [[foldSample]] of the per-slice (sum, count) per cell. Only
+    * numCells·dim doubles per slice ever move. */
+  private def lloyd(spark: SparkSession, sample: Array[(Long, Array[Float])],
                     init: Array[Array[Float]], iters: Int)
   : Array[Array[Float]] = {
-    val sc = train.sparkContext
     var centroids = init
     for (_ <- 1 to iters) {
-      val cB = sc.broadcast(centroids)
-      val partials = train.mapPartitions { rows =>
-        val cs = cB.value
+      val (sums, cnt) = foldSample(spark, sample, centroids) { (cs, rows) =>
         val acc = Array.fill(cs.length)(null: Array[Double])
         val cnt = new Array[Long](cs.length)
         rows.foreach { case (_, vec) =>
@@ -710,11 +757,8 @@ object Similarity {
           while (i < vec.length && i < acc(c).length) { acc(c)(i) += vec(i); i += 1 }
           cnt(c) += 1
         }
-        Iterator.single((acc, cnt))
-      }.collect()
-      val sums = Array.fill(centroids.length)(null: Array[Double])
-      val cnt = new Array[Long](centroids.length)
-      partials.foreach { case (acc, n) =>
+        (acc, cnt)
+      } { case ((sums, cnt), (acc, n)) =>
         var c = 0
         while (c < acc.length) {
           if (acc(c) != null) {
@@ -727,6 +771,7 @@ object Similarity {
           }
           c += 1
         }
+        (sums, cnt)
       }
       centroids = centroids.indices.map { c =>
         if (cnt(c) > 0) sums(c).map(v => (v / cnt(c)).toFloat)
@@ -804,8 +849,9 @@ object Similarity {
     val numCoarse = math.max(1, math.ceil(math.sqrt(numCells.toDouble)).toInt)
     val numFine = math.max(1, math.ceil(numCells.toDouble / numCoarse).toInt)
     val sample = boundedSample(corpus, trainSample, seed, idCol, vecCol)
+    val coarse = lloyd(corpus.sparkSession, sample,
+      initCentroids(sample, numCoarse), iters)
     val train = sampleRdd(corpus.sparkSession, sample)
-    val coarse = lloyd(train, initCentroids(sample, numCoarse), iters)
     val cB = train.sparkContext.broadcast(coarse)
     val fineMap = train
       .map { case (id, vec) => (nearest(cB.value, vec), (id, vec)) }
@@ -938,12 +984,12 @@ object Similarity {
 
   /**
    * Train a PQ codebook on the bounded hash-ranked sample: `iters`
-   * distributed Lloyd rounds covering ALL `m` subspaces per pass (each
-   * partition accumulates (subspace, code) → (sum, count); only
-   * m·256·subDim doubles per partition ever move, folded on the driver in
-   * partition order). `dim` and the 256 init rows (the sample ranked by a
-   * second seeded hash) come from the driver-held sample. K is 256 (byte
-   * codes) or the sample size if smaller.
+   * Lloyd rounds covering ALL `m` subspaces per pass, each one
+   * [[foldSample]] (each slice accumulates (subspace, code) → (sum,
+   * count); only m·256·subDim doubles per slice ever move). `dim` and the
+   * 256 init rows (the sample ranked by a second seeded hash) come from
+   * the driver-held sample. K is 256 (byte codes) or the sample size if
+   * smaller.
    */
   def trainPq(corpus: DataFrame, m: Int = 8, iters: Int = 5,
               seed: Long = 42, trainSample: Int = 50000,
@@ -955,8 +1001,6 @@ object Similarity {
     val dim = sample.head._2.length
     require(dim % m == 0, s"dim $dim must divide into m=$m subspaces")
     val subDim = dim / m
-    val train = sampleRdd(corpus.sparkSession, sample)
-    val sc = train.sparkContext
     val initRows = sample
       .sortBy { case (id, _) =>
         (graft.core.EsMurmur3.hash(id.toString + "pq" + seed).toLong, id) }
@@ -965,9 +1009,8 @@ object Similarity {
       initRows.map(v => java.util.Arrays.copyOfRange(v, s * subDim,
         (s + 1) * subDim)))
     for (_ <- 1 to iters) {
-      val cB = sc.broadcast(PqCodebook(cents, subDim))
-      val merged = train.mapPartitions { rows =>
-        val cb = cB.value
+      val merged = foldSample(corpus.sparkSession, sample,
+          PqCodebook(cents, subDim)) { (cb, rows) =>
         val k = cb.sub(0).length
         val sums = Array.ofDim[Double](m, k, subDim)
         val cnt = Array.ofDim[Long](m, k)
@@ -982,9 +1025,8 @@ object Similarity {
             s += 1
           }
         }
-        Iterator.single((sums, cnt))
-      }.collect().reduce { (a, b) => // partition order
-        val ((s1, c1), (s2, c2)) = (a, b)
+        (sums, cnt)
+      } { case ((s1, c1), (s2, c2)) =>
         for (s <- 0 until m; c <- 0 until c1(s).length) {
           c1(s)(c) += c2(s)(c)
           var i = 0
@@ -1306,8 +1348,9 @@ object Similarity {
    * partition pruning reads ONLY the probed cells' files — at 100 TB the
    * scan itself is the candidate selection, and index build cost
    * (train + one assignment pass + one partitioned write) amortizes over
-   * every query batch that follows. Each cell dir holds at most
-   * ⌈shufflePartitions / numCells⌉ files per write ([[writeCells]]).
+   * every query batch that follows. A write gives each cell about one
+   * file, more only for a cell larger than AQE's advisory partition size
+   * ([[writeCells]]).
    */
   def buildIvfIndex(corpus: DataFrame, dest: String, numCells: Int = 16,
                     iters: Int = 5, seed: Long = 42, trainSample: Int = 50000,
@@ -1339,28 +1382,21 @@ object Similarity {
     spark.read.schema(VectorSchema).parquet(s"$dir/vectors")
 
   /** Write `(cell, nn_id, cvec)` rows as `dir/vectors`, partitioned by
-    * cell, with one writer per cell slot. Cell c has k = ⌈shufflePartitions
-    * / numCells⌉ slots, `c·k + pmod(xxhash64(nn_id), k)`, and slot s is
-    * written by task s mod shufflePartitions ([[graft.core.HashSlots]]),
-    * so a cell gets at most k files per write, and the write about
-    * max(numCells, shufflePartitions), instead of one per (input
-    * partition, cell). The slots keep a few-cell store of a huge corpus
-    * from being written by one task per cell. */
-  private def writeCells(binned: DataFrame, numCells: Int, dir: String,
-                         mode: String): Unit = {
-    val parts = binned.sparkSession.sessionState.conf.numShufflePartitions
-    val k = math.max(1, (parts + numCells - 1) / math.max(1, numCells))
-    val slot = pmod(col("cell").cast("long") * k +
-      pmod(xxhash64(col("nn_id")), lit(k.toLong)), lit(parts.toLong)).cast("int")
-    // the explicit partition count keeps AQE from coalescing the exchange
-    binned.repartition(parts, graft.core.HashSlots.key(slot, parts))
+    * cell, rebalanced on `cell` first: each cell reaches one writer task
+    * instead of every input partition holding it, so a write makes about
+    * one file per cell, not one per (input partition, cell). AQE sizes
+    * the exchange: it packs small cells into few tasks and splits a cell
+    * larger than the advisory partition size over several, so a hot cell
+    * of a skewed store is not one straggler. */
+  private def writeCells(binned: DataFrame, dir: String, mode: String): Unit =
+    binned.hint("rebalance", col("cell"))
       .write.mode(mode).partitionBy("cell").parquet(s"$dir/vectors")
-  }
 
-  /** Write a fresh store at `dir`: the codebook and the cell-slot vector
-    * files. The two writes are independent, so they overlap (concurrent
-    * jobs back-fill the tail; the tiny one-file centroids write rides the
-    * big write's slack), and both complete, even when one fails. */
+  /** Write a fresh store at `dir`: the codebook and the vector files
+    * ([[writeCells]]). The two writes are independent, so they overlap
+    * (concurrent jobs back-fill the tail; the tiny one-file centroids
+    * write rides the big write's slack), and both complete, even when one
+    * fails. */
   private def writeIndex(binned: DataFrame, cents: Array[Array[Float]],
                          dir: String, label: String): Unit = {
     val spark = binned.sparkSession
@@ -1369,7 +1405,7 @@ object Similarity {
       () => cents.zipWithIndex.map { case (v, c) => (c, v) }.toSeq
         .toDF("cell", "centroid")
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids"),
-      () => writeCells(binned, cents.length, dir, "overwrite")))
+      () => writeCells(binned, dir, "overwrite")))
   }
 
   /**
@@ -1403,8 +1439,7 @@ object Similarity {
     val censusCols = cents.indices.map(c =>
       sum(when(col("cell") === c, 1L).otherwise(0L)).as(s"c$c"))
     writeCells(assignCells(delta, cents, idCol, vecCol)
-      .observe(obs, censusCols.head, censusCols.tail: _*),
-      cents.length, live, "append")
+      .observe(obs, censusCols.head, censusCols.tail: _*), live, "append")
     cents.indices.map(c => c -> obs.get(s"c$c").asInstanceOf[Long])
       .filter(_._2 > 0L).toMap
   }
@@ -1454,7 +1489,7 @@ object Similarity {
    * GC'd oldest-first; the legacy flat layout is never deleted.
    *
    * Scale shape: one ≤ numCells census aggregate, one bounded-sample
-   * k-means train, one assignment map pass + cell-slot write over
+   * k-means train, one assignment map pass + cell-rebalanced write over
    * the store — work ∝ store size, driver state ≤ numCells rows.
    * Returns true iff a rebuild happened.
    */
@@ -1487,8 +1522,9 @@ object Similarity {
     // likewise never reused.
     val gen = graft.core.Generations.claim(fs, root)
     val genDir = s"$dest/gen-$gen"
-    val store = graft.core.LineageCut.cut(
-      readVectors(spark, live).select(col("nn_id"), col("cvec")))
+    // read twice, by the sample scan and by the assign-and-write scan: a
+    // cut in between would hold a full copy of the store for one re-read
+    val store = readVectors(spark, live).select(col("nn_id"), col("cvec"))
     val cents = trainKMeans(store, numCells, iters, seed, trainSample,
       "nn_id", "cvec")
     // both writes complete, even when one fails, before the commit

@@ -21,6 +21,7 @@ import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.hash.Murmur3_x86_32
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
@@ -110,16 +111,34 @@ object EsSnapshotSink {
     math.max(1, math.min(spark.sparkContext.defaultParallelism,
       (shardCfg.perIndex.values.toSeq :+ shardCfg.defaultShards).max))
 
+  /** `keys(s)`: the smallest int k >= 0 that Spark's `HashPartitioning`
+    * over `n` partitions sends to partition `s` (`pmod(murmur3(k, 42), n)`).
+    * Spark hashes the clustering value, so clustering on the raw slot would
+    * pile slots onto the same partitions (at n = 4, slots 0-3 land on
+    * partitions 3, 3, 2, 3); clustering on `keys(slot)` lands slot s on
+    * partition s. */
+  def writerKeys(n: Int): Array[Int] = {
+    val keys = Array.fill(n)(-1)
+    var found = 0
+    var k = 0
+    while (found < n) {
+      val p = Math.floorMod(Murmur3_x86_32.hashInt(k, 42), n)
+      if (keys(p) < 0) { keys(p) = k; found += 1 }
+      k += 1
+    }
+    keys
+  }
+
   /** `docs` projected to the [[Schema]] columns plus the [[WriterKeyColumn]]
     * of `n` writer slots: an index's shards go round-robin over the slots,
     * from an offset its name sets, so every task gets an even share of
     * every index. The key depends on (index, shard) alone, so a shard is
     * written by exactly one task. */
   def writerInput(docs: DataFrame, n: Int): DataFrame = {
-    import org.apache.spark.sql.functions.{col, hash, lit, pmod}
+    import org.apache.spark.sql.functions.{col, hash, lit, pmod, typedLit}
     val slot = pmod(col("shard") + pmod(hash(col("index")), lit(n)), lit(n))
     docs.select(Schema.fieldNames.map(col).toSeq :+
-      graft.core.HashSlots.key(slot, n).as(WriterKeyColumn): _*)
+      typedLit(writerKeys(n).toSeq).getItem(slot).as(WriterKeyColumn): _*)
   }
 
   def shardConfig(options: Map[String, String]): ShardConfig = {

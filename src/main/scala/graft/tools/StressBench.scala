@@ -980,6 +980,38 @@ object StressBench {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dest))
     }
 
+    // the IVF store's partitioned writes on a SKEWED store with fewer
+    // cells than shuffle partitions: build 2 cells from a quarter of the
+    // corpus, append the other three quarters pulled to one point (so one
+    // cell takes the whole append), then rebuild
+    if (only.contains("ivfskew")) {
+      val n = 800000L
+      val cells = 2
+      val vecs = synthVecs(spark, n)
+      val dest = java.nio.file.Files.createTempDirectory("graft-ivfskew").toString
+      def filesPerCell(dir: String): String =
+        new java.io.File(s"$dir/vectors").listFiles()
+          .filter(_.getName.startsWith("cell=")).sortBy(_.getName)
+          .map(d => s"${d.getName}:${d.listFiles().count(_.getName.endsWith(".parquet"))}")
+          .mkString(" ")
+      val (buildSec, _) = time(Similarity.buildIvfIndex(
+        vecs.filter(col("vec_id") % 4 === 0), dest, numCells = cells))
+      val built = filesPerCell(dest)
+      val hot = vecs.filter(col("vec_id") % 4 =!= 0).withColumn("embedding",
+        expr("transform(embedding, x -> cast(0.4 + x / 100 as float))"))
+      val (appendSec, census) = time(Similarity.appendToIvfIndex(hot, dest))
+      val appended = filesPerCell(dest)
+      val (rebuildSec, _) = time(Similarity.rebuildIvfIndexIfSkewed(spark,
+        dest, skewThreshold = 1.0, numCells = cells))
+      val rebuilt = filesPerCell(graft.core.Generations.resolve(spark, dest))
+      println(f"[stress] ivf skew (n=$n, cells=$cells, shuffle partitions=" +
+        f"${spark.sessionState.conf.numShufflePartitions}): build ${buildSec}%5.1f s " +
+        f"[$built]; append ${appendSec}%5.1f s, census " +
+        f"${census.toSeq.sorted.mkString(",")} [$appended]; rebuild " +
+        f"${rebuildSec}%5.1f s [$rebuilt]")
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dest))
+    }
+
     // r14: full persisted-store LIFECYCLE re-price under the shared
     // graft.core.Generations layer — build / probe / append / probe /
     // rebuild / probe for BOTH stores at the XL tier: probe flatness

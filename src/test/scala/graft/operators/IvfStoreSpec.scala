@@ -10,8 +10,9 @@ import org.apache.spark.sql.graft.JobCounter
 import graft.SparkSpec
 
 /** The persisted IVF store's lifecycle cost: a deterministic one-stage
-  * Lloyd, one writer per cell slot, typed store reads, the probed-cell
-  * set riding the probe cut, and stores written in the older layout. */
+  * Lloyd, writes rebalanced on the cell, typed store reads, the
+  * probed-cell set riding the probe cut, and stores written in the older
+  * layout. */
 class IvfStoreSpec extends SparkSpec {
   import spark.implicits._
 
@@ -37,27 +38,17 @@ class IvfStoreSpec extends SparkSpec {
       .map(d => d.getName ->
         d.listFiles().count(f => f.getName.endsWith(".parquet"))).toMap
 
-  test("trainKMeans over a multi-partition sample is deterministic and " +
-      "folds the per-partition sums in partition order") {
-    val n = 3000
-    val k = 6
-    val iters = 4
-    val seed = 42L
-    val corpus = vecs(n)
-    val a = Similarity.trainKMeans(corpus, k, iters, seed)
-    val b = Similarity.trainKMeans(corpus, k, iters, seed)
-    assert(bits(a) === bits(b))
-
-    // the whole corpus is the sample (n < trainSample), ranked by
-    // (seeded hash, id) and laid out as parallelize slices it
+  /** Lloyd recomputed over `parts` parallelize slices of `corpus`, which
+    * is all sample (fewer rows than trainSample), ranked by (seeded hash,
+    * id): per-slice sums folded in slice order. */
+  private def refLloyd(corpus: DataFrame, parts: Int, k: Int, iters: Int,
+                       seed: Long): Array[Array[Float]] = {
     val sample = corpus.select("vec_id", "embedding")
       .as[(Long, Array[Float])].collect()
       .sortBy { case (id, _) =>
         (graft.core.EsMurmur3.hash(id.toString + seed).toLong, id) }
-    val sc = spark.sparkContext
-    val parts = math.min(sc.defaultParallelism, n / 1024 + 1)
-    assert(parts >= 2, "the sample must span several partitions")
-    val slices = sc.parallelize(sample.toSeq, parts).glom().collect()
+    val slices = spark.sparkContext.parallelize(sample.toSeq, parts).glom()
+      .collect()
     var cents = sample.take(k).map(_._2)
     for (_ <- 1 to iters) {
       val sums = Array.fill(k)(null: Array[Double])
@@ -81,33 +72,95 @@ class IvfStoreSpec extends SparkSpec {
         if (cnt(c) > 0) sums(c).map(s => (s / cnt(c)).toFloat) else cents(c)
       }.toArray
     }
-    assert(bits(a) === bits(cents))
+    cents
   }
 
-  test("build, append and rebuild write at most k files per cell dir, " +
-      "k = ceil(shufflePartitions / numCells)") {
-    val parts = spark.sessionState.conf.numShufflePartitions
-    val all = vecs(2000)
-    for (numCells <- Seq(2, 8)) withTempDir("graft-ivf-slots") { dir =>
-      val dest = dir.toString
-      val k = (parts + numCells - 1) / numCells
-      Similarity.buildIvfIndex(all.filter(col("vec_id") % 4 === 0), dest,
-        numCells = numCells)
-      val built = filesPerCell(s"$dest/vectors")
-      assert(built.nonEmpty && built.values.forall(_ <= k), built)
-      if (k > 1) assert(built.values.exists(_ == k), "sub-slots unused")
+  test("InOrderFold merges in index order and holds only early results") {
+    val fold = new InOrderFold[String]((a, b) => s"$a,$b")
+    val held = Seq(2, 0, 4, 3, 1).map { i => fold.add(i, s"r$i"); fold.held }
+    assert(held === Seq(1, 1, 2, 3, 0))
+    assert(fold.result === "r0,r1,r2,r3,r4")
+    val gap = new InOrderFold[String]((a, b) => s"$a,$b")
+    gap.add(1, "r1")
+    assert(intercept[IllegalArgumentException](gap.result).getMessage
+      .contains("result 0 has not arrived"))
+  }
 
-      Similarity.appendToIvfIndex(all.filter(col("vec_id") % 4 =!= 0), dest)
+  test("trainKMeans over a multi-partition sample is deterministic and " +
+      "folds the per-partition sums in partition order") {
+    val n = 3000
+    val corpus = vecs(n)
+    val a = Similarity.trainKMeans(corpus, 6, 4, 42L)
+    val b = Similarity.trainKMeans(corpus, 6, 4, 42L)
+    assert(bits(a) === bits(b))
+    val parts = math.min(spark.sparkContext.defaultParallelism, n / 1024 + 1)
+    assert(parts >= 2, "the sample must span several partitions")
+    assert(bits(a) === bits(refLloyd(corpus, parts, 6, 4, 42L)))
+  }
+
+  test("trainKMeans over a sample under 1024 rows runs one job, the " +
+      "sample scan, and folds it as one slice") {
+    val corpus = vecs(600).cache()
+    corpus.count()
+    val jc = new JobCounter(spark.sparkContext)
+    val cents = try {
+      val c = Similarity.trainKMeans(corpus, 5, 3, 42L)
+      assert(jc.jobNames.size === 1, jc.jobNames)
+      c
+    } finally jc.close()
+    assert(bits(cents) === bits(refLloyd(corpus, 1, 5, 3, 42L)))
+    corpus.unpersist(blocking = true)
+  }
+
+  test("build, append and rebuild each write one file per cell") {
+    val all = vecs(2000)
+    for (numCells <- Seq(2, 8)) withTempDir("graft-ivf-cells") { dir =>
+      val dest = dir.toString
+      // four input partitions: a plain partitionBy write would give each
+      // cell one file per input partition that holds it
+      Similarity.buildIvfIndex(all.filter(col("vec_id") % 4 === 0)
+        .repartition(4), dest, numCells = numCells)
+      val built = filesPerCell(s"$dest/vectors")
+      assert(built.nonEmpty && built.values.forall(_ == 1), built)
+
+      Similarity.appendToIvfIndex(all.filter(col("vec_id") % 4 =!= 0)
+        .repartition(4), dest)
       val appended = filesPerCell(s"$dest/vectors")
       assert(appended.forall { case (cell, m) =>
-        m - built.getOrElse(cell, 0) <= k }, appended)
+        m - built.getOrElse(cell, 0) <= 1 }, appended)
 
       assert(Similarity.rebuildIvfIndexIfSkewed(spark, dest,
         skewThreshold = 1.0, numCells = numCells))
       val live = Similarity.resolveIvfDir(spark, dest)
       val rebuilt = filesPerCell(s"$live/vectors")
-      assert(rebuilt.nonEmpty && rebuilt.values.forall(_ <= k), rebuilt)
+      assert(rebuilt.nonEmpty && rebuilt.values.forall(_ == 1), rebuilt)
       assert(spark.read.parquet(s"$live/vectors").count() === 2000L)
+    }
+  }
+
+  test("an append that lands in one hot cell is split over several writers") {
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val before = spark.conf.getOption(key)
+    withTempDir("graft-ivf-skew") { dir =>
+      val dest = dir.toString
+      Similarity.buildIvfIndex(vecs(400), dest, numCells = 4)
+      // 4000 copies of one vector under fresh ids: every row takes one cell
+      val hot = vecs(1).select("embedding").head().getSeq[Float](0).toArray
+      val delta = spark.range(1000000L, 1004000L, 1, 4).toDF("vec_id")
+        .withColumn("embedding", typedLit(hot))
+      spark.conf.set(key, "4096")
+      val census = try Similarity.appendToIvfIndex(delta, dest)
+        finally before match {
+          case Some(v) => spark.conf.set(key, v)
+          case None => spark.conf.unset(key)
+        }
+      assert(census.values.toSeq === Seq(4000L), census)
+      val cell = s"cell=${census.keys.head}"
+      val hotFiles = new File(s"$dest/vectors/$cell").listFiles()
+        .count(_.getName.endsWith(".parquet"))
+      // one file from the build, and more than one from the split append
+      assert(hotFiles >= 3, s"$cell holds $hotFiles files")
+      assert(spark.read.parquet(s"$dest/vectors").count() === 4400L)
     }
   }
 

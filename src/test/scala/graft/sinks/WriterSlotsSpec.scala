@@ -39,7 +39,7 @@ class WriterSlotsSpec extends SparkSpec {
 
   test("the key table sends slot s to partition s for every n in 1..64, as Spark hashes") {
     for (n <- 1 to 64) {
-      val keys = graft.core.HashSlots.keys(n)
+      val keys = EsSnapshotSink.writerKeys(n)
       assert(keys.length === n)
       def partition(k: Int): Int =
         HashPartitioning(Seq(Literal(k)), n).partitionIdExpression.eval(null).asInstanceOf[Int]

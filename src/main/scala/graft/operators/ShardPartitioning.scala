@@ -1,9 +1,7 @@
 package graft.operators
 
 import org.apache.spark.Partitioner
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
-
-import graft.core.IndexableDoc
+import org.apache.spark.sql.DataFrame
 
 /**
  * Exact shard→partition placement (SURVEY.md §2.3 X1; reference:
@@ -35,24 +33,8 @@ object ShardPartitioning {
   }
 
   /**
-   * Repartition so that output partition i contains exactly the rows with
-   * `shardCol` == i. Produces exactly `numShards` partitions (empty
-   * partitions preserved — the sink backfills empty shards, SURVEY.md A4).
-   */
-  def partitionByShard(df: DataFrame, shardCol: String, numShards: Int): DataFrame = {
-    val schema = df.schema
-    val idx = schema.fieldIndex(shardCol)
-    val partitioned = df.rdd
-      .map(r => (r.getInt(idx), r))
-      .partitionBy(new ShardPartitioner(numShards))
-      .values
-    df.sparkSession.createDataFrame(partitioned, schema)
-  }
-
-  /**
-   * Placement proof at histogram cost: routes rows through the SAME
-   * [[ShardPartitioner]] as [[partitionByShard]] but carries only the
-   * shard id — map-side combine collapses each input partition to
+   * Placement proof at histogram cost: routes rows through the
+   * [[ShardPartitioner]] but carries only the shard id — map-side combine collapses each input partition to
    * ≤ numShards (shard, count) pairs before the shuffle, so the proof
    * moves O(partitions·shards) rows instead of the full payload (the
    * full-envelope variant serialized every row to JSON first: ~50×
@@ -71,16 +53,5 @@ object ShardPartitioning {
         it.map { case (shard, n) => (shard, pid, n) }
       }
       .toDF("shard", "partition", "n")
-  }
-
-  /** Typed variant for the standard envelope. */
-  def partitionDocs(ds: Dataset[IndexableDoc], numShards: Int): Dataset[IndexableDoc] = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    val partitioned = ds.rdd
-      .map(d => (d.shard, d))
-      .partitionBy(new ShardPartitioner(numShards))
-      .values
-    spark.createDataset(partitioned)
   }
 }

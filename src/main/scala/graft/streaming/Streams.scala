@@ -2,9 +2,10 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 
 /**
  * Structured-streaming surface (design extension — the reference is pure
@@ -178,11 +179,107 @@ object Streams {
   }
 
   /**
+   * The one replay harness behind every parity drive: builds and starts
+   * `writer`'s query, feeds `steps` in order (one `processAllAvailable`
+   * after each), and stops the query. The replay runs at 4 shuffle
+   * partitions, because its cost is state-store rounds (shuffle
+   * partitions × micro-batches), not data volume; the scale path is the
+   * operator itself under the session's conf. One try/finally restores
+   * the session's `spark.sql.shuffle.partitions`, so a query that fails
+   * to build, start or run leaves the conf as it found it.
+   */
+  private def replay(spark: SparkSession, writer: => DataStreamWriter[_],
+                     steps: Seq[() => Unit]): Unit = {
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    try {
+      spark.conf.set(key, "4")
+      val q = writer.start()
+      try steps.foreach { feed => feed(); q.processAllAvailable() }
+      finally q.stop()
+    } finally spark.conf.set(key, saved)
+  }
+
+  private val replaySinks = new java.util.concurrent.atomic.AtomicLong
+
+  /** [[replay]] of `out` into a memory sink with a fresh name per call.
+    * Returns the sink's rows pinned eagerly (`localCheckpoint`: the sink
+    * is scratch, not pipeline state) and drops the sink's view, so no
+    * `graft_*_stream_out` view outlives the drive. */
+  private def replayRows(spark: SparkSession, out: => Dataset[_],
+                         steps: Seq[() => Unit]): DataFrame = {
+    val sink = s"graft_replay_${replaySinks.incrementAndGet()}_stream_out"
+    try {
+      replay(spark, out.writeStream.format("memory").queryName(sink)
+        .outputMode("append"), steps)
+      spark.table(sink).localCheckpoint(true)
+    } finally spark.catalog.dropTempView(sink)
+  }
+
+  /** [[replayRows]] of `query` over one MemoryStream fed `chunks`, one
+    * micro-batch each. */
+  private def replayChunks[T: Encoder](spark: SparkSession,
+                                       chunks: Seq[Seq[T]])(
+      query: Dataset[T] => Dataset[_]): DataFrame = {
+    val input = MemoryStream[T](implicitly[Encoder[T]], spark.sqlContext)
+    replayRows(spark, query(input.toDS()),
+      chunks.map(c => () => { input.addData(c); () }))
+  }
+
+  /** One row (n_stream, n_batch, n_matched): all three are equal iff the
+    * streamed and the batch rows agree on `cols` exactly. */
+  private def parityCounts(streamed: DataFrame, batch: DataFrame,
+                           cols: Seq[String]): DataFrame = {
+    def on(df: DataFrame) = df.select(cols.map(col): _*)
+    streamed.agg(count(lit(1)).as("n_stream"))
+      .crossJoin(batch.agg(count(lit(1)).as("n_batch")))
+      .crossJoin(on(streamed).join(on(batch), cols)
+        .agg(count(lit(1)).as("n_matched")))
+  }
+
+  /** A drive's bounded cohort, collected and (ts, event_id)-ordered. */
+  private def sortedCohort(events: Dataset[Event]): Array[Event] = {
+    val rows = events.collect().sortBy(e => (e.ts.getTime, e.event_id))
+    require(rows.nonEmpty, "parity drive needs a non-empty cohort")
+    rows
+  }
+
+  /** Split a ts-SORTED event array into ~`batches` chunks whose
+    * boundaries never divide an equal-ts run: after a chunk is fed, the
+    * watermark sits exactly on its max event time, and Spark's stateful
+    * late-row filter drops subsequent rows with ts <= wm — an equal-ts
+    * straggler in the next chunk would silently vanish. */
+  private def tsAlignedChunks(rows: Array[Event],
+                              batches: Int): Seq[Seq[Event]] = {
+    val target = math.max(1, (rows.length + batches - 1) / batches)
+    val out = scala.collection.mutable.ListBuffer.empty[Seq[Event]]
+    var cur = scala.collection.mutable.ArrayBuffer.empty[Event]
+    rows.foreach { e =>
+      if (cur.size >= target && cur.last.ts.getTime != e.ts.getTime) {
+        out += cur.toSeq
+        cur = scala.collection.mutable.ArrayBuffer.empty[Event]
+      }
+      cur += e
+    }
+    if (cur.nonEmpty) out += cur.toSeq
+    out.toSeq
+  }
+
+  /** The two-sentinel watermark flush: user -1 events 1 h and 2 h past
+    * `pastMs`. The first advances the watermark past every open tail;
+    * the second lets the event-time timeouts fire, because timeouts fire
+    * against the PREVIOUS batch's watermark. Drives filter user -1 out
+    * of the sink rows. */
+  private def flushSentinels(pastMs: Long): Seq[Seq[Event]] =
+    Seq(1L, 2L).map(i =>
+      Seq(Event(-i, new Timestamp(pastMs + i * 3600000L), -1L, "wm", 0.0)))
+
+  /**
    * Driver-facing parity drive for [[sessionizeStream]]: replays a bounded,
    * ts-ordered event cohort through a real MemoryStream in multiple
-   * micro-batches (plus sentinel batches that push the watermark so every
-   * session flushes via state timeout), then compares the streamed sessions
-   * row-for-row with the batch [[sessionize]] result. Returns ONE row
+   * micro-batches (plus [[flushSentinels]], so every session flushes via
+   * state timeout), then compares the streamed sessions row-for-row with
+   * the batch [[sessionize]] result. Returns ONE row
    * (n_stream, n_batch, n_matched) — all three equal the gaps-and-islands
    * session count iff streaming and batch semantics agree exactly.
    *
@@ -193,48 +290,14 @@ object Streams {
   def sessionizeStreamParity(spark: SparkSession, events: Dataset[Event],
                              gapMs: Long, batches: Int = 2): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-
     val rows = events.collect().sortBy(_.ts.getTime)
     require(rows.nonEmpty, "parity drive needs a non-empty cohort")
-    val maxTs = rows.last.ts.getTime
-    val input = MemoryStream[Event]
-    val sessions = sessionizeStream(input.toDS(), gapMs)
-    val sinkName = "graft_sessionize_stream_out"
-    spark.catalog.dropTempView(sinkName)
-    // the replay's cost is state-store rounds (shuffle partitions × micro-
-    // batches), not data volume — pin the scratch stream to few partitions
-    // (the SCALE path is sessionizeStream itself under the session's conf)
-    val savedParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    val q = sessions.writeStream.format("memory").queryName(sinkName)
-      .outputMode("append").start()
-    try {
-      // ts-ordered chunks: watermark only moves forward, nothing arrives late
-      val chunk = math.max(1, (rows.length + batches - 1) / batches)
-      rows.grouped(chunk).foreach { g =>
-        input.addData(g.toSeq); q.processAllAvailable()
-      }
-      // sentinel user (-1) advances the watermark past every open session's
-      // end + gap; two batches because timeouts fire against the PREVIOUS
-      // batch's watermark
-      input.addData(Event(-1L, new Timestamp(maxTs + gapMs + 3600000L), -1L, "wm", 0.0))
-      q.processAllAvailable()
-      input.addData(Event(-2L, new Timestamp(maxTs + gapMs + 7200000L), -1L, "wm", 0.0))
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-      spark.conf.set("spark.sql.shuffle.partitions", savedParts)
-    }
-
-    val streamed = spark.table(sinkName).filter(col("user_id") >= 0)
-      .localCheckpoint(true) // pin: the memory sink view is mutable scratch
-    val batch = sessionize(events, gapMs).toDF()
-    val cols = Seq("user_id", "start", "end", "n_events", "total_value")
-    streamed.agg(count(lit(1)).as("n_stream"))
-      .crossJoin(batch.agg(count(lit(1)).as("n_batch")))
-      .crossJoin(streamed.join(batch, cols).agg(count(lit(1)).as("n_matched")))
+    val streamed = replayChunks(spark, tsAlignedChunks(rows, batches) ++
+        flushSentinels(rows.last.ts.getTime + gapMs))(
+        sessionizeStream(_, gapMs))
+      .filter(col("user_id") >= 0)
+    parityCounts(streamed, sessionize(events, gapMs).toDF(),
+      Seq("user_id", "start", "end", "n_events", "total_value"))
   }
 
   final case class Transition(user_id: Long, from_type: String,
@@ -325,27 +388,6 @@ object Streams {
       }
   }
 
-  /** Split a ts-SORTED event array into ~`batches` chunks whose
-    * boundaries never divide an equal-ts run: after a chunk is fed, the
-    * watermark sits exactly on its max event time, and Spark's stateful
-    * late-row filter drops subsequent rows with ts <= wm — an equal-ts
-    * straggler in the next chunk would silently vanish. */
-  private def tsAlignedChunks(rows: Array[Event],
-                              batches: Int): Seq[Seq[Event]] = {
-    val target = math.max(1, (rows.length + batches - 1) / batches)
-    val out = scala.collection.mutable.ListBuffer.empty[Seq[Event]]
-    var cur = scala.collection.mutable.ArrayBuffer.empty[Event]
-    rows.foreach { e =>
-      if (cur.size >= target && cur.last.ts.getTime != e.ts.getTime) {
-        out += cur.toSeq
-        cur = scala.collection.mutable.ArrayBuffer.empty[Event]
-      }
-      cur += e
-    }
-    if (cur.nonEmpty) out += cur.toSeq
-    out.toSeq
-  }
-
   /**
    * Driver-facing parity drive for [[transitionsStream]]: replays a
    * bounded ts-ordered cohort through a real MemoryStream in multiple
@@ -360,59 +402,24 @@ object Streams {
   def transitionsStreamParity(spark: SparkSession, events: Dataset[Event],
                               batches: Int = 3): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-
-    val rows = events.collect().sortBy(e => (e.ts.getTime, e.event_id))
-    require(rows.nonEmpty, "parity drive needs a non-empty cohort")
+    val rows = sortedCohort(events)
     val maxTs = rows.last.ts.getTime
-    val input = MemoryStream[Event]
     // the drive asserts FULL batch parity over its replay, so the state
     // TTL must cover the cohort's whole event-time span: a user idle
     // longer than the TTL mid-replay would have their tail evicted and
     // the cross-gap adjacency forfeited (correct production behavior,
     // but the batch transitionMatrix it is compared against counts it)
-    val spanMs = maxTs - rows.head.ts.getTime
-    val trans = transitionsStream(input.toDS(),
-      stateTtlMs = spanMs + 60 * 60 * 1000L)
-    val sinkName = "graft_transitions_stream_out"
-    spark.catalog.dropTempView(sinkName)
-    val savedParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    val q = trans.writeStream.format("memory").queryName(sinkName)
-      .outputMode("append").start()
-    try {
-      // never split an equal-ts run across micro-batches: the watermark
-      // lands exactly ON the boundary ts and Spark's stateful late-row
-      // filter drops ts <= wm — the event would silently vanish and the
-      // parity gate would blame the operator
-      tsAlignedChunks(rows, batches).foreach { g =>
-        input.addData(g); q.processAllAvailable()
-      }
-      // two sentinel batches: the first advances the watermark past every
-      // tail, the second lets the timeouts fire against it
-      input.addData(Event(-1L, new Timestamp(maxTs + 3600000L), -1L, "wm", 0.0))
-      q.processAllAvailable()
-      input.addData(Event(-2L, new Timestamp(maxTs + 7200000L), -1L, "wm", 0.0))
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-      spark.conf.set("spark.sql.shuffle.partitions", savedParts)
-    }
-
-    val streamed = spark.table(sinkName).filter(col("user_id") >= 0)
+    val ttlMs = maxTs - rows.head.ts.getTime + 60 * 60 * 1000L
+    val streamed = replayChunks(spark,
+        tsAlignedChunks(rows, batches) ++ flushSentinels(maxTs))(
+        transitionsStream(_, stateTtlMs = ttlMs))
+      .filter(col("user_id") >= 0)
       .groupBy(col("from_type"), col("to_type"))
       .agg(count(lit(1)).as("transitions"))
-      .localCheckpoint(true) // pin: the memory sink view is mutable scratch
     val batch = graft.operators.Events.transitionMatrix(
         events.toDF().withColumn("ts", unix_millis(col("ts")) * lit(1000000L)),
         "user_id", "event_type", "ts", "event_id")
-      .select("from_type", "to_type", "transitions")
-    streamed.agg(count(lit(1)).as("n_stream"))
-      .crossJoin(batch.agg(count(lit(1)).as("n_batch")))
-      .crossJoin(streamed.join(batch,
-        Seq("from_type", "to_type", "transitions"))
-        .agg(count(lit(1)).as("n_matched")))
+    parityCounts(streamed, batch, Seq("from_type", "to_type", "transitions"))
   }
 
   // public only because Spark's product-encoder derivation reflects on
@@ -654,8 +661,8 @@ object Streams {
 
   /**
    * Driver-facing parity drive for [[ewmaStream]]: replays a bounded
-   * cohort through a MemoryStream in ts-aligned micro-batches (+ one
-   * watermark sentinel — EWMA finality needs no post window, so one
+   * cohort through a MemoryStream in ts-aligned micro-batches (+
+   * [[flushSentinels]]: EWMA finality needs no post window, so the
    * advance past maxTs closes everything), then compares every
    * smoothed value with batch
    * [[graft.operators.TimeSeries.ewmaSmooth]] over the same
@@ -664,53 +671,25 @@ object Streams {
   def ewmaStreamParity(spark: SparkSession, events: Dataset[Event],
                        lookback: Int = 8, batches: Int = 3): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-
-    val rows = events.collect().sortBy(e => (e.ts.getTime, e.event_id))
-    require(rows.nonEmpty, "parity drive needs a non-empty cohort")
+    val rows = sortedCohort(events)
     val maxTs = rows.last.ts.getTime
-    val input = MemoryStream[Event]
-    val spanMs = maxTs - rows.head.ts.getTime
-    val sm = ewmaStream(input.toDS(), lookback,
-      stateTtlMs = spanMs + 60 * 60 * 1000L)
-    val sinkName = "graft_ewma_stream_out"
-    spark.catalog.dropTempView(sinkName)
-    val savedParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    val q = sm.writeStream.format("memory").queryName(sinkName)
-      .outputMode("append").start()
-    try {
-      tsAlignedChunks(rows, batches).foreach { g =>
-        input.addData(g); q.processAllAvailable()
-      }
-      input.addData(Event(-1L, new Timestamp(maxTs + 3600000L), -1L, "wm", 0.0))
-      q.processAllAvailable()
-      input.addData(Event(-2L, new Timestamp(maxTs + 7200000L), -1L, "wm", 0.0))
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-      spark.conf.set("spark.sql.shuffle.partitions", savedParts)
-    }
-
-    val streamed = spark.table(sinkName).filter(col("user_id") >= 0)
+    val ttlMs = maxTs - rows.head.ts.getTime + 60 * 60 * 1000L
+    val streamed = replayChunks(spark,
+        tsAlignedChunks(rows, batches) ++ flushSentinels(maxTs))(
+        ewmaStream(_, lookback, stateTtlMs = ttlMs))
+      .filter(col("user_id") >= 0)
       .select(col("user_id").as("key"), unix_millis(col("ts")).as("ts"),
         col("event_id").as("id"), col("ewma"))
-      .localCheckpoint(true) // pin: the memory sink view is mutable scratch
     val batch = graft.operators.TimeSeries.ewmaSmooth(
         events.toDF().withColumn("ts", unix_millis(col("ts"))),
         "user_id", "ts", "event_id", "value", lookback)
-      .select(col("key"), col("ts"), col("id"), col("ewma"))
-    val cols = Seq("key", "ts", "id", "ewma")
-    streamed.agg(count(lit(1)).as("n_stream"))
-      .crossJoin(batch.agg(count(lit(1)).as("n_batch")))
-      .crossJoin(streamed.join(batch, cols).agg(count(lit(1)).as("n_matched")))
+    parityCounts(streamed, batch, Seq("key", "ts", "id", "ewma"))
   }
 
   /**
    * Driver-facing parity drive for [[changepointsStream]]: replays a
    * bounded cohort through a MemoryStream in ts-aligned micro-batches
-   * (+ watermark sentinels that flush complete tails), then compares
+   * (+ [[flushSentinels]] that flush complete tails), then compares
    * the streamed flags with batch
    * [[graft.operators.TimeSeries.meanShiftChangepoints]] over the same
    * millisecond-precision frame on ALL six columns — key, ts, id, and
@@ -722,51 +701,26 @@ object Streams {
                                unitScale: Long = 100L,
                                batches: Int = 3): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-
-    val rows = events.collect().sortBy(e => (e.ts.getTime, e.event_id))
-    require(rows.nonEmpty, "parity drive needs a non-empty cohort")
+    val rows = sortedCohort(events)
     val maxTs = rows.last.ts.getTime
-    val input = MemoryStream[Event]
     // full batch parity over the replay needs the TTL past the span:
     // a ≥-TTL gap inside the cohort would (correctly) split the series
     // streaming-side while the batch operator flags across it
-    val spanMs = maxTs - rows.head.ts.getTime
-    val cps = changepointsStream(input.toDS(), window, minShiftUnits,
-      unitScale, stateTtlMs = spanMs + 60 * 60 * 1000L)
-    val sinkName = "graft_changepoints_stream_out"
-    spark.catalog.dropTempView(sinkName)
-    val savedParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    val q = cps.writeStream.format("memory").queryName(sinkName)
-      .outputMode("append").start()
-    try {
-      tsAlignedChunks(rows, batches).foreach { g =>
-        input.addData(g); q.processAllAvailable()
-      }
-      input.addData(Event(-1L, new Timestamp(maxTs + 3600000L), -1L, "wm", 0.0))
-      q.processAllAvailable()
-      input.addData(Event(-2L, new Timestamp(maxTs + 7200000L), -1L, "wm", 0.0))
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-      spark.conf.set("spark.sql.shuffle.partitions", savedParts)
-    }
-
-    val streamed = spark.table(sinkName).filter(col("user_id") >= 0)
+    val ttlMs = maxTs - rows.head.ts.getTime + 60 * 60 * 1000L
+    val streamed = replayChunks(spark,
+        tsAlignedChunks(rows, batches) ++ flushSentinels(maxTs))(
+        changepointsStream(_, window, minShiftUnits, unitScale,
+          stateTtlMs = ttlMs))
+      .filter(col("user_id") >= 0)
       .select(col("user_id").as("key"), unix_millis(col("ts")).as("ts"),
         col("event_id").as("id"), col("before_mean"), col("after_mean"),
         col("shift"))
-      .localCheckpoint(true) // pin: the memory sink view is mutable scratch
     val batch = graft.operators.TimeSeries.meanShiftChangepoints(
       events.toDF().withColumn("ts", unix_millis(col("ts"))),
       "user_id", "ts", "event_id", "value", window, minShiftUnits,
       unitScale)
-    val cols = Seq("key", "ts", "id", "before_mean", "after_mean", "shift")
-    streamed.agg(count(lit(1)).as("n_stream"))
-      .crossJoin(batch.agg(count(lit(1)).as("n_batch")))
-      .crossJoin(streamed.join(batch, cols).agg(count(lit(1)).as("n_matched")))
+    parityCounts(streamed, batch,
+      Seq("key", "ts", "id", "before_mean", "after_mean", "shift"))
   }
 
   /**
@@ -779,9 +733,6 @@ object Streams {
   def nearDupStreamParity(spark: SparkSession, docs: DataFrame,
                           idCol: String, textCol: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-
     val originals = docs
       .select(col(idCol).cast("long").as("doc_id"), col(textCol).as("text"))
       .as[(Long, String)].collect().sortBy(_._1)
@@ -794,37 +745,18 @@ object Streams {
         DocEvent(id + 1000000L,
           new Timestamp(base + (originals.length + i) * 1000L), text)
     }
-
-    val input = MemoryStream[DocEvent]
     // the drive asserts FULL recall over its replay, so the state TTL
     // must cover the whole synthetic timeline: at 1 s spacing a 5 000-doc
     // corpus spans 83 min and the operator's default 1 h TTL (correct
     // production behavior — old docs age out of the dedup window) was
     // silently evicting early originals before their plants arrived
     val spanMs = (originals.length + plantEvents.length + 2) * 1000L
-    val verdicts = nearDupVerdicts(input.toDS(),
-      stateTtlMs = spanMs + 60 * 60 * 1000L)
-    val sinkName = "graft_neardup_stream_out"
-    spark.catalog.dropTempView(sinkName)
-    // see sessionizeStreamParity: pin the scratch stream's state rounds
-    val savedParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    val q = verdicts.writeStream.format("memory").queryName(sinkName)
-      .outputMode("append").start()
-    try {
-      input.addData(origEvents.toSeq); q.processAllAvailable()
-      input.addData(plantEvents.toSeq); q.processAllAvailable()
-    } finally {
-      q.stop()
-      spark.conf.set("spark.sql.shuffle.partitions", savedParts)
-    }
-
-    spark.table(sinkName)
+    replayChunks(spark, Seq(origEvents.toSeq, plantEvents.toSeq))(
+        nearDupVerdicts(_, stateTtlMs = spanMs + 60 * 60 * 1000L))
       .select(least(col("doc_id"), col("dup_of")).as("id_a"),
         greatest(col("doc_id"), col("dup_of")).as("id_b"))
       .filter(col("id_b") === col("id_a") + 1000000L)
       .distinct()
-      .localCheckpoint(true) // pin: the memory sink view is mutable scratch
   }
 
   /**
@@ -1103,55 +1035,32 @@ object Streams {
                                beforeMs: Long, afterMs: Long,
                                batches: Int = 2): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-
     val lRows = leftB.collect().sortBy(_.ts.getTime)
     val rRows = rightB.collect().sortBy(_.ts.getTime)
+    val batch = intervalJoinStream(leftB, rightB, beforeMs, afterMs)
     // an empty side makes the inner join empty by definition — report the
     // agreeing zeros rather than crashing the whole verify/bench driver
     // on a data-dependent cohort (no stream needs to run to prove it)
-    if (lRows.isEmpty || rRows.isEmpty)
-      return spark.range(1).select(lit(0L).as("n_stream"),
-        lit(0L).as("n_batch"), lit(0L).as("n_matched"))
-    val delay = s"${beforeMs + afterMs + 3600000L} milliseconds"
-    val lIn = MemoryStream[Event]
-    val rIn = MemoryStream[Event]
-    val joined = intervalJoinStream(lIn.toDS(), rIn.toDS(),
-      beforeMs, afterMs, watermarkDelay = delay)
-    val sinkName = "graft_interval_join_stream_out"
-    spark.catalog.dropTempView(sinkName)
-    // see sessionizeStreamParity: pin the scratch stream's state rounds
-    val savedParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    val q = joined.writeStream.format("memory").queryName(sinkName)
-      .outputMode("append").start()
-    try {
+    val streamed = if (lRows.isEmpty || rRows.isEmpty) batch else {
+      val delay = s"${beforeMs + afterMs + 3600000L} milliseconds"
+      val lIn = MemoryStream[Event](implicitly[Encoder[Event]], spark.sqlContext)
+      val rIn = MemoryStream[Event](implicitly[Encoder[Event]], spark.sqlContext)
       // time-aligned chunks: both sides advance together, so the (stretched)
       // watermark always trails every unmatched row's window
-      val lChunk = math.max(1, (lRows.length + batches - 1) / batches)
-      val rChunk = math.max(1, (rRows.length + batches - 1) / batches)
-      val lChunks = lRows.grouped(lChunk).map(_.toSeq).toList
-      val rChunks = rRows.grouped(rChunk).map(_.toSeq).toList
-      lChunks.zipAll(rChunks, Seq.empty[Event], Seq.empty[Event]).foreach {
-        case (lg, rg) =>
+      def chunks(rows: Array[Event]) =
+        rows.grouped(math.max(1, (rows.length + batches - 1) / batches))
+          .map(_.toSeq).toList
+      val steps = chunks(lRows).zipAll(chunks(rRows), Nil, Nil).map {
+        case (lg, rg) => () => {
           if (lg.nonEmpty) lIn.addData(lg)
           if (rg.nonEmpty) rIn.addData(rg)
-          q.processAllAvailable()
+          ()
+        }
       }
-    } finally {
-      q.stop()
-      spark.conf.set("spark.sql.shuffle.partitions", savedParts)
+      replayRows(spark, intervalJoinStream(lIn.toDS(), rIn.toDS(),
+        beforeMs, afterMs, watermarkDelay = delay), steps)
     }
-
-    val streamed = spark.table(sinkName).localCheckpoint(true)
-    val batch = intervalJoinStream(leftB, rightB, beforeMs, afterMs)
-    val cols = Seq("l_id", "r_id")
-    streamed.agg(count(lit(1)).as("n_stream"))
-      .crossJoin(batch.agg(count(lit(1)).as("n_batch")))
-      .crossJoin(streamed.select(cols.map(col): _*)
-        .join(batch.select(cols.map(col): _*), cols)
-        .agg(count(lit(1)).as("n_matched")))
+    parityCounts(streamed, batch, Seq("l_id", "r_id"))
   }
 
   /**
@@ -1192,9 +1101,6 @@ object Streams {
                                  idCol: String, textCol: String,
                                  maxPpl: Double): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-
     val model = graft.operators.LangModel.trainBigramLM(docs, textCol)
       .localCheckpoint(true)
     val rows = docs
@@ -1207,23 +1113,15 @@ object Streams {
     val (first, second) = events.splitAt(events.length / 2)
 
     val keptIds = new scala.collection.mutable.ArrayBuffer[Long]
-    val input = MemoryStream[DocEvent]
-    val savedParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    val q = perplexityGateStream(
+    val input = MemoryStream[DocEvent](implicitly[Encoder[DocEvent]],
+      spark.sqlContext)
+    replay(spark, perplexityGateStream(
         input.toDS().select(col("doc_id"), col("text")),
         model, "doc_id", "text", maxPpl) { kept =>
       keptIds.synchronized {
         keptIds ++= kept.select(col("doc_id").cast("long")).as[Long].collect()
       }
-    }.start()
-    try {
-      input.addData(first.toSeq); q.processAllAvailable()
-      input.addData(second.toSeq); q.processAllAvailable()
-    } finally {
-      q.stop()
-      spark.conf.set("spark.sql.shuffle.partitions", savedParts)
-    }
+    }, Seq(first, second).map(c => () => { input.addData(c.toSeq); () }))
     keptIds.toSeq.toDF("doc_id")
   }
 
@@ -1334,36 +1232,15 @@ object Streams {
   def heavyHittersStreamParity(spark: SparkSession, keys: DataFrame,
                                keyCol: String, threshold: Long): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-
     val rows = keys.select(col(keyCol).cast("long")).as[Long].collect()
     val base = 1700000000000L
     val events = rows.zipWithIndex.map { case (k, i) =>
       KeyEvent(k, new Timestamp(base + i * 10L))
     }
     val third = math.max(events.length / 3, 1)
-    val batches = events.grouped(third).toSeq
-
-    val got = new scala.collection.mutable.ArrayBuffer[(Long, Long)]
-    val input = MemoryStream[KeyEvent]
-    val savedParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    val q = heavyHittersStream(input.toDS(), threshold)
-      .writeStream.outputMode("append").foreachBatch {
-        (batch: Dataset[HeavyEmit], _: Long) =>
-          got.synchronized {
-            got ++= batch.collect().map(e => (e.key, e.guaranteed_count))
-          }
-          () // foreachBatch needs Unit, not the appended buffer
-      }.start()
-    try {
-      batches.foreach { b => input.addData(b.toSeq); q.processAllAvailable() }
-    } finally {
-      q.stop()
-      spark.conf.set("spark.sql.shuffle.partitions", savedParts)
-    }
-    got.toSeq.toDF("key", "crossing_count")
+    replayChunks(spark, events.grouped(third).map(_.toSeq).toSeq)(
+        heavyHittersStream(_, threshold))
+      .select(col("key"), col("guaranteed_count").as("crossing_count"))
   }
 
   /**
@@ -1442,45 +1319,20 @@ object Streams {
                         windowMs: Long = 3600000L,
                         batches: Int = 3): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     require(windowMs >= 1000L, s"windowMs must be >= 1000: $windowMs")
     val windowDur = s"$windowMs milliseconds"
-    val rows = events.collect().sortBy(e => (e.ts.getTime, e.event_id))
-    require(rows.nonEmpty, "parity drive needs a non-empty cohort")
-    val maxTs = rows.last.ts.getTime
-    val input = MemoryStream[Event]
-    val sm = driftStream(input.toDS(), reference, windowDur)
-    val sinkName = "graft_drift_stream_out"
-    spark.catalog.dropTempView(sinkName)
-    val savedParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    val q = sm.writeStream.format("memory").queryName(sinkName)
-      .outputMode("append").start()
-    try {
-      tsAlignedChunks(rows, batches).foreach { g =>
-        input.addData(g); q.processAllAvailable()
-      }
-      // the sentinel sits 1 ms past a far-future window BOUNDARY, so
-      // it closes every real window while its OWN window's end stays
-      // strictly ahead of the watermark — the sentinel never emits,
-      // and the sink holds exactly the real windows
-      val sentinelTs =
-        (maxTs / windowMs + 1000L) * windowMs + 1L
-      input.addData(Event(-1L, new Timestamp(sentinelTs), -1L, "wm", 0.0))
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-      spark.conf.set("spark.sql.shuffle.partitions", savedParts)
-    }
-    val streamed = spark.table(sinkName)
-      .localCheckpoint(true) // pin: the memory sink view is mutable scratch
-    val batch = driftAgg(events.toDF(), reference, windowDur)
-    val cols = Seq("window_start", "n", "js")
-    streamed.agg(count(lit(1)).as("n_stream"))
-      .crossJoin(batch.agg(count(lit(1)).as("n_batch")))
-      .crossJoin(streamed.join(batch, cols)
-        .agg(count(lit(1)).as("n_matched")))
+    val rows = sortedCohort(events)
+    // the sentinel sits 1 ms past a far-future window BOUNDARY, so
+    // it closes every real window while its OWN window's end stays
+    // strictly ahead of the watermark — the sentinel never emits,
+    // and the sink holds exactly the real windows
+    val sentinelTs = (rows.last.ts.getTime / windowMs + 1000L) * windowMs + 1L
+    val sentinel = Event(-1L, new Timestamp(sentinelTs), -1L, "wm", 0.0)
+    val streamed = replayChunks(spark,
+        tsAlignedChunks(rows, batches) :+ Seq(sentinel))(
+        driftStream(_, reference, windowDur))
+    parityCounts(streamed, driftAgg(events.toDF(), reference, windowDur),
+      Seq("window_start", "n", "js"))
   }
 
   final case class CusumState(sPos: Long, sNeg: Long)
@@ -1557,41 +1409,16 @@ object Streams {
                         unitScale: Long = 100L,
                         batches: Int = 3): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val rows = events.collect().sortBy(e => (e.ts.getTime, e.event_id))
-    require(rows.nonEmpty, "parity drive needs a non-empty cohort")
+    val rows = sortedCohort(events)
     require(rows.map(_.event_type).distinct.length == 1,
       "parity cohort must carry ONE event type (single-key recursion)")
-    val input = MemoryStream[Event]
-    val sm = cusumStream(input.toDS(), target, slack, threshold, unitScale)
-    val sinkName = "graft_cusum_stream_out"
-    spark.catalog.dropTempView(sinkName)
-    val savedParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    val q = sm.writeStream.format("memory").queryName(sinkName)
-      .outputMode("append").start()
-    try {
-      tsAlignedChunks(rows, batches).foreach { g =>
-        input.addData(g); q.processAllAvailable()
-      }
-    } finally {
-      q.stop()
-      spark.conf.set("spark.sql.shuffle.partitions", savedParts)
-    }
-    val streamed = spark.table(sinkName)
-      .localCheckpoint(true) // pin: the memory sink view is mutable scratch
-      .select(col("event_id"), col("s_pos"), col("s_neg"), col("alarm"))
+    val streamed = replayChunks(spark, tsAlignedChunks(rows, batches))(
+      cusumStream(_, target, slack, threshold, unitScale))
     val batch = graft.operators.TimeSeries.cusumDetect(
       events.toDF().withColumn("ts_ms", unix_millis(col("ts"))),
       "ts_ms", "event_id", "value", target, slack, threshold, unitScale)
-      .select(col("id").as("event_id"), col("s_pos"), col("s_neg"),
-        col("alarm"))
-    val cols = Seq("event_id", "s_pos", "s_neg", "alarm")
-    streamed.agg(count(lit(1)).as("n_stream"))
-      .crossJoin(batch.agg(count(lit(1)).as("n_batch")))
-      .crossJoin(streamed.join(batch, cols)
-        .agg(count(lit(1)).as("n_matched")))
+      .withColumnRenamed("id", "event_id")
+    parityCounts(streamed, batch, Seq("event_id", "s_pos", "s_neg", "alarm"))
   }
 
   final case class MsprtState(nT: Long, s1T: Long, s2T: Long,
@@ -1750,30 +1577,11 @@ object Streams {
                         alpha: Double = 0.05,
                         unitScale: Long = 100L): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val rows = events.collect().sortBy(e => (e.ts.getTime, e.event_id))
-    require(rows.nonEmpty, "parity drive needs a non-empty cohort")
     val dayMs = 86400000L
-    val byLook = rows.groupBy(_.ts.getTime / dayMs).toSeq.sortBy(_._1)
-    val input = MemoryStream[Event]
-    val sm = msprtStream(input.toDS(), treatArm, tau2, alpha, unitScale)
-    val sinkName = "graft_msprt_stream_out"
-    spark.catalog.dropTempView(sinkName)
-    val savedParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    val q = sm.writeStream.format("memory").queryName(sinkName)
-      .outputMode("append").start()
-    try {
-      byLook.foreach { case (_, g) =>
-        input.addData(g.toSeq); q.processAllAvailable()
-      }
-    } finally {
-      q.stop()
-      spark.conf.set("spark.sql.shuffle.partitions", savedParts)
-    }
-    val streamed = spark.table(sinkName)
-      .localCheckpoint(true) // pin: the memory sink view is mutable scratch
+    val byLook = sortedCohort(events).groupBy(_.ts.getTime / dayMs)
+      .toSeq.sortBy(_._1).map(_._2.toSeq)
+    val streamed = replayChunks(spark, byLook)(
+      msprtStream(_, treatArm, tau2, alpha, unitScale))
     val batchRaw = graft.operators.Profiling.sequentialMSPRT(
       events.toDF()
         .withColumn("ts_ms", unix_millis(col("ts")))
@@ -1783,14 +1591,9 @@ object Streams {
     // the batch carries the day value — rank the batch looks ascending
     val w = org.apache.spark.sql.expressions.Window.orderBy("look")
     val batch = batchRaw
-      .withColumn("idx", row_number().over(w).cast("long"))
-      .select(col("idx").as("look"), col("n_t"), col("n_c"),
-        col("diff"), col("p_always"), col("lo"), col("hi"))
-    val cols = Seq("look", "n_t", "n_c", "diff", "p_always", "lo", "hi")
-    streamed.agg(count(lit(1)).as("n_stream"))
-      .crossJoin(batch.agg(count(lit(1)).as("n_batch")))
-      .crossJoin(streamed.join(batch, cols)
-        .agg(count(lit(1)).as("n_matched")))
+      .withColumn("look", row_number().over(w).cast("long"))
+    parityCounts(streamed, batch,
+      Seq("look", "n_t", "n_c", "diff", "p_always", "lo", "hi"))
   }
 
   /**
@@ -1888,45 +1691,21 @@ object Streams {
                       windowMs: Long = 3600000L,
                       batches: Int = 3): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     require(windowMs >= 1000L, s"windowMs must be >= 1000: $windowMs")
     val windowDur = s"$windowMs milliseconds"
-    val rows = events.collect().sortBy(e => (e.ts.getTime, e.event_id))
-    require(rows.nonEmpty, "parity drive needs a non-empty cohort")
-    val maxTs = rows.last.ts.getTime
-    val input = MemoryStream[Event]
-    val sm = srmStream(input.toDS(), expectedShares, windowDur)
-    val sinkName = "graft_srm_stream_out"
-    spark.catalog.dropTempView(sinkName)
-    val savedParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    val q = sm.writeStream.format("memory").queryName(sinkName)
-      .outputMode("append").start()
-    try {
-      tsAlignedChunks(rows, batches).foreach { g =>
-        input.addData(g); q.processAllAvailable()
-      }
-      // the driftStreamParity sentinel, carrying a DESIGNED arm: its
-      // own window stays open (never emits, so it never pollutes the
-      // χ² rows) while its watermark closes every real window
-      val sentinelTs = (maxTs / windowMs + 1000L) * windowMs + 1L
-      input.addData(Event(-1L, new Timestamp(sentinelTs), -1L,
-        expectedShares.keys.toSeq.min, 0.0))
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-      spark.conf.set("spark.sql.shuffle.partitions", savedParts)
-    }
-    val streamed = spark.table(sinkName)
-      .localCheckpoint(true) // pin: the memory sink view is mutable scratch
+    val rows = sortedCohort(events)
+    // the driftStreamParity sentinel, carrying a DESIGNED arm: its
+    // own window stays open (never emits, so it never pollutes the
+    // χ² rows) while its watermark closes every real window
+    val sentinelTs = (rows.last.ts.getTime / windowMs + 1000L) * windowMs + 1L
+    val sentinel = Event(-1L, new Timestamp(sentinelTs), -1L,
+      expectedShares.keys.toSeq.min, 0.0)
+    val streamed = replayChunks(spark,
+        tsAlignedChunks(rows, batches) :+ Seq(sentinel))(
+        srmStream(_, expectedShares, windowDur))
     val shares = expectedShares.toSeq.sorted
       .map { case (g, s) => (g, math.round(s * 1000000L)) }
-    val batch = srmAgg(events.toDF(), shares, windowDur)
-    val cols = Seq("window_start", "n", "k", "df1", "chi2")
-    streamed.agg(count(lit(1)).as("n_stream"))
-      .crossJoin(batch.agg(count(lit(1)).as("n_batch")))
-      .crossJoin(streamed.join(batch, cols)
-        .agg(count(lit(1)).as("n_matched")))
+    parityCounts(streamed, srmAgg(events.toDF(), shares, windowDur),
+      Seq("window_start", "n", "k", "df1", "chi2"))
   }
 }

@@ -731,9 +731,10 @@ class StreamsSpec extends SparkSpec {
     val got = Streams.srmStreamParity(spark, (w1 ++ w2).toDS(), design,
       windowMs = 60000L, batches = 2).as[(Long, Long, Long)].head()
     assert(got === ((2L, 2L, 2L)))
-    // the drive leaves the memory sink in place: assert the streamed
-    // chi2 values against the hand arithmetic
-    val streamed = spark.table("graft_srm_stream_out")
+    // (2, 2, 2) means every streamed row equals a batch-replica row on
+    // all five columns, so the hand arithmetic is asserted on the replica
+    val streamed = Streams.srmStream((w1 ++ w2).toDS(), design,
+        "60000 milliseconds")
       .select("window_start", "n", "k", "df1", "chi2")
       .as[(Timestamp, Long, Long, Long, Option[Double])]
       .collect().sortBy(_._1.getTime)
@@ -757,7 +758,8 @@ class StreamsSpec extends SparkSpec {
     val gotN = Streams.srmStreamParity(spark, withNulls.toDS(), design,
       windowMs = 60000L, batches = 1).as[(Long, Long, Long)].head()
     assert(gotN === ((1L, 1L, 1L)))
-    val streamedN = spark.table("graft_srm_stream_out")
+    val streamedN = Streams.srmStream(withNulls.toDS(), design,
+        "60000 milliseconds")
       .select("n", "chi2").as[(Long, Option[Double])].collect().head
     assert(streamedN === ((100L, Some(16.0)))) // NULLs excluded from n
     // share validation is the srmCheck contract
@@ -774,6 +776,8 @@ class StreamsSpec extends SparkSpec {
   test("msprtStream: one readout per look; parity drive bit-matches " +
       "batch sequentialMSPRT; p never increases; guards") {
     import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{col, expr, row_number}
     val rnd = new scala.util.Random(41)
     val dayMs = 86400000L
     // 4 daily looks, two arms ("1" treatment via user parity), a real
@@ -790,10 +794,13 @@ class StreamsSpec extends SparkSpec {
       tau2 = 0.5, alpha = 0.05, unitScale = 10L)
       .as[(Long, Long, Long)].head()
     assert(got === ((4L, 4L, 4L)))
-    // the drive leaves the sink in place: assert always-valid
-    // semantics on the streamed rows directly
-    val streamed = spark.table("graft_msprt_stream_out")
-      .select("look", "n_t", "n_c", "p_always")
+    // (4, 4, 4) means every streamed readout equals a batch readout on
+    // all seven columns: assert always-valid semantics on the batch form
+    val streamed = graft.operators.Profiling.sequentialMSPRT(
+        ev.toDF().withColumn("day", expr(s"unix_millis(ts) div $dayMs")),
+        "day", "event_type", "1", "value", 0.5, 0.05, 10L)
+      .withColumn("look", row_number().over(Window.orderBy("look")))
+      .select(col("look").cast("long"), col("n_t"), col("n_c"), col("p_always"))
       .as[(Long, Long, Long, Option[Double])]
       .collect().sortBy(_._1)
     assert(streamed.map(_._1).toSeq === Seq(1L, 2L, 3L, 4L))
@@ -804,5 +811,51 @@ class StreamsSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Streams.msprtStream(ev.toDS(), "1", tau2 = 0.0)
     }
+  }
+
+  private def replayLeftovers(): (Seq[String], Int) =
+    (spark.catalog.listTables().collect().map(_.name)
+      .filter(n => n.startsWith("graft_") && n.contains("_stream_out")).toSeq,
+      spark.streams.active.length)
+
+  test("a parity drive whose query fails to build restores the shuffle " +
+      "partitions and leaves no view or query behind") {
+    val key = "spark.sql.shuffle.partitions"
+    spark.conf.set(key, "7")
+    try {
+      intercept[IllegalArgumentException] {
+        Streams.heavyHittersStreamParity(spark, Seq(1L, 2L, 2L).toDF("k"),
+          "k", threshold = 0L)
+      }
+      assert(spark.conf.get(key) === "7")
+    } finally spark.conf.set(key, "4")
+    assert(replayLeftovers() === ((Nil, 0)))
+  }
+
+  test("parity drives leave no memory-sink view and no active query") {
+    val ev = (1 to 12).map(i => Event(i.toLong, ts(i * 60000L),
+      (i % 3).toLong, if (i % 2 == 0) "a" else "b", i.toDouble))
+    val counts = Seq(
+      Streams.sessionizeStreamParity(spark, ev.toDS(), gapMs = 120000L),
+      Streams.transitionsStreamParity(spark, ev.toDS()),
+      Streams.ewmaStreamParity(spark, ev.toDS(), lookback = 2),
+      Streams.changepointsStreamParity(spark, ev.toDS(), 2, 1L),
+      Streams.driftStreamParity(spark, ev.toDS(), Seq(("a", 1L), ("b", 1L))),
+      Streams.srmStreamParity(spark, ev.toDS(), Map("a" -> 0.5, "b" -> 0.5)),
+      Streams.msprtStreamParity(spark, ev.toDS(), "a", tau2 = 1.0),
+      Streams.intervalJoinStreamParity(spark, ev.toDS(), ev.toDS(), 0L,
+        60000L)).map(_.as[(Long, Long, Long)].head())
+    counts.foreach { case (s, b, m) => assert(s === b && b === m) }
+    Streams.cusumStreamParity(spark, ev.map(_.copy(event_type = "a")).toDS(),
+      4.0, 1.0, 9.0).collect()
+    Streams.heavyHittersStreamParity(spark, Seq(1L, 1L, 2L).toDF("k"), "k",
+      threshold = 2L).collect()
+    Streams.nearDupStreamParity(spark,
+      Seq((1L, "the quick brown fox jumps")).toDF("id", "text"), "id", "text")
+      .collect()
+    Streams.perplexityGateStreamParity(spark,
+      Seq((1L, "the cat sat")).toDF("id", "text"), "id", "text", 8.0)
+      .collect()
+    assert(replayLeftovers() === ((Nil, 0)))
   }
 }

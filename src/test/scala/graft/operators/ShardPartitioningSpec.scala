@@ -21,8 +21,7 @@ class ShardPartitioningSpec extends SparkSpec {
     assert(rows.map(_._3).sum === 500L)
   }
 
-  test("placementHistogram: every envelope lands on its own shard's " +
-      "partition (5 shards)") {
+  test("envelopes land on their own shard's partition (5 shards)") {
     val src = spark.range(200).toDF("event_id")
       .withColumn("payload", concat(lit("v"), col("event_id")))
     val docs = Ingest.fromColumns(src, "idx", "event_id", 5)
